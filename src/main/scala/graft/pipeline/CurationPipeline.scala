@@ -46,7 +46,17 @@ import org.apache.spark.sql.functions._
   * join on doc_id (the one shuffle key end to end); the pack plan's
   * global offsets are the two-pass bucket primitive, never a
   * single-partition window; the lake write pays the doc_id shuffle
-  * once at write time.
+  * once at write time. Every stage hands its survivors to the next as
+  * an eager local checkpoint, a plan leaf, so each stage plans only its
+  * own operators: stacked caches would embed every upstream plan in
+  * each downstream one, and AQE re-renders that whole tree on every
+  * stage completion. The report row is collected once and returned as
+  * a driver-local frame, so reading `stats` never runs a job.
+  *
+  * Trade: checkpoint blocks live only on the executors that wrote
+  * them, so a lost executor fails the run instead of recomputing the
+  * lost partitions — the same trade [[graft.ops.Components]] accepts
+  * for its per-round labels.
   */
 object CurationPipeline {
 
@@ -63,7 +73,7 @@ object CurationPipeline {
       mixBudget: Option[Double] = None): Result = {
     // 1. the q57 keep-list: survivors of the language, quality,
     //    exact-dedup and near-dup gates, with per-doc token counts
-    val kept = ops.Corpus.q57Kept(spark, dir).cache()
+    val kept = ops.Corpus.q57Kept(spark, dir).localCheckpoint(true)
 
     // 1b. optional CCNet-style perplexity gate (q68): drop kept docs
     //     whose mean token log-prob under the reference-slice unigram
@@ -76,7 +86,8 @@ object CurationPipeline {
             graft.Tables.documents(spark, dir), graft.ops.Corpus.refSlice)
           .select(col("doc_id"), col("avg_logp"))
         kept.join(scores, Seq("doc_id"))
-          .filter(col("avg_logp") >= f).drop("avg_logp").cache()
+          .filter(col("avg_logp") >= f).drop("avg_logp")
+          .localCheckpoint(true)
       case None => kept
     }
 
@@ -95,7 +106,7 @@ object CurationPipeline {
           .select(col("doc_id"), col("log_w"))
         gated.join(w, Seq("doc_id"), "left")
           .filter(col("log_w").isNull || col("log_w") > f)
-          .drop("log_w").cache()
+          .drop("log_w").localCheckpoint(true)
       case None => gated
     }
 
@@ -111,7 +122,8 @@ object CurationPipeline {
         val spans = ops.Corpus.q78DupSpans(spark, dir)
           .select(col("doc_id"), col("dup_ratio"))
         dsGated.join(spans, Seq("doc_id"))
-          .filter(col("dup_ratio") <= cap).drop("dup_ratio").cache()
+          .filter(col("dup_ratio") <= cap).drop("dup_ratio")
+          .localCheckpoint(true)
       case None => dsGated
     }
 
@@ -122,7 +134,7 @@ object CurationPipeline {
       .select(col("doc_id"), col("contaminated"))
     val decontaminated = dupGated.join(decon, Seq("doc_id"))
       .filter(!col("contaminated")).drop("contaminated")
-      .cache() // feeds the optional tail gates AND the stats row
+      .localCheckpoint(true) // feeds the tail gates AND the stats row
 
     // 2b. optional retrieval gate (q74): BM25-score the decontaminated
     //     survivors against the caller's seed query and keep the global
@@ -138,7 +150,7 @@ object CurationPipeline {
               .join(decontaminated.select(col("doc_id")), Seq("doc_id")),
             seed, retrievalTopK)
           .select(col("doc_id"))
-        decontaminated.join(hits, Seq("doc_id")).cache()
+        decontaminated.join(hits, Seq("doc_id")).localCheckpoint(true)
       case None => decontaminated
     }
 
@@ -153,14 +165,14 @@ object CurationPipeline {
         val keep = ops.Sampling.mixKeep(
             retrGated.select(col("doc_id"), col("source"), col("n_tok")), b)
           .filter(col("kept")).select(col("doc_id"))
-        retrGated.join(keep, Seq("doc_id")).cache()
+        retrGated.join(keep, Seq("doc_id")).localCheckpoint(true)
       case None => retrGated
     }
 
     // 3. chunk the survivors (not the raw corpus) into the training
     //    stream: the offsets/chunk ids a data loader consumes
     val plan = ops.Corpus.packPlan(
-      clean.select(col("doc_id"), col("n_tok"))).cache()
+      clean.select(col("doc_id"), col("n_tok"))).localCheckpoint(true)
 
     // 4. the shipped artifacts, bucketed on doc_id — the per-consumer
     //    re-shuffle is paid once here (LakeSpec pins exchange-free
@@ -206,18 +218,12 @@ object CurationPipeline {
         when(col("n_final") > 0,
           round(col("n_split_docs") * lit(1.0) / col("n_final"), 6))
           .otherwise(lit(0.0)))
-    // Materialize the one-row report while every stage cache is alive,
-    // then drop the intermediate caches — a long-lived session running
-    // repeated curations would otherwise accrete up to five overlapping
-    // corpus-sized cached frames per run. Gates that are off alias
-    // their input frame, so only frames that are not (reference-)equal
-    // to a Result member may be unpersisted.
-    val statsOut = stats.cache()
-    statsOut.head()
-    val exposed = Seq(kept, clean, plan)
-    Seq[DataFrame](gated, dsGated, dupGated, decontaminated, retrGated)
-      .filterNot(df => exposed.exists(_ eq df))
-      .foreach(_.unpersist())
+    // Collect the report row once and hand it back as a driver-local
+    // frame: reading it never schedules a job or re-plans a stage.
+    // Intermediate checkpoints need no unpersist — the ContextCleaner
+    // frees their blocks once the frames are unreferenced.
+    val statsOut = spark.createDataFrame(
+      java.util.List.of(stats.head()), stats.schema)
     Result(kept, clean, plan, statsOut)
   }
 }

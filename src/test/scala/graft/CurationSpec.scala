@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode,
+  LocalTableScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation workflow: the composed chain must agree with
   * the oracled operators it reuses, stage by stage. */
-class CurationSpec extends SparkSpec {
+class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def scrub(tables: String*): Unit = tables.foreach { t =>
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -57,6 +60,22 @@ class CurationSpec extends SparkSpec {
     scrub("curation_t_keeplist", "curation_t_chunks")
     val r = pipeline.CurationPipeline.run(spark, sf,
       buckets = 4, lakePrefix = "curation_t")
+
+    // every returned frame is a checkpoint leaf: its plan reads neither
+    // the source files nor a cache, so a consumer plans only its own
+    // operators — and the report is a driver-local row, so reading it
+    // never schedules a job
+    Seq("keeplist" -> r.keeplist, "clean" -> r.clean, "plan" -> r.plan)
+      .foreach { case (name, df) =>
+        val p = df.queryExecution.executedPlan
+        val upstream = collect(p) {
+          case s: FileSourceScanExec => s
+          case s: InMemoryTableScanExec => s
+        }
+        assert(upstream.isEmpty, s"$name is not a plan leaf:\n$p")
+      }
+    assert(r.stats.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+      r.stats.queryExecution.executedPlan.toString)
 
     val kept = r.keeplist.select("doc_id").collect().map(_.getLong(0)).toSet
     val clean = r.clean.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -295,5 +314,54 @@ class CurationSpec extends SparkSpec {
     assert(s.getAs[Long]("n_retr_dropped") == baseClean.count() - retrIds.size)
     assert(s.getAs[Long]("n_mix_dropped") == retrIds.size - clean.size)
     assert(s.getAs[Long]("n_final") == clean.size)
+  }
+
+  test("curation pipeline with all five gates: drops account for every doc, a repeat call agrees") {
+    scrub("curation_all_keeplist", "curation_all_chunks")
+    def scores(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col("doc_id"), col(c)).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val lm = scores(ops.Corpus.q68LmQuality(spark, sf), "avg_logp")
+    val ds = scores(ops.Corpus.q71DsirWeight(spark, sf), "log_w")
+    val dup = scores(ops.Corpus.q78DupSpans(spark, sf), "dup_ratio")
+    val base = pipeline.CurationPipeline.run(spark, sf,
+      buckets = 4, lakePrefix = "curation_all")
+    val baseKept = base.keeplist.select("doc_id").collect().map(_.getLong(0))
+    val baseClean = base.clean.count()
+    // quartile thresholds over the ungated keep-list: each score gate
+    // bites without emptying the corpus (target-slice docs, doc_id ≡ 0
+    // mod 7, carry no DSIR score and always pass)
+    def quantile(xs: Seq[Double], q: Double) = xs.sorted.apply((xs.size * q).toInt)
+    val lmFloor = quantile(baseKept.toSeq.map(lm), 0.25)
+    val dsirFloor = quantile(baseKept.filter(_ % 7 != 0).toSeq.map(ds), 0.25)
+    val dupCap = quantile(baseKept.toSeq.map(dup), 0.75)
+    def call() = {
+      scrub("curation_all_keeplist", "curation_all_chunks")
+      pipeline.CurationPipeline.run(spark, sf,
+        buckets = 4, lakePrefix = "curation_all",
+        lmFloor = Some(lmFloor), dsirFloor = Some(dsirFloor),
+        dupRatioCap = Some(dupCap),
+        retrievalSeed = Some(ops.Corpus.bm25Query),
+        retrievalTopK = math.max(1, baseClean.toInt / 4),
+        mixBudget = Some(2.0))
+    }
+
+    val r = call()
+    val s = r.stats.head()
+    val drops = Seq("n_lm_dropped", "n_dsir_dropped", "n_dup_dropped",
+      "n_decon_dropped", "n_retr_dropped", "n_mix_dropped")
+      .map(c => c -> s.getAs[Long](c))
+    // every gate bites: a gate silently off would still balance the sum
+    assert(drops.forall(_._2 > 0), drops)
+    val nFinal = s.getAs[Long]("n_final")
+    assert(nFinal > 0)
+    assert(s.getAs[Long]("n_kept") - drops.map(_._2).sum == nFinal, drops)
+    assert(r.clean.count() == nFinal && r.plan.count() == nFinal)
+    assert(spark.table("curation_all_keeplist").count() == nFinal)
+    assert(spark.table("curation_all_chunks").count() == nFinal)
+
+    // back to back in the same session: the same report, row for row
+    assert(call().stats.head() == s)
+    assert(spark.table("curation_all_keeplist").count() == nFinal)
   }
 }
