@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed access to the driver-generated testdata tables.
   *
@@ -15,8 +16,25 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Reads with the table's memoized schema, so only the first read of
+    * a path pays parquet's schema-inference job; later reads still list
+    * the files afresh, so part files appended to a table are seen. Same
+    * caveat as [[cachedRowCount]]: a table rewritten under the same path
+    * with a NEW schema needs a new session (or this map cleared). */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemas.get(path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        // the inferring reader IS the result: re-reading it with the
+        // schema just learned would list the files a second time
+        val df = spark.read.parquet(path)
+        schemas.putIfAbsent(path, df.schema)
+        df
+    }
+  }
+  private val schemas =
+    new scala.collection.concurrent.TrieMap[String, StructType]
 
   /** Memoized table row count for cache-gate decisions (q63/q85): the
     * count itself is statistics-only (parquet footers, no data read) but

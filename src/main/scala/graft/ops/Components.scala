@@ -123,7 +123,9 @@ object Components {
       labels = next.select(col("node"), col("comp"))
       i += 1
     }
-    sym.unpersist()
+    // also frees the broadcasts behind the edge cache (the caller's
+    // edge query), which the ContextCleaner would drop only after a GC
+    graft.Release.uncache(sym)
     if (changed > 0)
       System.err.println(
         s"[graft] connectedComponents: NOT converged after $maxIter rounds " +

@@ -226,10 +226,12 @@ object Features {
     //  - gap:   lag over the user ordering, counted only when the
     //    previous event shares the calendar date — exactly q13's
     //    (user_id, date) partitioning, without a second key;
-    //  - later purchase: running max of purchase ts over the FOLLOWING
-    //    frame; `mp_after > ts` ⟺ some purchase is strictly later —
-    //    exactly q15's unordered global-max test (equal ts filtered by
-    //    the strict >; later ts always lands in the following frame).
+    //  - later purchase: max purchase ts over the WHOLE user partition;
+    //    `mp_after > ts` ⟺ some purchase is strictly later — exactly
+    //    q15's unordered global-max test (earlier and equal ts fail the
+    //    strict >). The whole-partition frame is evaluated once per
+    //    user; a (1, unboundedFollowing) row frame would recompute the
+    //    max for every row, O(n²) per user.
     // The groupBy(user_id) then reuses the window's hash partitioning.
     // Only repeat-rate keeps its own pass — it aggregates a DISTINCT
     // (user, week, type) projection, a different grain. 4 scans → 2;
@@ -242,7 +244,8 @@ object Features {
           col("sec") - lag(col("sec"), 1).over(byUser)))
       .withColumn("mp_after",
         max(when(col("event_type") === "purchase", col("ts")))
-          .over(byUser.rowsBetween(1, Window.unboundedFollowing)))
+          .over(byUser.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)))
     val hourCols = (0 until 24).map(h =>
       Exact.r(sum(when(hour(col("ts")) === h, 1L).otherwise(0L)) * lit(1.0) /
         count(lit(1)), 6).as(f"h$h%02d"))

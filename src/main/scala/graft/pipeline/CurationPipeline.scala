@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{ops, sources, Tables}
+import graft.{ops, Release, sources, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,7 +50,10 @@ import org.apache.spark.sql.functions._
   * an eager local checkpoint, a plan leaf, so each stage plans only its
   * own operators: stacked caches would embed every upstream plan in
   * each downstream one, and AQE re-renders that whole tree on every
-  * stage completion. The report row is collected once and returned as
+  * stage completion. [[graft.Release.checkpoint]] also frees the
+  * broadcast relations each gate's query built (16 MB per gate at 500
+  * docs), so the heap a call leaves behind does not depend on GC
+  * timing. The report row is collected once and returned as
   * a driver-local frame, so reading `stats` never runs a job.
   *
   * Trade: checkpoint blocks live only on the executors that wrote
@@ -73,7 +76,7 @@ object CurationPipeline {
       mixBudget: Option[Double] = None): Result = {
     // 1. the q57 keep-list: survivors of the language, quality,
     //    exact-dedup and near-dup gates, with per-doc token counts
-    val kept = ops.Corpus.q57Kept(spark, dir).localCheckpoint(true)
+    val kept = Release.checkpoint(ops.Corpus.q57Kept(spark, dir))
 
     // 1b. optional CCNet-style perplexity gate (q68): drop kept docs
     //     whose mean token log-prob under the reference-slice unigram
@@ -85,9 +88,8 @@ object CurationPipeline {
         val scores = ops.Corpus.lmQuality(
             graft.Tables.documents(spark, dir), graft.ops.Corpus.refSlice)
           .select(col("doc_id"), col("avg_logp"))
-        kept.join(scores, Seq("doc_id"))
-          .filter(col("avg_logp") >= f).drop("avg_logp")
-          .localCheckpoint(true)
+        Release.checkpoint(kept.join(scores, Seq("doc_id"))
+          .filter(col("avg_logp") >= f).drop("avg_logp"))
       case None => kept
     }
 
@@ -104,9 +106,9 @@ object CurationPipeline {
         val w = ops.Corpus.dsirWeight(
             Tables.documents(spark, dir), ops.Corpus.refSlice)
           .select(col("doc_id"), col("log_w"))
-        gated.join(w, Seq("doc_id"), "left")
+        Release.checkpoint(gated.join(w, Seq("doc_id"), "left")
           .filter(col("log_w").isNull || col("log_w") > f)
-          .drop("log_w").localCheckpoint(true)
+          .drop("log_w"))
       case None => gated
     }
 
@@ -121,9 +123,8 @@ object CurationPipeline {
       case Some(cap) =>
         val spans = ops.Corpus.q78DupSpans(spark, dir)
           .select(col("doc_id"), col("dup_ratio"))
-        dsGated.join(spans, Seq("doc_id"))
-          .filter(col("dup_ratio") <= cap).drop("dup_ratio")
-          .localCheckpoint(true)
+        Release.checkpoint(dsGated.join(spans, Seq("doc_id"))
+          .filter(col("dup_ratio") <= cap).drop("dup_ratio"))
       case None => dsGated
     }
 
@@ -132,9 +133,9 @@ object CurationPipeline {
     //    benchmark slice from the corpus and keys the flag lookup
     val decon = ops.Corpus.q60Decontaminate(spark, dir)
       .select(col("doc_id"), col("contaminated"))
-    val decontaminated = dupGated.join(decon, Seq("doc_id"))
-      .filter(!col("contaminated")).drop("contaminated")
-      .localCheckpoint(true) // feeds the tail gates AND the stats row
+    // the survivors feed the tail gates AND the stats row
+    val decontaminated = Release.checkpoint(dupGated.join(decon, Seq("doc_id"))
+      .filter(!col("contaminated")).drop("contaminated"))
 
     // 2b. optional retrieval gate (q74): BM25-score the decontaminated
     //     survivors against the caller's seed query and keep the global
@@ -150,7 +151,7 @@ object CurationPipeline {
               .join(decontaminated.select(col("doc_id")), Seq("doc_id")),
             seed, retrievalTopK)
           .select(col("doc_id"))
-        decontaminated.join(hits, Seq("doc_id")).localCheckpoint(true)
+        Release.checkpoint(decontaminated.join(hits, Seq("doc_id")))
       case None => decontaminated
     }
 
@@ -165,14 +166,14 @@ object CurationPipeline {
         val keep = ops.Sampling.mixKeep(
             retrGated.select(col("doc_id"), col("source"), col("n_tok")), b)
           .filter(col("kept")).select(col("doc_id"))
-        retrGated.join(keep, Seq("doc_id")).localCheckpoint(true)
+        Release.checkpoint(retrGated.join(keep, Seq("doc_id")))
       case None => retrGated
     }
 
     // 3. chunk the survivors (not the raw corpus) into the training
     //    stream: the offsets/chunk ids a data loader consumes
-    val plan = ops.Corpus.packPlan(
-      clean.select(col("doc_id"), col("n_tok"))).localCheckpoint(true)
+    val plan = Release.checkpoint(ops.Corpus.packPlan(
+      clean.select(col("doc_id"), col("n_tok"))))
 
     // 4. the shipped artifacts, bucketed on doc_id — the per-consumer
     //    re-shuffle is paid once here (LakeSpec pins exchange-free

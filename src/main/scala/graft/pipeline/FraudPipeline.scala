@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{ops, Tables}
+import graft.{ops, Release, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,18 +22,31 @@ import org.apache.spark.sql.functions._
   * Everything upstream of the model is a declarative Catalyst plan —
   * a user of the reference runs `FraudPipeline.run(spark, dir)` and
   * gets the same artifacts the Python pipeline produces, distributed.
+  * The model stage reads that plan through an eager local checkpoint,
+  * a plan leaf: the LBFGS iterations, the scoring pass and the metric
+  * queries plan and ship only their own operators, never the feature
+  * DAG. The scored fold is checkpointed the same way, so the metric
+  * suite reads it without re-running the model. Both hand-offs go
+  * through [[graft.Release.checkpoint]], which also frees the broadcast
+  * relations the checkpointed query built, so the heap a call leaves
+  * behind does not depend on when a GC happens to run.
+  *
+  * Trade: checkpoint blocks live only on the executors that wrote
+  * them, so a lost executor fails the run instead of recomputing the
+  * lost partitions — the same trade [[graft.ops.Components]] and
+  * [[CurationPipeline]] accept.
   */
 object FraudPipeline {
 
-  /** `nUsers` is counted from the CACHED assembly during the run —
-    * callers report it instead of re-counting `features`, whose plan
-    * would re-execute the whole multi-tier feature DAG once the
-    * assembly cache is dropped. The assembly is the frame AFTER the
-    * inner label join with `customer`, so `nUsers` is the LABELED
-    * (trainable) user count: a feature user_id absent from the account
-    * table is not in it. On the driver testdata the two counts are
-    * equal (every events user is a customer); PipelineRun's `n_users`
-    * JSON field carries this labeled-count semantics. */
+  /** `nUsers` is counted from the checkpointed assembly during the run
+    * — callers report it instead of re-counting `features`, whose plan
+    * would re-execute the whole multi-tier feature DAG. The assembly is
+    * the frame AFTER the inner label join with `customer`, so `nUsers`
+    * is the LABELED (trainable) user count: a feature user_id absent
+    * from the account table is not in it. On the generated testdata the
+    * two counts are equal (every events user is a customer);
+    * PipelineRun's `n_users` JSON field carries this labeled-count
+    * semantics. */
   case class Result(features: DataFrame, scored: DataFrame,
     metrics: DataFrame, nUsers: Long)
 
@@ -219,12 +232,12 @@ object FraudPipeline {
       ops.Exact.lcgTrain80("user_id"))
 
     // 4. assemble + train on the train fold only. `assembled` feeds the
-    //    LBFGS iterations AND the held-out scoring pass below, so it
-    //    stays cached until `scored` has materialized from it.
+    //    LBFGS iterations AND the held-out scoring pass below, so the
+    //    feature DAG runs once, into a checkpoint those jobs read as a leaf
     val featCols = withFused.columns.filterNot(_ == "user_id")
     val assembler = new VectorAssembler()
       .setInputCols(featCols).setOutputCol("fvec").setHandleInvalid("keep")
-    val assembled = assembler.transform(withSplit).cache()
+    val assembled = Release.checkpoint(assembler.transform(withSplit))
     val model = new LogisticRegression()
       .setFeaturesCol("fvec").setLabelCol("label")
       .setMaxIter(20).setRegParam(0.01)
@@ -232,17 +245,15 @@ object FraudPipeline {
 
     // 5. score the held-out fold: hard prediction for the confusion
     //    suite, P(fraud) for the ranking metrics — one transform pass
-    //    read from the cache, materialized before the cache is dropped
-    val scored = model.transform(assembled.filter(!col("is_train")))
+    //    over the assembly checkpoint, itself checkpointed so the metric
+    //    queries below neither re-score nor carry the model's plan
+    val scored = Release.checkpoint(model.transform(assembled.filter(!col("is_train")))
       .select(col("user_id"), col("label").cast("int").as("y"),
         col("prediction").cast("int").as("pred"),
-        vector_to_array(col("probability")).getItem(1).as("score"))
-      .cache()
-    scored.count() // force: the feature assembly runs exactly once
-    // row count read off the CACHED assembly, before the cache drops —
-    // re-counting `features` later would re-execute every tier's DAG
+        vector_to_array(col("probability")).getItem(1).as("score")))
+    // row count read off the checkpoint — re-counting `features` would
+    // re-execute every tier's DAG
     val nUsers = assembled.count()
-    assembled.unpersist()
 
     // 6. the reference's full test_model suite (new_utlis_1.py:35-50:
     //    accuracy + macro P/R/F1 + roc_auc_score + average_precision),

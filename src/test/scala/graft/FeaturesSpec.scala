@@ -368,6 +368,31 @@ class FeaturesSpec extends SparkSpec {
     assert(rows.length == users)
   }
 
+  test("q19 recall counts only strictly later purchases") {
+    // per user: a view and a purchase at the SAME ts, the purchase after
+    // it in event_id order (not recalled: the test is strict >); a view
+    // followed by a later purchase (recalled); a purchase BEFORE a view
+    // (not recalled: an earlier purchase must not leak in through the
+    // whole-partition max)
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-q19-recall").toString
+    val ns = 1704067200L * 1000000000L // 2024-01-01 in parquet nanos
+    val sec = 1000000000L
+    Seq(
+      (1L, ns, 10L, "view", 1.0, "{}"),
+      (2L, ns, 10L, "purchase", 1.0, "{}"),
+      (3L, ns, 20L, "view", 1.0, "{}"),
+      (4L, ns + sec, 20L, "purchase", 1.0, "{}"),
+      (5L, ns, 30L, "purchase", 1.0, "{}"),
+      (6L, ns + sec, 30L, "view", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val recall = Features.q19FeatureMatrix(spark, dir)
+      .select("user_id", "recall_rate").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(recall == Map(10L -> 0.0, 20L -> 1.0, 30L -> 0.0), recall)
+  }
+
   test("q16 yields NULL areas (not \"\") for an all-NULL area group") {
     // No current SF carries a NULL props.k, so the NULL branch is dead
     // code against the oracle gate — pin it here on synthetic data.

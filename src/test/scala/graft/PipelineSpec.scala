@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end pipeline: 32-slot features → split → train → the full
   * held-out test_model metric suite (reference new_utlis_1.py:35-50). */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("FraudPipeline trains on the full q59 matrix and emits the test_model suite") {
     // sf0.001's held-out fold is 3 users, all one class — ROC AUC is
@@ -187,11 +191,31 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("the model stage hands off through checkpoint leaves, not caches") {
+    // `scored` is a plan leaf: reading it neither re-runs the feature DAG
+    // (no file scan) nor holds a cache; the metric suite reads only it
+    val r = pipeline.FraudPipeline.run(spark, sf)
+    val sp = r.scored.queryExecution.executedPlan
+    val upstream = collect(sp) {
+      case s: FileSourceScanExec => s
+      case s: InMemoryTableScanExec => s
+    }
+    assert(upstream.isEmpty, s"scored is not a plan leaf:\n$sp")
+    assert(r.scored.storageLevel == StorageLevel.NONE, r.scored.storageLevel)
+    val mp = r.metrics.queryExecution.executedPlan
+    assert(collect(mp) { case s: FileSourceScanExec => s }.isEmpty,
+      s"metrics re-read the source tables:\n$mp")
+  }
+
   test("pipeline split is reproducible") {
-    val a = pipeline.FraudPipeline.run(spark, sf).scored
-      .select("user_id").collect().map(_.getLong(0)).sorted.toSeq
-    val b = pipeline.FraudPipeline.run(spark, sf).scored
-      .select("user_id").collect().map(_.getLong(0)).sorted.toSeq
+    val ra = pipeline.FraudPipeline.run(spark, sf)
+    val rb = pipeline.FraudPipeline.run(spark, sf)
+    val a = ra.scored.select("user_id").collect().map(_.getLong(0)).sorted.toSeq
+    val b = rb.scored.select("user_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(a == b)
+    // back-to-back calls agree on the whole metric row, not just the fold
+    assert(ra.metrics.head() == rb.metrics.head(),
+      s"${ra.metrics.head()} vs ${rb.metrics.head()}")
+    assert(ra.nUsers == rb.nUsers)
   }
 }

@@ -368,6 +368,23 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  test("q19: later-purchase max is a whole-partition frame, not a per-row following frame") {
+    // a ROWS frame starting at 1 following runs as Spark's
+    // UnboundedFollowingWindowFunctionFrame, which recomputes the max
+    // for every row — O(n²) per user
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RowFrame,
+      SpecifiedWindowFrame, WindowExpression}
+    val frames = ops.Features.q19FeatureMatrix(spark, sf).queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case w: WindowExpression => w.windowSpec.frameSpecification
+      }))
+    assert(frames.nonEmpty)
+    val perRow = frames.collect {
+      case f: SpecifiedWindowFrame if f.frameType == RowFrame && f.lower == Literal(1) => f
+    }
+    assert(perRow.isEmpty, perRow.map(_.sql))
+  }
+
   test("q31: df cap is a hash agg + anti-join — no window over the posting list") {
     val p = plan(ops.Text.q31DedupNgramJaccard(spark, sf))
     assert(!p.contains("Window"), p.take(3000))
