@@ -60,9 +60,11 @@ object Tables {
     * TimestampType — read nanos as long and truncate) and plain
     * TIMESTAMP(MICROS) without UTC adjustment (read as TIMESTAMP_NTZ).
     * Normalize both to session-zone TimestampType (UTC, GraftSession) so
-    * every downstream operator sees one ts type regardless of generation. */
+    * every downstream operator sees one ts type regardless of generation.
+    * The nanos-as-long read needs `spark.sql.legacy.parquet.nanosAsLong`,
+    * which [[GraftSession]] sets on every session it builds; a read
+    * leaves the session's conf as it found it. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val raw = apply(s, d, "events")

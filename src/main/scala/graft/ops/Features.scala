@@ -560,9 +560,9 @@ object Features {
     // per-(user, day) partials — see [[q85DayAgg]]. The events table is
     // scanned and shuffled ONCE at the raw grain; the ×4 scale explode
     // runs over day partials (D rows, D ≪ E), not raw events. The
-    // sub-DAGs live in the q85* builders below, SHARED with ProfileQ85
-    // and the rollup property test so a profiler/spec mirror can never
-    // desynchronize from the production spelling.
+    // sub-DAGs live in the q85* builders below, SHARED with the rollup
+    // property test so the spec can never desynchronize from the
+    // production spelling.
     val act = q85Activity(ev)
     val rep = q85Repeat(q85Uw(ev))
     // per-slice call graph: distinct directed (user → peer) per slice
@@ -605,8 +605,8 @@ object Features {
   }
 
   // ---- q85 sub-DAG builders -----------------------------------------
-  // Shared by q85Core, ProfileQ85 (component timing) and the rollup
-  // property test (FeaturesSpec): ONE spelling of each sub-DAG.
+  // Shared by q85Core and the rollup property test (FeaturesSpec): ONE
+  // spelling of each sub-DAG.
 
   /** The narrow per-event projection every q85 sub-DAG reads: the JSON
     * peer extraction and the date arithmetic run once per event. */
@@ -891,6 +891,10 @@ object Features {
   def q87TemporalAttentionPool(spark: SparkSession, dir: String): DataFrame =
     q87PoolFrom(q85Core(spark, dir)).orderBy(col("user_id"), col("scale"))
 
+  /** NULL-safe slot read shared by the gate score and the pool. */
+  private def q87Slot(c: String): Column =
+    coalesce(col(c).cast("double"), lit(0.0))
+
   /** The sort-free pooling core over any frame with the q85 tensor
     * columns — FraudPipeline consumes THIS (its pivot re-aggregates, so
     * the presentation sort above would be a pure wasted exchange+sort;
@@ -904,29 +908,18 @@ object Features {
     * bucket from the softmax denominator and null every pooled slot for
     * the (user, scale). Coalesce every slot uniformly (a no-op on the
     * always-defined ones); the oracle mirrors the same COALESCE. */
-  /** NULL-safe slot read shared by the gate score and the pool. */
-  private def q87Slot(c: String): Column =
-    coalesce(col(c).cast("double"), lit(0.0))
-
-  /** q87's scoring stage — gate score, 6dp e^s, exact softmax
-    * denominator and per-bucket attention weight `a` over the tensor.
-    * Factored from [[q87PoolFrom]] so ProfileQ87 can time the window
-    * stage apart from the pooling aggregate without duplicating the
-    * production expressions. */
-  private[graft] def q87Scored(t: DataFrame): DataFrame = {
+  private[graft] def q87PoolFrom(t: DataFrame): DataFrame = {
+    // gate score, 6dp e^s, exact softmax denominator and per-bucket
+    // attention weight `a`
     val pooled =
       q87FeatureAttn.map { case (c, w) => lit(w) * q87Slot(c) }.reduce(_ + _)
     val arg = lit(q87GateW) * pooled + lit(q87GateB)
     val sQ = Exact.r(lit(1.0) - lit(2.0) / (exp(lit(2.0) * arg) + lit(1.0)), 6)
     val attW = Window.partitionBy(col("user_id"), col("scale"))
-    t.withColumn("e_att", Exact.r(exp(sQ), 6))
+    val withA = t.withColumn("e_att", Exact.r(exp(sQ), 6))
       .withColumn("den",
         sum(col("e_att").cast("decimal(18,6)")).over(attW).cast("double"))
       .withColumn("a", col("e_att") / col("den"))
-  }
-
-  private[graft] def q87PoolFrom(t: DataFrame): DataFrame = {
-    val withA = q87Scored(t)
     val aggs = Seq(
       count(lit(1)).as("n_buckets"),
       Exact.r(max(col("a")), 6).as("att_max")) ++

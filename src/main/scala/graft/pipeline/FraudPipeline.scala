@@ -50,178 +50,161 @@ object FraudPipeline {
   case class Result(features: DataFrame, scored: DataFrame,
     metrics: DataFrame, nUsers: Long)
 
-  /** `extendedFeatures = true` joins in the engine's beyond-parity
-    * signals the reference never had — PageRank importance (q73),
-    * k-core membership + residual degree (q75) and the EWMA burst
-    * score (q77) — zero-filled for users outside the graph/core, so
-    * the matrix stays one row per user. Off by default: the default
-    * run stays the reference-parity 32-slot matrix.
-    *
-    * `sliceFeatures = true` joins in the flattened q85 DYNAMIC tensor —
-    * the reference model's actual input shape (model.py:25 consumes
-    * four stacked time-scale tensors; TemporalAttention pools each
-    * scale's buckets into one per-scale vector, layers.py:10-68). The
-    * linear stand-in pools with uniform weights (bucket-mean per slot)
-    * and pivots the four scales into `s{1..4}_<slot>` columns — 4×32
-    * extra features per user, zero-filled where a user has no events
-    * at a scale. Off by default for the same reason as the tier above:
-    * the default run is the reference-parity static matrix.
-    *
-    * `sliceAttention = true` (implies the slice tier) swaps the
-    * bucket-mean pool for q87's temporal-attention pool — the
-    * MultiLstm/`weekmonthattn` analog (layers.py:27,70-71): a tanh
-    * gate scores each bucket and a per-(user, scale) softmax weights
-    * the pooling, so high-activity buckets dominate the per-scale
-    * summary instead of diluting into the mean. Same output shape
-    * (the q87 bookkeeping columns are dropped for slot parity), so
-    * the README A/B isolates the pooling change alone. */
-  /** `residualFeatures = true` joins in q88's ε-residual multi-relation
-    * layer outputs h_r1/h_r2/h_r3 — the reference model's actual layer
-    * algebra (new_model_1.py:97-112: `eps*raw1 + layer1_r(h)` →
-    * `torch.cat`) as three per-user columns, zero-filled for users
-    * outside the purchase graph. The reference's thesis is that the
-    * per-relation channel beats a plain GCN summary; the README A/B
-    * row tests exactly that against the other tiers. */
-  /** `lstmFeatures = true` joins in q90's final recurrent state — the
-    * MultiLstm stage's (h, c) per time scale as 8 user-grain columns,
-    * zero-filled for users without events. The reference feeds the
-    * LSTM outputs (not the raw tensor) to its classifier head; this
-    * tier tests whether the recurrent summary adds signal over the
-    * attention pool on this data. */
-  /** `fusedFeatures = true` joins in q94's fused BD_BGL outputs — the
-    * MultiLstm softmax readout and the two DualChannel log-softmax
-    * scores — as three per-user columns: the reference's COMPLETE
-    * forward pass (model.py:25-29) compressed to its class scores,
-    * riding as features next to the tiers that feed it. Zero-filled
-    * for users outside the purchase graph. */
-  def run(spark: SparkSession, dir: String,
-      extendedFeatures: Boolean = false,
-      sliceFeatures: Boolean = false,
-      sliceAttention: Boolean = false,
-      residualFeatures: Boolean = false,
-      lstmFeatures: Boolean = false,
-      lstm2Features: Boolean = false,
-      // serve the pre-training dyadic cell tables instead of the
-      // LstmFit-trained ones — the trained-vs-fixed README A/B switch
-      lstmFixedWeights: Boolean = false,
-      fusedFeatures: Boolean = false): Result = {
+  /** An optional feature source stacked onto the 32-slot parity matrix.
+    * [[run]] left-joins each tier's user_id-keyed frames in order and
+    * zero-fills the columns they add, so the matrix stays one row
+    * per user and a user a tier does not reach reads zero. All tiers are
+    * off by default: the default run is the reference-parity static
+    * matrix. */
+  sealed trait Tier
+
+  object Tier {
+
+    /** The engine's beyond-parity signals the reference never had —
+      * PageRank importance (q73), k-core membership + residual degree
+      * (q75) and the EWMA burst score (q77), zero-filled for users
+      * outside the graph/core. */
+    case object Extended extends Tier
+
+    /** The flattened q85 DYNAMIC tensor — the reference model's actual
+      * input shape (model.py:25 consumes four stacked time-scale
+      * tensors; TemporalAttention pools each scale's buckets into one
+      * per-scale vector, layers.py:10-68). The four pooled vectors
+      * pivot into `s{1..4}_<slot>` columns — 4×33
+      * extra features per user, zero-filled where a user has no events
+      * at a scale.
+      *
+      * `attention = false` pools with uniform weights (bucket-mean per
+      * slot), the linear stand-in. `attention = true` pools with q87's
+      * temporal attention — the MultiLstm/`weekmonthattn` analog
+      * (layers.py:27,70-71): a tanh gate scores each bucket and a
+      * per-(user, scale) softmax weights the pooling, so high-activity
+      * buckets dominate the per-scale summary instead of diluting into
+      * the mean. Same output shape (the q87 bookkeeping columns are
+      * dropped), so the README A/B isolates the pooling change alone. */
+    case class Slices(attention: Boolean = false) extends Tier
+
+    /** q88's ε-residual multi-relation layer outputs h_r1/h_r2/h_r3 —
+      * the reference model's layer algebra (new_model_1.py:97-112:
+      * `eps*raw1 + layer1_r(h)` → `torch.cat`) as three per-user
+      * columns, zero-filled for users outside the purchase graph. The
+      * reference's thesis is that the per-relation channel beats a plain
+      * GCN summary; the README A/B row tests exactly that. */
+    case object Residual extends Tier
+
+    /** q90's final recurrent state — the MultiLstm stage's (h, c) per
+      * time scale as `lstm_s{1..4}_<field>` columns, zero-filled for
+      * users without events. The reference feeds the LSTM outputs (not
+      * the raw tensor) to its classifier head; this tier tests whether
+      * the recurrent summary adds signal over the attention pool.
+      *
+      * `units = 1` folds the scalar cell (8 columns: h, c); `units = 2`
+      * folds q92's coupled 2-unit cell (16 columns: h1, c1, h2, c2) —
+      * the lstm-vs-lstm2 README A/B isolates what the second unit buys.
+      * `fixedCells = true` serves the pre-training dyadic cell tables
+      * instead of the LstmFit-trained ones, the trained-vs-fixed A/B
+      * baseline. */
+    case class Lstm(units: Int = 1, fixedCells: Boolean = false) extends Tier {
+      require(units == 1 || units == 2, s"Lstm tier units must be 1 or 2, got $units")
+    }
+
+    /** q94's fused BD_BGL outputs — the MultiLstm softmax readout and
+      * the two DualChannel log-softmax scores — as three per-user
+      * columns: the reference's COMPLETE forward pass (model.py:25-29)
+      * compressed to its class scores, riding as features next to the
+      * tiers that feed it. Zero-filled for users outside the purchase
+      * graph. */
+    case object Fused extends Tier
+  }
+
+  /** The frames `tier` joins, in join order. `tensor` is the q85 tensor
+    * shared by every tier that reads it, so the engine's heaviest
+    * sub-DAG builds once however many such tiers are on. The graph
+    * tiers key on `node`, whose space shares ids with user_id (the
+    * graph family's shared-id convention). */
+  private def framesOf(tier: Tier, spark: SparkSession, dir: String,
+      tensor: => DataFrame): Seq[DataFrame] = tier match {
+    case Tier.Extended => Seq(
+      ops.Graph.q73PageRank(spark, dir)
+        .select(col("node").as("user_id"), col("pr_scaled")),
+      ops.Graph.q75KCore(spark, dir)
+        .select(col("node").as("user_id"),
+          lit(1.0).as("in_kcore"), col("d").cast("double").as("kcore_deg")),
+      ops.Features.q77EwmaBurst(spark, dir)
+        .select(col("user_id"), coalesce(col("burst"), lit(0.0)).as("burst")))
+    case Tier.Slices(attention) =>
+      // both pools are sort-free cores: the pivot re-aggregates, so an
+      // operator's presentation orderBy would be a wasted exchange+sort
+      val pooled =
+        if (attention) ops.Features.q87PoolFrom(tensor).drop("n_buckets", "att_max")
+        else {
+          val slotCols = tensor.columns
+            .filterNot(Set("user_id", "scale", "bucket").contains)
+          tensor.groupBy(col("user_id"), col("scale"))
+            .agg(avg(col(slotCols.head)).as(slotCols.head),
+              slotCols.tail.map(c => avg(col(c)).as(c)): _*)
+        }
+      Seq(pivotScales(pooled, ""))
+    case Tier.Residual => Seq(
+      ops.Graph.q88Core(spark, dir)
+        .select(col("node").as("user_id"), col("h_r1").as("res_r1"),
+          col("h_r2").as("res_r2"), col("h_r3").as("res_r3")))
+    case Tier.Lstm(units, fixedCells) =>
+      val (st, fields) =
+        if (units == 2)
+          (ops.Features.q90FromH(tensor,
+            if (fixedCells) ops.Features.q90UnitsFixed else ops.Features.q90Units),
+            Seq("h1", "c1", "h2", "c2"))
+        else (ops.Features.q90From(tensor,
+          if (fixedCells) ops.Features.q90ScalarWFixed else ops.Features.q90ScalarW),
+          Seq("h", "c"))
+      Seq(pivotScales(st.select(col("user_id") +: col("scale") +:
+        fields.map(f => col(s"${f}_last").as(f)): _*), "lstm_"))
+    case Tier.Fused => Seq(
+      ops.Fused.q94Core(spark, dir).select(
+        col("node").as("user_id"), col("lstm_score").as("fused_lstm_score"),
+        col("dual_ls0").as("fused_dual_ls0"), col("dual_ls1").as("fused_dual_ls1")))
+  }
+
+  /** One user-grain row from per-(user_id, scale) rows: every column but
+    * the keys becomes `${prefix}s{scale}_<column>` for scales 1–4, in
+    * (scale, column) order. The names are rebuilt from that cross
+    * product, never by slicing Spark's "<value>_<alias>" pivot naming,
+    * which would silently mangle if the convention or the scale count
+    * ever changed. */
+  private def pivotScales(df: DataFrame, prefix: String): DataFrame = {
+    val cols = df.columns.filterNot(Set("user_id", "scale").contains)
+    val pivoted = df.groupBy(col("user_id"))
+      .pivot("scale", Seq(1, 2, 3, 4))
+      .agg(first(col(cols.head)).as(cols.head),
+        cols.tail.map(c => first(col(c)).as(c)): _*)
+    pivoted.select(col("user_id") +:
+      (for { s <- Seq(1, 2, 3, 4); c <- cols }
+        yield col(s"${s}_$c").as(s"${prefix}s${s}_$c")): _*)
+  }
+
+  /** Runs the workflow on the scale-factor directory `dir`, with the
+    * feature `tiers` stacked onto the parity matrix in the order given
+    * (none by default). */
+  def run(spark: SparkSession, dir: String, tiers: Seq[Tier] = Nil): Result = {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.feature.VectorAssembler
     import org.apache.spark.ml.functions.vector_to_array
 
     // 1. the full 32-slot feature matrix per user (the reference's
     //    slice_feature incl. signed degrees / neighbor degree /
-    //    clustering — data_process.py:159-168)
+    //    clustering — data_process.py:159-168), then each tier's frames
     val parity = ops.Features.q59FullFeatureMatrix(spark, dir)
-    val extended = if (!extendedFeatures) parity else {
-      val pr = ops.Graph.q73PageRank(spark, dir)
-        .select(col("node").as("user_id"), col("pr_scaled"))
-      val core = ops.Graph.q75KCore(spark, dir)
-        .select(col("node").as("user_id"),
-          lit(1.0).as("in_kcore"), col("d").cast("double").as("kcore_deg"))
-      val burst = ops.Features.q77EwmaBurst(spark, dir)
-        .select(col("user_id"), coalesce(col("burst"), lit(0.0)).as("burst"))
-      parity
-        .join(pr, Seq("user_id"), "left")
-        .join(core, Seq("user_id"), "left")
-        .join(burst, Seq("user_id"), "left")
-        .na.fill(0.0, Seq("pr_scaled", "in_kcore", "kcore_deg", "burst"))
-    }
-    // ONE q85 tensor sub-DAG shared by whichever tiers consume it (the
-    // slice pools and the q90 fold) — the engine's heaviest DAG must
-    // not build twice when --slices-attn and --lstm are both on
-    lazy val tensorCore = ops.Features.q85Core(spark, dir)
-    val features = if (!sliceFeatures && !sliceAttention) extended else {
-      // one per-(user, scale, slot) pool — bucket-mean (uniform
-      // attention) or q87's temporal attention — then ONE pivot
-      // shuffle turns the four scales into columns; everything stays
-      // user-grain after this join
-      val pooled =
-        if (sliceAttention)
-          // the sort-free core: the pivot below re-aggregates, so the
-          // operator's presentation orderBy would be a wasted
-          // exchange+sort (the same reason the mean tier uses q85Core)
-          ops.Features.q87PoolFrom(tensorCore)
-            .drop("n_buckets", "att_max") // slot parity with the mean tier
-        else {
-          val slices = tensorCore
-          val slotCols = slices.columns
-            .filterNot(Set("user_id", "scale", "bucket").contains)
-          slices.groupBy(col("user_id"), col("scale"))
-            .agg(avg(col(slotCols.head)).as(slotCols.head),
-              slotCols.tail.map(c => avg(col(c)).as(c)): _*)
-        }
-      val slotCols = pooled.columns.filterNot(Set("user_id", "scale").contains)
-      val pivoted = pooled.groupBy(col("user_id"))
-        .pivot("scale", Seq(1, 2, 3, 4))
-        .agg(first(col(slotCols.head)).as(slotCols.head),
-          slotCols.tail.map(c => first(col(c)).as(c)): _*)
-      // rebuild the `s{scale}_{slot}` names from the known
-      // (scale, slot) cross product — never by slicing Spark's
-      // "<value>_<alias>" pivot naming, which would silently mangle
-      // if the convention or the scale count ever changed
-      val renamed = pivoted.select(
-        col("user_id") +:
-          (for { s <- Seq(1, 2, 3, 4); c <- slotCols }
-            yield col(s"${s}_$c").as(s"s${s}_$c")): _*)
-      val sliceCols = renamed.columns.filterNot(_ == "user_id")
-      extended.join(renamed, Seq("user_id"), "left")
-        .na.fill(0.0, sliceCols)
-    }
-
-    val withResidual = if (!residualFeatures) features else {
-      // q88's node space shares ids with user_id (the graph family's
-      // shared-id convention); users outside the graph get the
-      // zero vector, the same fill semantics as every other tier
-      val res = ops.Graph.q88Core(spark, dir)
-        .select(col("node").as("user_id"), col("h_r1").as("res_r1"),
-          col("h_r2").as("res_r2"), col("h_r3").as("res_r3"))
-      features.join(res, Seq("user_id"), "left")
-        .na.fill(0.0, Seq("res_r1", "res_r2", "res_r3"))
-    }
-
-    val withLstm = if (!lstmFeatures && !lstm2Features) withResidual else {
-      // q90's per-scale final state → one pivot to user-grain columns
-      // (8 for the scalar cell, 16 for the 2-unit q92 cell — the
-      // lstm-vs-lstm2 README A/B isolates what the coupled second unit
-      // buys); the fold core is sort-free (same reason as the q87
-      // tier: presentation order would be a wasted exchange+sort)
-      val (st, fields) =
-        if (lstm2Features)
-          (ops.Features.q90FromH(tensorCore,
-            if (lstmFixedWeights) ops.Features.q90UnitsFixed
-            else ops.Features.q90Units),
-            Seq("h1", "c1", "h2", "c2"))
-        else (ops.Features.q90From(tensorCore,
-          if (lstmFixedWeights) ops.Features.q90ScalarWFixed
-          else ops.Features.q90ScalarW),
-          Seq("h", "c"))
-      val aggs = fields.map(f => first(col(s"${f}_last")).as(f))
-      val pivoted = st.groupBy(col("user_id"))
-        .pivot("scale", Seq(1, 2, 3, 4))
-        .agg(aggs.head, aggs.tail: _*)
-      // rebuild names from the known cross product, as the slice tier does
-      val renamed = pivoted.select(
-        col("user_id") +:
-          (for { s <- Seq(1, 2, 3, 4); f <- fields }
-            yield col(s"${s}_$f").as(s"lstm_s${s}_$f")): _*)
-      val lstmCols = renamed.columns.filterNot(_ == "user_id")
-      withResidual.join(renamed, Seq("user_id"), "left")
-        .na.fill(0.0, lstmCols)
-    }
-
-    val withFused = if (!fusedFeatures) withLstm else {
-      // q94's node space is the purchase graph's shared-id domain
-      // (same convention as the residual tier)
-      val f = ops.Fused.q94Core(spark, dir).select(
-        col("node").as("user_id"), col("lstm_score").as("fused_lstm_score"),
-        col("dual_ls0").as("fused_dual_ls0"), col("dual_ls1").as("fused_dual_ls1"))
-      withLstm.join(f, Seq("user_id"), "left")
-        .na.fill(0.0, Seq("fused_lstm_score", "fused_dual_ls0", "fused_dual_ls1"))
+    lazy val tensor = ops.Features.q85Core(spark, dir)
+    val features = tiers.foldLeft(parity) { (acc, tier) =>
+      // one zero fill per tier, after all of its joins
+      val frames = framesOf(tier, spark, dir, tensor)
+      frames.foldLeft(acc)(_.join(_, Seq("user_id"), "left"))
+        .na.fill(0.0, frames.flatMap(_.columns).filterNot(_ == "user_id"))
     }
 
     // 2. labels from the account table (user_id keys into customer)
-    val labeled = withFused.join(
+    val labeled = features.join(
       Tables.customer(spark, dir).select(
         col("c_custkey").as("user_id"),
         (col("c_acctbal") < 0).cast("double").as("label")),
@@ -234,7 +217,7 @@ object FraudPipeline {
     // 4. assemble + train on the train fold only. `assembled` feeds the
     //    LBFGS iterations AND the held-out scoring pass below, so the
     //    feature DAG runs once, into a checkpoint those jobs read as a leaf
-    val featCols = withFused.columns.filterNot(_ == "user_id")
+    val featCols = features.columns.filterNot(_ == "user_id")
     val assembler = new VectorAssembler()
       .setInputCols(featCols).setOutputCol("fvec").setHandleInvalid("keep")
     val assembled = Release.checkpoint(assembler.transform(withSplit))
@@ -266,6 +249,6 @@ object FraudPipeline {
         .avgPrecisionFrom(scored.select(col("user_id"), col("y"), col("score")),
           "user_id")
         .select(col("avg_precision")))
-    Result(withFused, scored, metrics, nUsers)
+    Result(features, scored, metrics, nUsers)
   }
 }

@@ -27,8 +27,9 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     CurationRun.flagNames.foreach { f =>
       assert(CurationRun.usage.contains(s"--$f="), s"--$f missing from usage")
     }
-    Seq("--extended", "--slices", "--slices-attn").foreach { f =>
-      assert(PipelineRun.usage.contains(f), s"$f missing from usage")
+    PipelineRun.tierFlags.foreach { case (f, _, _) =>
+      assert(PipelineRun.usage.linesIterator.exists(_.trim.startsWith(s"--$f ")),
+        s"--$f missing from usage")
     }
     // the ADVICE failure mode: a value-taking flag typed without '=' or
     // a misspelled gate must abort, never silently run ungated

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import pipeline.FraudPipeline.Tier
 
 /** End-to-end pipeline: 32-slot features → split → train → the full
   * held-out test_model metric suite (reference new_utlis_1.py:35-50). */
@@ -55,7 +56,7 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("extended features add the engine's beyond-parity signals, zero-filled") {
-    val r = pipeline.FraudPipeline.run(spark, sf, extendedFeatures = true)
+    val r = pipeline.FraudPipeline.run(spark, sf, Seq(Tier.Extended))
     for (c <- Seq("pr_scaled", "in_kcore", "kcore_deg", "burst"))
       assert(r.features.columns.contains(c), c)
     // still one row per user, no fan-out from the joins
@@ -73,7 +74,7 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("slice features flatten the q85 tensor: 4 scales × 33 pooled slots, exact pooling") {
-    val r = pipeline.FraudPipeline.run(spark, sf, sliceFeatures = true)
+    val r = pipeline.FraudPipeline.run(spark, sf, Seq(Tier.Slices()))
     val sliceCols = r.features.columns.filter(_.matches("s[1-4]_.*"))
     // 33 per-slice slots (n_events + 4 stats + 24 hour bins + 4 graph) × 4 scales
     assert(sliceCols.length == 4 * 33, s"${sliceCols.length}: ${sliceCols.take(8).mkString(",")}")
@@ -107,7 +108,7 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("attention tier: 4 scales × 33 slots, one row per user, q87 pooling") {
-    val r = pipeline.FraudPipeline.run(spark, sf, sliceAttention = true)
+    val r = pipeline.FraudPipeline.run(spark, sf, Seq(Tier.Slices(attention = true)))
     val sliceCols = r.features.columns.filter(_.matches("s[1-4]_.*"))
     assert(sliceCols.length == 4 * 33,
       s"${sliceCols.length}: ${sliceCols.take(8).mkString(",")}")
@@ -127,7 +128,7 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("residual tier joins q88's layer outputs, zero-filled off-graph") {
-    val r = pipeline.FraudPipeline.run(spark, sf, residualFeatures = true)
+    val r = pipeline.FraudPipeline.run(spark, sf, Seq(Tier.Residual))
     for (c <- Seq("res_r1", "res_r2", "res_r3"))
       assert(r.features.columns.contains(c), c)
     // one row per user, no fan-out from the node join
@@ -148,7 +149,7 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("lstm tier joins q90's final state per scale, zero-filled off-events") {
-    val r = pipeline.FraudPipeline.run(spark, sf, lstmFeatures = true)
+    val r = pipeline.FraudPipeline.run(spark, sf, Seq(Tier.Lstm()))
     val lstmCols = for { s <- 1 to 4; f <- Seq("h", "c") } yield s"lstm_s${s}_$f"
     for (c <- lstmCols) assert(r.features.columns.contains(c), c)
     // one row per user, no fan-out from the pivot join
@@ -169,7 +170,7 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("lstm2 tier joins q92's 2-unit state per scale, zero-filled off-events") {
-    val r = pipeline.FraudPipeline.run(spark, sf, lstm2Features = true)
+    val r = pipeline.FraudPipeline.run(spark, sf, Seq(Tier.Lstm(units = 2)))
     val cols = for { s <- 1 to 4; f <- Seq("h1", "c1", "h2", "c2") }
       yield s"lstm_s${s}_$f"
     for (c <- cols) assert(r.features.columns.contains(c), c)
@@ -188,6 +189,57 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(row.getAs[Double](s"lstm_s${s}_c1") == c1, s"scale $s c1")
       assert(row.getAs[Double](s"lstm_s${s}_h2") == h2, s"scale $s h2")
       assert(row.getAs[Double](s"lstm_s${s}_c2") == c2, s"scale $s c2")
+    }
+  }
+
+  test("every tier stacked: the fixed column order, one row per user, fused and fixed-cell values") {
+    val r = pipeline.FraudPipeline.run(spark, sf, PipelineRun.tiersOf(Seq(
+      "--extended", "--slices-attn", "--residual", "--lstm2", "--lstm-fixed", "--fused")))
+    val hours = (0 until 24).map(h => f"h$h%02d")
+    val parityCols = Seq("user_id", "n_events", "mean_val", "var_val", "n_types",
+      "mean_gap", "recall_rate", "repeat_rate") ++ hours ++
+      Seq("out_deg_signed", "in_deg_signed", "nbr_avg_deg", "clustering")
+    val slots = Seq("n_events", "mean_val", "var_val", "recall_rate", "repeat_rate",
+      "out_deg", "in_deg", "nbr_avg_deg", "clustering") ++ hours
+    val lstmFields = Seq("h1", "c1", "h2", "c2")
+    val expected = parityCols ++
+      Seq("pr_scaled", "in_kcore", "kcore_deg", "burst") ++
+      (for { s <- 1 to 4; c <- slots } yield s"s${s}_$c") ++
+      Seq("res_r1", "res_r2", "res_r3") ++
+      (for { s <- 1 to 4; f <- lstmFields } yield s"lstm_s${s}_$f") ++
+      Seq("fused_lstm_score", "fused_dual_ls0", "fused_dual_ls1")
+    assert(r.features.columns.toSeq == expected, r.features.columns.mkString(","))
+    // one row per user: the five tiers' joins add none
+    val rows = r.features.collect()
+    val users = rows.map(_.getAs[Long]("user_id"))
+    assert(users.length == users.distinct.length)
+    assert(users.length == pipeline.FraudPipeline.run(spark, sf).features.count())
+
+    // the fused columns ARE q94's scores, zero-filled off the graph
+    val q94 = ops.Fused.q94Core(spark, sf).collect()
+      .map(x => x.getAs[Long]("node") -> ((x.getAs[Double]("lstm_score"),
+        x.getAs[Double]("dual_ls0"), x.getAs[Double]("dual_ls1")))).toMap
+    // every user at this SF is on the purchase graph; the fold's shared
+    // zero fill is exercised by the extended test's empty k-core
+    assert(users.exists(q94.contains))
+    rows.foreach { row =>
+      val got = (row.getAs[Double]("fused_lstm_score"),
+        row.getAs[Double]("fused_dual_ls0"), row.getAs[Double]("fused_dual_ls1"))
+      assert(got == q94.getOrElse(row.getAs[Long]("user_id"), (0.0, 0.0, 0.0)),
+        s"user ${row.getAs[Long]("user_id")}")
+    }
+
+    // the lstm columns come from the fixed 2-unit cells, not the trained ones
+    def finals(units: ops.Features.LstmUnits): Map[(Long, Int), Seq[Double]] =
+      ops.Features.q90FromH(ops.Features.q85Core(spark, sf), units).collect()
+        .map(x => (x.getAs[Long]("user_id"), x.getAs[Int]("scale")) ->
+          lstmFields.map(f => x.getAs[Double](s"${f}_last"))).toMap
+    val fixed = finals(ops.Features.q90UnitsFixed)
+    assert(fixed != finals(ops.Features.q90Units), "fixed and trained cells must differ here")
+    for (row <- rows; s <- 1 to 4) {
+      val got = lstmFields.map(f => row.getAs[Double](s"lstm_s${s}_$f"))
+      assert(got == fixed.getOrElse((row.getAs[Long]("user_id"), s), Seq.fill(4)(0.0)),
+        s"user ${row.getAs[Long]("user_id")} scale $s")
     }
   }
 

@@ -12,7 +12,8 @@ set -uo pipefail
 DIR="${1:-/root/testdata/sf0.1}"
 ONLY="q22_neighbor_avg_degree,q25_row_normalize_adj,q43_col_normalize_adj,\
 q73_pagerank,q80_weighted_pagerank"
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do

@@ -9,7 +9,8 @@
 set -uo pipefail
 DIR="${SPARK_GRAFT_SF_DIR:?set SPARK_GRAFT_SF_DIR}"
 MEM="${SPARK_DRIVER_MEM:-48g}"
-CP="/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do

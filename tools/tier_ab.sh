@@ -9,7 +9,10 @@
 #   e.g. tools/tier_ab.sh /tmp/sfgen/sf10 "" "--lstm" "--slices-attn --lstm"
 set -uo pipefail
 DIR="$1"; shift
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+# the classes of the checkout this script sits in, so checkouts of two
+# commits each run their own build
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
