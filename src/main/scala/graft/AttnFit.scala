@@ -52,10 +52,10 @@ object AttnFit {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.feature.VectorAssembler
     import org.apache.spark.ml.functions.vector_to_array
-    val assembled = new VectorAssembler()
+    val assembled = Release.cache(new VectorAssembler()
       .setInputCols(featCols.toArray).setOutputCol("fvec")
       .setHandleInvalid("keep")
-      .transform(data).cache()
+      .transform(data))
     val model = new LogisticRegression()
       .setFeaturesCol("fvec").setLabelCol("label")
       .setMaxIter(50).setRegParam(0.01)
@@ -74,7 +74,7 @@ object AttnFit {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    try { fitQ87(spark, dir); fitQ86(spark, dir) }
+    try Release.scope { fitQ87(spark, dir); fitQ86(spark, dir) }
     finally spark.stop()
   }
 
@@ -82,14 +82,13 @@ object AttnFit {
     val slots = ops.Features.q87FeatureAttn.map(_._1)
     // bucket-grain training rows: every tensor slot coalesced exactly
     // like q87PoolFrom's slot(), user fraud label, TRAIN fold only
-    val data = ops.Features.q85Core(spark, dir)
+    val data = Release.cache(ops.Features.q85Core(spark, dir)
       .join(Tables.customer(spark, dir).select(
         col("c_custkey").as("user_id"),
         (col("c_acctbal") < 0).cast("double").as("label")), "user_id")
       .filter(ops.Exact.lcgTrain80("user_id"))
       .select(col("label") +:
-        slots.map(c => coalesce(col(c).cast("double"), lit(0.0)).as(c)): _*)
-      .cache()
+        slots.map(c => coalesce(col(c).cast("double"), lit(0.0)).as(c)): _*))
     val (coef, b0, scored) = fitLr(data, slots)
     val auc = aucOf(scored)
     // logit distribution over train buckets → gate scale and center
@@ -113,7 +112,7 @@ object AttnFit {
   }
 
   private def fitQ86(spark: SparkSession, dir: String): Unit = {
-    val data = ops.Graph.q86GateFitBase(spark, dir).cache()
+    val data = Release.cache(ops.Graph.q86GateFitBase(spark, dir))
     val (coef, b0, scored) = fitLr(data, Seq("di", "dj"))
     val auc = aucOf(scored)
     val w = col("di") * lit(coef(0)) + col("dj") * lit(coef(1)) + lit(b0)

@@ -54,8 +54,10 @@ object Bench {
     // the measured plan is the verified plan.
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+    // one scope per query, warm-up and timed alike: each query starts
+    // from the session as the previous one found it
     queries.foreach { case (_, fn) =>
-      try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+      try Release.scope(materialize(fn(spark, warmDir))) catch { case _: Throwable => () }
     }
     // The sandbox VM shows bursty multi-second CPU-steal stalls (a pure
     // CPU loop measures sporadic 2-3× slowdowns), which pollute a
@@ -75,16 +77,18 @@ object Bench {
     // (time, succeeded): a failed rep must never win the min — a
     // transient failure measures time-to-crash, not plan cost
     def timedPass(): Map[String, (Double, Boolean)] = queries.map { case (name, fn) =>
-      spark.catalog.clearCache() // drop operator-internal persists, OUTSIDE the timed window
       System.gc() // old-gen garbage from the PREVIOUS query must not tax this one's timing
-      val t0 = System.nanoTime()
-      // a failed query must not masquerade as a fast one — flag it loudly
-      val ok = try { materialize(fn(spark, sfDir)); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
+      // the scope's release runs after the clock stops
+      name -> Release.scope {
+        val t0 = System.nanoTime()
+        // a failed query must not masquerade as a fast one — flag it loudly
+        val ok = try { materialize(fn(spark, sfDir)); true } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            false
+        }
+        ((System.nanoTime() - t0) / 1e9, ok)
       }
-      name -> ((System.nanoTime() - t0) / 1e9, ok)
     }
     val passes = (1 to reps).flatMap { i =>
       if (i == 1 || elapsed() < budgetSec) Some(timedPass()) else None

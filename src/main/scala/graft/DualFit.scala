@@ -244,7 +244,7 @@ object DualFit {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    try run(spark, dir) finally spark.stop()
+    try Release.scope(run(spark, dir)) finally spark.stop()
   }
 
   private def run(spark: SparkSession, dir: String): Unit = {

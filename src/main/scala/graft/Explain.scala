@@ -21,11 +21,10 @@ object Explain {
     wanted.foreach { k =>
       println(s"\n========== $k ==========")
       SparkEntry.queries.get(k) match {
-        case Some(fn) => println(fn(spark, dir).queryExecution
-          .explainString(org.apache.spark.sql.execution.FormattedMode))
+        case Some(fn) => println(Release.scope(fn(spark, dir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)))
         case None => println(s"unknown query: $k")
       }
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -39,14 +39,14 @@ object SkewBench {
           .filter(col("dst") < n))
 
       for ((name, g) <- Seq("star" -> star, "chain" -> chain,
-          "hub_chain" -> hubChain)) {
-        val e = g.cache(); val edges = e.count()
+          "hub_chain" -> hubChain)) Release.scope {
+        val e = Release.cache(g); val edges = e.count()
         val (hm, tHash) = time {
-          val r = ops.Components.connectedComponents(e).cache()
+          val r = Release.cache(ops.Components.connectedComponents(e))
           r.count(); r
         }
         val (ct, tContract) = time {
-          val r = ops.Components.connectedComponentsContract(e).cache()
+          val r = Release.cache(ops.Components.connectedComponentsContract(e))
           r.count(); r
         }
         val diff = hm.join(ct, Seq("node"))
@@ -55,7 +55,6 @@ object SkewBench {
         val comps = hm.select(countDistinct(col("comp"))).head().getLong(0)
         println(f"""{"graph":"$name","edges":$edges,"components":$comps,""" +
           f""""hashmin_sec":$tHash%.2f,"contract_sec":$tContract%.2f}""")
-        hm.unpersist(); ct.unpersist(); e.unpersist()
       }
     } finally spark.stop()
   }

@@ -32,13 +32,13 @@ object Verify {
       case Some(keys) => SparkEntry.oracleSql.filter { case (k, _) => keys(k) }
       case None => SparkEntry.oracleSql
     }
+    // one scope per query: what the op materializes goes with it
     queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Release.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally spark.catalog.clearCache() // operator-internal persists
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

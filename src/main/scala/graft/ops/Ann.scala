@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -207,7 +207,7 @@ object Ann {
       .map(r => (r.getAs[Long]("sid"), r.getAs[Seq[Long]]("sv").toArray,
         r.getAs[Double]("sn")))
       .sortBy(_._1)
-    val cells = {
+    val cells = Release.cache {
       import emb.sparkSession.implicits._
       prep(emb, "vid", "v", "n").select(col("vid"), col("v"), col("n"))
         .as[(Long, Array[Long], Double)]
@@ -232,7 +232,6 @@ object Ann {
           }
         }
         .toDF("vid", "cell")
-        .persist()
     }
     val a = prep(emb, "id1", "v1", "n1")
       .join(lab.withColumnRenamed("vec_id", "id1"), "id1")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,22 +39,20 @@ object Components {
     // edge build — e.g. q47's LSN self-join — once per branch; exchange
     // reuse cannot dedupe the two branches because their projections
     // differ).
-    val sym0 = edges
+    val sym0 = Release.cache(edges
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
-      .distinct()
-      .cache()
+      .distinct())
     // Round 0 fused into initialization: with identity starting labels,
     // the first neighbor-min pass is just min(dst) per src (and the
     // pointer jump is the identity), so labels₀ = least(node, min nbr)
     // falls out of ONE aggregation — no init-distinct shuffle, no
     // round-0 joins. Every node appears as a src in sym (symmetrized),
     // so coverage is complete.
-    var labels = sym0.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("node"), least(col("src"), col("mn")).as("comp"))
-      .localCheckpoint(true)
+    var labels = Release.checkpoint(sym0.groupBy(col("src")).agg(min(col("dst")).as("mn"))
+      .select(col("src").as("node"), least(col("src"), col("mn")).as("comp")))
     // Label tables are node-sized and checkpointed, so their stats are
     // UNKNOWN to the planner — without a hint every round's sym⋈labels
     // join is a sort-merge that re-sorts the edge cache (measured: the
@@ -74,9 +72,10 @@ object Components {
     val sym =
       if (small) sym0
       else {
-        val s = sym0.repartition(col("dst")).cache()
-        s.count() // materialize before dropping the unpartitioned cache
-        sym0.unpersist()
+        // a checkpoint, not a second cache: its lineage stops at its own
+        // blocks, so the unpartitioned cache and its relations go at once
+        val s = Release.checkpoint(sym0.repartition(col("dst")))
+        Release.uncache(sym0)
         s
       }
     var changed = 1L
@@ -108,24 +107,18 @@ object Components {
       // up exponentially — OOMs by ~iteration 15 even on tiny graphs)
       // AND materializes the round once for the convergence count +
       // next-round consumers.
-      val next = stepped.join(gate(lookup), col("comp") === col("jnode"), "left")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp"),
-          col("prev"))
-        .localCheckpoint(true)
+      val next = Release.checkpoint(
+        stepped.join(gate(lookup), col("comp") === col("jnode"), "left")
+          .select(col("node"),
+            least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp"),
+            col("prev")))
       changed = next.filter(col("comp") =!= col("prev")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[graft] cc round $i: changed=$changed " +
-          s"t=${System.nanoTime() / 1e9}")
-      // checkpoint blocks from previous rounds are freed by the
-      // ContextCleaner once unreferenced (Dataset.unpersist is a no-op
-      // for localCheckpoint blocks) — dropping the refs here suffices
       labels = next.select(col("node"), col("comp"))
       i += 1
     }
     // also frees the broadcasts behind the edge cache (the caller's
     // edge query), which the ContextCleaner would drop only after a GC
-    graft.Release.uncache(sym)
+    Release.uncache(sym0)
     if (changed > 0)
       System.err.println(
         s"[graft] connectedComponents: NOT converged after $maxIter rounds " +
@@ -158,12 +151,11 @@ object Components {
       edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // canonical big→small, self-loops dropped (they carry no
     // connectivity); the small-star step relies on this orientation
-    var e = edges
+    var e = Release.checkpoint(edges
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     var eCount = e.count()
     var done = eCount == 0
     var i = 0
@@ -181,12 +173,12 @@ object Components {
       // small-star: on big→small edges N<(u) is exactly the dst side;
       // every smaller neighbor and u itself hook onto m(u) = min(dst)
       val smins = ls.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      val next = ls.join(smins, Seq("src"))
+      // truncate lineage, materialize once
+      val next = Release.checkpoint(ls.join(smins, Seq("src"))
         .select(col("dst").as("src"), col("m").as("dst"))
         .unionAll(smins.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
-        .distinct()
-        .localCheckpoint(true) // truncate lineage, materialize once
+        .distinct())
       val nextCount = next.count()
       // fixpoint test: same count AND no new edges ⇒ identical sets
       done = nextCount == eCount && next.exceptAll(e).isEmpty

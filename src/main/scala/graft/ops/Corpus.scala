@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -38,8 +38,8 @@ object Corpus {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
     // tf feeds the length agg, the df agg and the final join — one
     // shuffle to build, three readers
-    val tf = tok.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("c")).cache()
+    val tf = Release.cache(tok.groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("c")))
     val len = tf.groupBy(col("doc_id")).agg(sum(col("c")).as("len"))
     val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = Tables.documents(spark, dir).agg(count(lit(1)).as("n"))
@@ -66,9 +66,8 @@ object Corpus {
   def q57CorpusPipeline(spark: SparkSession, dir: String): DataFrame = {
     val kept = q57Kept(spark, dir)
     // agg feeds the total and the final projection — cache, not recompute
-    val agg = kept.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-      .cache()
+    val agg = Release.cache(kept.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens")))
     val tot = agg.agg(sum(col("n_tokens")).as("tot"))
     agg.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), col("n_tokens"),
@@ -268,7 +267,7 @@ object Corpus {
     val cacheDocLimit = 10L * 1000 * 1000
     val lines =
       if (Tables.cachedRowCount(spark, dir, "documents") <= cacheDocLimit)
-        linesBase.cache()
+        Release.cache(linesBase)
       else linesBase
     val hot = lines.groupBy(col("line")).agg(count(lit(1)).as("df"))
       .filter(col("df") > 2)
@@ -330,8 +329,8 @@ object Corpus {
     // the OOV floor) — cache it or each branch re-scans the reference
     // slice. The table is vocab-sized (bounded LM artifact), never
     // corpus-sized, so the cache is scale-safe.
-    val vocab = tok.filter(isRef).groupBy(col("w"))
-      .agg(count(lit(1)).as("c")).cache()
+    val vocab = Release.cache(tok.filter(isRef).groupBy(col("w"))
+      .agg(count(lit(1)).as("c")))
     val tot = vocab.agg(sum(col("c")).as("t"))
     val lp = vocab.crossJoin(broadcast(tot))
       .select(col("w"),
@@ -380,8 +379,8 @@ object Corpus {
     // combine — a bounded curation artifact like q68's vocab, so
     // caching it (to feed both the ratio table and its totals) is
     // scale-safe.
-    val tc = grams(isTarget).groupBy(col("b"))
-      .agg(count(lit(1)).as("ct")).cache()
+    val tc = Release.cache(grams(isTarget).groupBy(col("b"))
+      .agg(count(lit(1)).as("ct")))
     // ONE corpus pass: per-(doc, bucket) gram counts. md5-bucketing
     // every gram is the CPU hot spot (measured: a
     // separate-counts-scan + separate-scoring-scan shape ran 23 s at
@@ -493,15 +492,15 @@ object Corpus {
     * combined count shuffle. Deterministic: ties break on the word. */
   def lmVocab(spark: SparkSession, dir: String,
       topK: Int = lmVocabTopK): LmVocab = {
-    val counts = Tables.documents(spark, dir).filter(refSlice)
+    // head selection + the total read the same vocab-sized agg
+    val counts = Release.cache(Tables.documents(spark, dir).filter(refSlice)
       .select(explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .cache() // head selection + the total read the same vocab-sized agg
+      .groupBy(col("w")).agg(count(lit(1)).as("c")))
     val head = counts.orderBy(col("c").desc, col("w")).limit(topK)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val total = counts.agg(coalesce(sum(col("c")), lit(0L)).as("t"))
       .collect().head.getLong(0)
-    counts.unpersist()
+    Release.uncache(counts)
     LmVocab(head, total)
   }
 
@@ -544,14 +543,13 @@ object Corpus {
     // feeds the df/idf side AND the scoring join — cache both (doc-sized
     // 2-3 column tables, text column dropped, so the cache is scale-safe)
     // or each consumer re-scans the corpus: 5 scans become 2
-    val dl = docs.select(col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("dl")).cache()
+    val dl = Release.cache(docs.select(col("doc_id"),
+      size(split(col("text"), " ")).cast("long").as("dl")))
     val st = dl.agg(count(lit(1)).as("nd"), sum(col("dl")).as("td"))
-    val tf = docs
+    val tf = Release.cache(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term").isin(query: _*))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .cache()
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(st))
       .select(col("term"),
@@ -691,8 +689,7 @@ object Corpus {
     // count table (cw = Σ_b cab(w,·) + Σ_a cab(·,w), n = Σ cab — exact
     // integer identities) instead of re-exploding the corpus three more
     // times. The cache is vocab²-sized (corpus-bounded).
-    val cabAll = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
-      .cache()
+    val cabAll = Release.cache(pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab")))
     val cab = cabAll.filter(col("cab") >= pmiMinCount)
     // Unigram masses sum over ALL bigrams (the PMI denominator is the
     // corpus-wide marginal). The raw type inventory of a web-scale
@@ -750,10 +747,10 @@ object Corpus {
     * alone a forced broadcast of one); the tiny per-source totals
     * broadcast. */
   def q82SourceKl(spark: SparkSession, dir: String): DataFrame = {
-    val sw = Tables.documents(spark, dir)
+    // vocab-sized (|sources|×|vocab|); feeds three rollups
+    val sw = Release.cache(Tables.documents(spark, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("csw"))
-      .cache() // vocab-sized (|sources|×|vocab|); feeds three rollups
+      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("csw")))
     val ts = sw.groupBy(col("source")).agg(sum(col("csw")).as("ts"))
     val t = sw.agg(sum(col("csw")).as("t"))
     // The per-word corpus mass c_w = Σ_s c_sw never materializes as a

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,10 +63,9 @@ object Dedup {
     // buckets feeds BOTH sides of the bucket self-join — without the
     // persist the whole signature aggregation (16 min-hashes over every
     // shingle) runs once per side
-    val buckets = sig
+    val buckets = Release.cache(sig
       .select(col("doc_id"), explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bh").as("bh"))
-      .cache()
+      .select(col("doc_id"), col("b.band").as("band"), col("b.bh").as("bh")))
     buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -136,7 +135,7 @@ object Dedup {
   private def minhashRefined(spark: SparkSession, dir: String): DataFrame = {
     // sh feeds the signature build and the per-doc set materialization —
     // persist once instead of re-shingling the corpus per consumer
-    val sh = Text.shingled(spark, dir).cache()
+    val sh = Release.cache(Text.shingled(spark, dir))
     val cands = minhashCandidates(sh, numHashes = 16, bands = 4)
     // exact-Jaccard refinement for CANDIDATES only — never all pairs.
     // One groupBy materializes each doc's (already-distinct) shingle
@@ -210,11 +209,10 @@ object Dedup {
         expr(s"(simhash >> ${chunkBits * j}) & $chunkMask").as("chunk")))
     // dual-consumer self-join: persist, or the 60-bit-vote simhash
     // aggregation runs once per join side
-    val buckets = sig
+    val buckets = Release.cache(sig
       .select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("b"))
       .select(col("doc_id"), col("simhash"),
-        col("b.band").as("band"), col("b.chunk").as("chunk"))
-      .cache()
+        col("b.band").as("band"), col("b.chunk").as("chunk")))
     buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.chunk") === col("y.chunk") &&

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -124,8 +124,9 @@ object Features {
     * week-size aggregation; the previous week's size is one more lag.
     * 3 exchanges, no self-joins, no cache (single pass), vs the
     * 4-plan-reference uw cache + two self-joins it replaces. Values
-    * exact-equal (same counts, same arithmetic; the q85Repeat
-    * ProfileQ85c proof covers the identical algebra). */
+    * exact-equal (same counts, same arithmetic; the q85Repeat proof,
+    * run with the since-removed ProfileQ85c probe (see git history),
+    * covers the identical algebra). */
   private[graft] def q14Core(spark: SparkSession, dir: String): DataFrame = {
     val uw = Tables.events(spark, dir)
       .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("wk"),
@@ -310,7 +311,7 @@ object Features {
     // q22's full graph and q23's heavy-line subgraph (hot = 1) in the
     // same cached table (MEMORY_AND_DISK — at scale it spills rather
     // than re-running the fact join).
-    val undAll = Graph.undWithHot(Graph.factBase(spark, dir)).cache()
+    val undAll = Release.cache(Graph.undWithHot(Graph.factBase(spark, dir)))
     val nad = Graph.q22FromUnd(spark, dir, undAll.select(col("src"), col("dst")))
       .select(col("node").as("user_id"), col("nbr_avg_deg"))
     val cc = Graph.q23FromUnd(undAll
@@ -528,14 +529,12 @@ object Features {
     * adjacency-intersection wins (shuffle-volume-bound). Measured
     * crossover between 100k events (sf0.1: join ~15 % faster) and 1M
     * (sf1: intersect ~1.4× faster), interleaved min-of-3 each way
-    * (ProfileQ85b) — the gate sits at the geometric middle. Footer
-    * count only (statistics-only, memoized); conf-overridable so specs
-    * can pin either branch on small data. */
-  private[graft] val q85CcIntersectMinEventsDefault = 500L * 1000
+    * (measured by the ProfileQ85b probe, since removed; see git
+    * history) — the gate sits at the geometric middle. Footer count
+    * only (statistics-only, memoized). */
+  private[graft] val q85CcIntersectMinEvents = 500L * 1000
   private[graft] def q85CcIntersect(spark: SparkSession, dir: String): Boolean =
-    Tables.cachedRowCount(spark, dir, "events") >=
-      spark.conf.getOption("spark.graft.q85.ccIntersectMinEvents")
-        .map(_.toLong).getOrElse(q85CcIntersectMinEventsDefault)
+    Tables.cachedRowCount(spark, dir, "events") >= q85CcIntersectMinEvents
 
   /** The (conditionally cached) narrow events projection every q85
     * sub-DAG reads — split out so q94 can feed its signed-degree side
@@ -549,7 +548,7 @@ object Features {
   private[graft] def q85Ev(spark: SparkSession, dir: String): DataFrame = {
     val evBase = q85EvBase(spark, dir)
     if (Tables.cachedRowCount(spark, dir, "events") <= q85CacheEventLimit(spark))
-      evBase.cache()
+      Release.cache(evBase)
     else evBase
   }
 
@@ -576,9 +575,9 @@ object Features {
     // join — three exchanges of the slice edge set gone. No new skew:
     // the cap window already funnels each (keys, src) adjacency into
     // one partition; this just establishes that distribution once.
-    val und = Graph.symmetrizedKeyed(e0, keys)
+    val und = Release.cache(Graph.symmetrizedKeyed(e0, keys)
       .repartition(col("scale"), col("bucket"), col("src"))
-      .dropDuplicates().cache()
+      .dropDuplicates())
     val nad = Graph.q22FromUndKeyed(und, keys)
       .select(col("scale"), col("bucket"), col("node"), col("nbr_avg_deg"))
     // triangle spelling by density (the footer gate above): pair join
@@ -771,7 +770,8 @@ object Features {
     * lag over the aggregated frame. 3 exchanges, 0 broadcast builds,
     * where the join spelling paid 4 exchanges + 2 broadcast builds +
     * a full re-pass of the uw cache per side — measured exact-equal
-    * and ~2× faster at sf0.1 (ProfileQ85c; a-only=b-only=0). Window
+    * and ~2× faster at sf0.1 (a-only=b-only=0; measured by the
+    * ProfileQ85c probe, since removed, see git history). Window
     * partitions are (user, scale[, type]) — bounded by the calendar
     * times |types|, never a skew hazard. */
   private[graft] def q85Repeat(uw: DataFrame): DataFrame = {
@@ -796,11 +796,11 @@ object Features {
     * shape as [[q85Uw]]: day-grain edge uniques once, then the four
     * scales re-explode over the deduped set. */
   private[graft] def q85Edges(ev: DataFrame): DataFrame =
-    q85WithScaleBucket(
+    Release.cache(q85WithScaleBucket(
         ev.filter(col("peer").isNotNull)
           .select(col("user_id"), col("day_idx"), col("peer")).distinct())
       .select(col("scale"), col("bucket"), col("user_id").as("src"), col("peer").as("dst"))
-      .distinct().cache()
+      .distinct())
 
   /** q87 feature-attention weights — TRAINED plan literals for the
     * reference MultiLstm's `feature_attn` (Code for Sichuan/src/

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Release
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -199,12 +200,11 @@ object Fused {
     * convention: a sort below a re-aggregating consumer is a wasted
     * exchange). */
   private[graft] def q94Core(spark: SparkSession, dir: String): DataFrame = {
-    val und = q94Und(spark, dir).cache() // degree agg + one message join per round
+    val und = Release.cache(q94Und(spark, dir)) // degree agg + one message join per round
     // cached: di/dj/nodes rebuild per checkpointed round execution —
     // without this the full-edge degree agg reruns ~6× per query (the
     // gcnRounds/pagerankLoop lesson, OPTIMIZATION_r11.md)
-    val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-      .cache()
+    val deg = Release.cache(und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d")))
     val bound = Graph.nodeBound(spark, dir)
     def gated(df: DataFrame): DataFrame =
       if (bound <= Graph.broadcastNodeLimit) broadcast(df) else df
@@ -214,14 +214,13 @@ object Fused {
     val hd = q94Heads
     // heads over the feature row; localCheckpoint both cuts the q92
     // lineage AND materializes the one table every round re-reads
-    val base = feat
+    val base = Release.checkpoint(feat
       .withColumn("ul0", expr(dotSql(hd.clfW(0), hd.clfB(0), fcols)))
       .withColumn("ul1", expr(dotSql(hd.clfW(1), hd.clfB(1), fcols)))
       .withColumn("lstm_score", expr(softmax1Sql("ul0", "ul1")))
       .withColumn("raw1", expr(r6(s"greatest(${dotSql(hd.t1W(0), hd.t1B(0), fcols)}, 0.0)")))
       .withColumn("raw2", expr(r6(s"greatest(${dotSql(hd.t1W(1), hd.t1B(1), fcols)}, 0.0)")))
-      .select(col("node"), col("lstm_score"), col("raw1"), col("raw2"))
-      .localCheckpoint(true)
+      .select(col("node"), col("lstm_score"), col("raw1"), col("raw2")))
     val norm = (lit(1.0) / sqrt(col("di"))) * (lit(1.0) / sqrt(col("dj")))
     // Fold the degree norm into the edge cache ONCE: norm is constant
     // per edge across rounds (same IEEE expression, same bits), so the
@@ -230,8 +229,8 @@ object Fused {
     // joins from EVERY round (guide §2.4 — two operations keyed the
     // same way share one exchange; here they share zero, the norm rides
     // the cache).
-    val undW = und.join(di, "src").join(dj, "dst")
-      .select(col("src"), col("dst"), norm.as("norm")).cache()
+    val undW = Release.cache(und.join(di, "src").join(dj, "dst")
+      .select(col("src"), col("dst"), norm.as("norm")))
     def msg(h: DataFrame, c1: String, c2: String): DataFrame = {
       val hj = gated(h.select(col("node").as("dst"),
         col(c1).as("p1"), col(c2).as("p2")))
@@ -247,11 +246,11 @@ object Fused {
     // stats-less) base/r1 RDDs — ungated, each round's residual join
     // plans as a sort-merge with two exchanges. Gate the message side
     // like every other node-sized table here.
-    val r1 = base.join(gated(msg(base, "raw1", "raw2")), Seq("node"), "left")
-      .select(col("node"), col("lstm_score"), col("raw1"), col("raw2"),
-        expr(epsResidualSql("raw1", "z1")).as("h11"),
-        expr(epsResidualSql("raw2", "z2")).as("h12"))
-      .localCheckpoint(true)
+    val r1 = Release.checkpoint(
+      base.join(gated(msg(base, "raw1", "raw2")), Seq("node"), "left")
+        .select(col("node"), col("lstm_score"), col("raw1"), col("raw2"),
+          expr(epsResidualSql("raw1", "z1")).as("h11"),
+          expr(epsResidualSql("raw2", "z2")).as("h12")))
     val r2 = r1.join(gated(msg(r1, "h11", "h12")), Seq("node"), "left")
       .select(col("node"), col("lstm_score"),
         expr(epsResidualSql("raw1", "z1")).as("h21"),
@@ -350,12 +349,12 @@ object Fused {
     * falls out of the algebra, not a second pass). Edge build/degree
     * sides/checkpoint discipline are gcnRounds'. */
   def q95DualChannelPropagate(spark: SparkSession, dir: String): DataFrame = {
-    val und = Graph.undFrom(Graph.factBase(spark, dir).select(col("src"), col("dst")))
-      .cache() // degree agg + two message joins
+    // degree agg + two message joins
+    val und = Release.cache(
+      Graph.undFrom(Graph.factBase(spark, dir).select(col("src"), col("dst"))))
     // cached: di/dj/r1 rebuild per checkpointed round execution (the
     // gcnRounds/pagerankLoop lesson, OPTIMIZATION_r11.md)
-    val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-      .cache()
+    val deg = Release.cache(und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d")))
     val bound = Graph.nodeBound(spark, dir)
     def gated(df: DataFrame): DataFrame =
       if (bound <= Graph.broadcastNodeLimit) broadcast(df) else df
@@ -366,8 +365,8 @@ object Fused {
     // norm is per-edge constant across rounds — same expression, same
     // bits — and past the broadcast gate each round drops two edge-set
     // sort-merge joins); dj rides along for round 1's h⁰ = (deg, 1)
-    val undW = und.join(di, "src").join(dj, "dst")
-      .select(col("src"), col("dst"), norm.as("norm"), col("dj")).cache()
+    val undW = Release.cache(und.join(di, "src").join(dj, "dst")
+      .select(col("src"), col("dst"), norm.as("norm"), col("dj")))
     // round 1: both channels read the same h⁰ = (deg, 1), so ONE
     // aggregate serves both (the low channel is the negated message)
     val z1 = undW
@@ -376,14 +375,13 @@ object Fused {
         col("norm").cast("decimal(28,12)").as("m_one"))
       .groupBy(col("src").as("node"))
       .agg(sum(col("m_deg")).as("z_deg"), sum(col("m_one")).as("z_cnt"))
-    val r1 = deg.select(col("n").as("node"), col("d"))
+    val r1 = Release.checkpoint(deg.select(col("n").as("node"), col("d"))
       .join(gated(z1), Seq("node"), "left") // node-sized agg, stats-less vs the cache
       .select(col("node"), col("d"),
         expr(epsResidualSql("d", "z_deg")).as("hi_deg"),
         expr(epsResidualSql("1.0", "z_cnt")).as("hi_cnt"),
         expr(epsResidualSql("d", "z_deg", "-")).as("lo_deg"),
-        expr(epsResidualSql("1.0", "z_cnt", "-")).as("lo_cnt"))
-      .localCheckpoint(true)
+        expr(epsResidualSql("1.0", "z_cnt", "-")).as("lo_cnt")))
     // round 2: the channels have diverged — all four features through
     // ONE message shuffle as four measure columns
     val hj = gated(r1.select(col("node").as("dst"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -233,8 +233,9 @@ object Graph {
     * degree counted by src, and the window needs ONE exchange+sort of
     * und where the previous degree-aggregate + shuffle-join spelling
     * shuffled the degree table AND re-sorted und for the sort-merge
-    * join anyway (measured 1.5-2x slower at sf1, ProfileQ85 --ab-nad;
-    * outputs exact-compare equal). This is the OPPOSITE call to q31's
+    * join anyway (measured 1.5-2x slower at sf1, outputs exact-compare
+    * equal, by the --ab-nad mode of the ProfileQ85 probe, since
+    * removed; see git history). This is the OPPOSITE call to q31's
     * df-cap, where a window over the posting list would sort everything
     * to serve a tiny exclusion head that an anti-join broadcasts —
     * here every row consumes its neighbor's degree, so the full-list
@@ -254,8 +255,9 @@ object Graph {
     * symmetrized+deduped, self-loop-free pair set; hub adjacency is
     * capped per (keys…, src) — see [[adjCap]]. */
   private[graft] def q23FromUndKeyed(und: DataFrame, keys: Seq[String]): DataFrame = {
-    val canon = capPerKeys(und.filter(col("src") < col("dst")), keys :+ "src", "dst", adjCap)
-      .cache() // three references in the triangle join
+    // three references in the triangle join
+    val canon = Release.cache(
+      capPerKeys(und.filter(col("src") < col("dst")), keys :+ "src", "dst", adjCap))
     def kEq(a: String, b: String) =
       keys.map(k => col(s"$a.$k") === col(s"$b.$k")).reduce(_ && _)
     val tris = canon.as("e1")
@@ -285,7 +287,8 @@ object Graph {
     * array_intersect(N(a), N(b)) over collect_list adjacency arrays —
     * one groupBy + two array-carrying joins instead of the 3-way
     * candidate-pair self-join. Exact-equal to the join spelling
-    * (ProfileQ85b exceptAll 0/0 at sf0.1 AND sf1; FeaturesSpec pins it
+    * (exceptAll 0/0 at sf0.1 AND sf1, measured by the ProfileQ85b probe
+    * since removed, see git history; FeaturesSpec pins it
     * on the randomized fixture) — canon is DISTINCT so array_intersect
     * never dedups anything, and the exploded corner multiset is
     * order-independent.
@@ -293,22 +296,23 @@ object Graph {
     * WHEN: the two spellings cross over with slice density — at sf0.1
     * (100k events) the join wins ~15 % (candidate-pair exchanges are
     * cheap when stages are overhead-bound), at sf1 (1M events) the
-    * intersection wins ~1.4× (interleaved min-of-3 both ways,
-    * ProfileQ85b) because the array joins shuffle ≤cap-length arrays
+    * intersection wins ~1.4× (interleaved min-of-3 both ways, same
+    * probe) because the array joins shuffle ≤cap-length arrays
     * once where the pair join exchanges every (keys, src, dst)
     * candidate twice. q85Core gates on the events footer count
     * ([[Features.q85CcIntersectMinEvents]]); state stays bounded at any
     * scale — adjacency arrays are ≤ adjCap (256) longs by construction.
     */
   private[graft] def q23FromUndKeyedIntersect(und: DataFrame, keys: Seq[String]): DataFrame = {
-    val canon = capPerKeys(und.filter(col("src") < col("dst")), keys :+ "src", "dst", adjCap)
-      .cache() // adjacency build + the edge probe read it
+    // adjacency build + the edge probe read it
+    val canon = Release.cache(
+      capPerKeys(und.filter(col("src") < col("dst")), keys :+ "src", "dst", adjCap))
     // (keys, src)-grouped adjacency ≤ adjCap long each; und arrives
     // (keys…, src)-clustered, so this aggregation reuses the cache's
     // partitioning — no new exchange
-    val adj = canon.groupBy((keys :+ "src").map(col): _*)
-      .agg(collect_list(col("dst")).as("nbrs"))
-      .cache() // joined twice (src side + dst side)
+    // joined twice (src side + dst side)
+    val adj = Release.cache(canon.groupBy((keys :+ "src").map(col): _*)
+      .agg(collect_list(col("dst")).as("nbrs")))
     val edges = canon
       .join(adj.select(keys.map(col) :+ col("src") :+ col("nbrs").as("na"): _*),
         keys :+ "src")
@@ -417,7 +421,7 @@ object Graph {
     // self-join reads the subgraph twice: persist it instead of running
     // the orders⋈lineitem build per side (standard at any scale);
     // hub vertices are degree-capped BEFORE pairing (see adjCap)
-    val e = capPerKey(hotEdges(spark, dir), "dst", "src", adjCap).cache()
+    val e = Release.cache(capPerKey(hotEdges(spark, dir), "dst", "src", adjCap))
     e.as("a").join(e.as("b"),
         col("a.dst") === col("b.dst") && col("a.src") < col("b.src"))
       .groupBy(col("a.src").as("u"), col("b.src").as("v"))
@@ -438,8 +442,8 @@ object Graph {
     // dedup-first undirected build — measurement and 100 TB argument
     // on [[undFrom]] (this site previously symmetrized raw then ran
     // one 2E-row distinct; the flip was measured, not assumed)
-    q22FromUnd(spark, dir, undFrom(e)
-      .cache()) // feeds both the degree agg and the neighbor join
+    // the cache feeds both the degree agg and the neighbor join
+    q22FromUnd(spark, dir, Release.cache(undFrom(e)))
 
   /** q22 core over an ALREADY symmetrized+deduped (and cached) pair
     * set — q59 shares one such build between q22 and q23. */
@@ -467,8 +471,8 @@ object Graph {
 
   private[ops] def q23On(spark: SparkSession, dir: String,
       e: DataFrame): DataFrame =
-    q23FromUnd(undFromBySrc(e)
-      .filter(col("src") =!= col("dst")).cache())
+    q23FromUnd(Release.cache(undFromBySrc(e)
+      .filter(col("src") =!= col("dst"))))
 
   /** q23 core over an ALREADY symmetrized+deduped, self-loop-free
     * (and cached) pair set — q59 shares one such build with q22. */
@@ -477,8 +481,8 @@ object Graph {
     // edge build runs 3×; hub out-adjacency is degree-capped BEFORE the
     // two-hop pairing (bounds candidates at cap² per vertex — adjCap);
     // `deg` below stays the TRUE degree from the uncapped graph
-    val canon = capPerKey(und.filter(col("src") < col("dst")), "src", "dst", adjCap)
-      .cache()
+    val canon = Release.cache(
+      capPerKey(und.filter(col("src") < col("dst")), "src", "dst", adjCap))
     val tris = canon.as("e1")
       .join(canon.as("e2"), col("e2.src") === col("e1.dst"))
       .join(canon.as("e3"),
@@ -512,21 +516,19 @@ object Graph {
     val deg = edges(spark, dir).groupBy(col("src")).agg(count(lit(1)).as("d"))
     // lab feeds BOTH the fraud-rate agg and the scored projection —
     // cache it or the edge-degree build above runs twice
-    val lab = Tables.customer(spark, dir)
+    val lab = Release.cache(Tables.customer(spark, dir)
       .join(deg, col("c_custkey") === col("src"), "left")
       .select(col("c_custkey"),
         (col("c_acctbal") < 0).cast("int").as("label"),
-        greatest(coalesce(col("d"), lit(0L)), lit(1L)).as("deg"))
-      .cache()
+        greatest(coalesce(col("d"), lit(0L)), lit(1L)).as("deg")))
     val rate = lab.agg((sum(col("label")) * lit(1.0) / count(lit(1))).as("fr"))
     // scored feeds BOTH the normalizer agg and the final projection —
     // persist it or the whole join/degree subplan runs twice
-    val scored = lab.crossJoin(broadcast(rate))
+    val scored = Release.cache(lab.crossJoin(broadcast(rate))
       .withColumn("sc",
         (sqrt(col("deg") * sqrt(col("deg"))) /
           when(col("label") === 1, col("fr")).otherwise(lit(1.0) - col("fr")))
-          .cast("decimal(28,10)"))
-      .persist()
+          .cast("decimal(28,10)")))
     val total = scored.agg(sum(col("sc")).as("tot"))
     scored.crossJoin(broadcast(total))
       .select(col("c_custkey"), col("label"), col("deg"),
@@ -625,22 +627,22 @@ object Graph {
     // suppliers are the labeled node domain of the relation graphs
     // (dst side); absent nodes clamp to degree 1 like the reference's
     // in_degrees().clamp(min=1)
-    val joined = Tables.supplier(spark, dir)
+    // feeds the rate agg and the scored projection
+    val joined = Release.cache(Tables.supplier(spark, dir)
       .filter(Exact.lcgTrain80("s_suppkey"))
       .select(col("s_suppkey"),
         (col("s_acctbal") < 0).cast("int").as("label"))
       .join(deg, col("s_suppkey") === col("node"), "left")
       .select(col("s_suppkey"), col("label"),
-        greatest(coalesce(col("total_deg"), lit(1L)), lit(1L)).as("deg"))
-      .cache() // feeds the rate agg and the scored projection
+        greatest(coalesce(col("total_deg"), lit(1L)), lit(1L)).as("deg")))
     val rate = joined.agg((sum(col("label")) * lit(1.0) / count(lit(1))).as("fr"))
-    val scored = joined.crossJoin(broadcast(rate))
+    // dual consumer: normalizer agg + final projection
+    val scored = Release.cache(joined.crossJoin(broadcast(rate))
       .withColumn("sc",
         (sqrt(col("deg") * sqrt(col("deg"))) /
           when(col("label") === 1, sqrt(col("fr")))
             .otherwise(lit(1.0) - sqrt(col("fr"))))
-          .cast("decimal(28,10)"))
-      .persist() // dual consumer: normalizer agg + final projection
+          .cast("decimal(28,10)")))
     val total = scored.agg(sum(col("sc")).as("tot"))
     scored.crossJoin(broadcast(total))
       .select(col("s_suppkey"), col("label"), col("deg"),
@@ -668,7 +670,7 @@ object Graph {
     * table scales with the same cardinality as inDeg, so it goes
     * through the SAME gate. */
   private def trainEdgeBase(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).cache() // degree aggs + the edge join itself
+    val e = Release.cache(edges(spark, dir)) // degree aggs + the edge join itself
     val custBound = Tables.cachedRowCount(spark, dir, "customer")
     val suppBound = Tables.cachedRowCount(spark, dir, "supplier")
     def gated(df: DataFrame, bound: Long): DataFrame =
@@ -708,12 +710,11 @@ object Graph {
   /** q46's probability frame without the presentation orderBy (q89's
     * input — the sort would be thrown away by the sampling window). */
   private def q46ProbsU(spark: SparkSession, dir: String): DataFrame = {
-    val scored = trainEdgeBase(spark, dir)
+    // dual consumer (normalizer agg + final projection): persist, or
+    // the 4-way join above runs twice
+    val scored = Release.cache(trainEdgeBase(spark, dir)
       .withColumn("sc", col("base").cast("decimal(28,10)"))
-      .drop("base")
-      // dual consumer (normalizer agg + final projection): persist, or
-      // the 4-way join above runs twice
-      .persist()
+      .drop("base"))
     normalizeProbU(scored)
   }
 
@@ -733,21 +734,21 @@ object Graph {
     * operation-for-operation identically in the oracle, so the
     * per-edge doubles are bit-equal before DECIMAL quantization. */
   def q65EdgeClassBalancedProb(spark: SparkSession, dir: String): DataFrame = {
-    val base = trainEdgeBase(spark, dir)
-      .persist() // class-count agg + scored projection
+    // class-count agg + scored projection
+    val base = Release.cache(trainEdgeBase(spark, dir))
     val counts = base.agg(
       sum(when(col("edge_class") === 0, 1L).otherwise(0L)).as("y01"),
       sum(when(col("edge_class") === 1, 1L).otherwise(0L)).as("t11"),
       sum(when(col("edge_class") === 2, 1L).otherwise(0L)).as("t00"))
-    val scored = base.crossJoin(broadcast(counts))
+    // normalizer agg + final projection
+    val scored = Release.cache(base.crossJoin(broadcast(counts))
       .withColumn("den",
         sqrt(col("y01")) + sqrt(col("t11")) + sqrt(col("t00")))
       .withColumn("rate",
         when(col("edge_class") === 0, sqrt(col("y01")))
           .when(col("edge_class") === 1, sqrt(col("t11")))
           .otherwise(sqrt(col("t00"))) / col("den"))
-      .withColumn("sc", (col("base") / col("rate")).cast("decimal(28,10)"))
-      .persist() // normalizer agg + final projection
+      .withColumn("sc", (col("base") / col("rate")).cast("decimal(28,10)")))
     normalizeProb(scored)
   }
 
@@ -851,15 +852,14 @@ object Graph {
   private[ops] def gcnRounds(spark: SparkSession, dir: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = undFrom(factBase(spark, dir).select(col("src"), col("dst")))
-      .cache() // degree agg + one message join per round
+    // degree agg + one message join per round
+    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
     // deg is re-executed once PER di/dj broadcast build PER round
     // execution (broadcast-exchange reuse only holds within one query
     // execution, and every round's eager checkpoint is its own
     // execution) — cache the node-sized table so each rebuild scans it
     // instead of re-aggregating the full edge cache
-    val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-      .cache()
+    val deg = Release.cache(und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d")))
     val bound = nodeBound(spark, dir) // memoized footer counts, no per-call jobs
     def gated(df: DataFrame): DataFrame =
       if (bound <= broadcastNodeLimit) broadcast(df) else df
@@ -874,8 +874,8 @@ object Graph {
     // cache would be pure build overhead, so it keeps the direct joins.
     val undW =
       if (rounds >= 2)
-        und.join(di, "src").join(dj, "dst")
-          .select(col("src"), col("dst"), norm.as("norm"), col("dj")).cache()
+        Release.cache(und.join(di, "src").join(dj, "dst")
+          .select(col("src"), col("dst"), norm.as("norm"), col("dj")))
       else und.join(di, "src").join(dj, "dst")
         .select(col("src"), col("dst"), norm.as("norm"), col("dj"))
     def propagate(hDeg: Column, hCnt: Column, prev: Option[DataFrame]): DataFrame =
@@ -892,7 +892,7 @@ object Graph {
     for (_ <- 2 to rounds) {
       // node-sized: checkpoint to cut lineage, then the same gate as
       // the degree tables (it has exactly their cardinality)
-      val prev = gated(h.localCheckpoint(true)
+      val prev = gated(Release.checkpoint(h)
         .select(col("node").as("dst"),
           col("h_deg").as("p_deg"), col("h_cnt").as("p_cnt")))
       h = propagate(col("p_deg"), col("p_cnt"), Some(prev))
@@ -945,16 +945,16 @@ object Graph {
   private[graft] def q88Core(spark: SparkSession, dir: String): DataFrame = {
     // dedup-first (undFrom's discipline, keyed by rel): distinct
     // directed triples, THEN symmetrize and re-dedup the doubled set
-    val und = relEdges(spark, dir)
+    // degree agg + message join
+    val und = Release.cache(relEdges(spark, dir)
       .select(col("rel"), explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
       .select(col("rel"), col("p.src"), col("p.dst"))
-      .distinct()
-      .cache() // degree agg + message join
-    val deg = und.groupBy(col("rel"), col("src").as("n"))
-      .agg(count(lit(1)).as("d"))
-      .cache() // di + dj + h0 all derive from it
+      .distinct())
+    // di + dj + h0 all derive from it
+    val deg = Release.cache(und.groupBy(col("rel"), col("src").as("n"))
+      .agg(count(lit(1)).as("d")))
     // h⁰: total symmetrized degree across the three relation graphs
     val h0 = deg.groupBy(col("n").as("node")).agg(sum(col("d")).as("h0"))
     val bound = nodeBound(spark, dir)
@@ -1041,8 +1041,8 @@ object Graph {
     * degree sides are node-sized and broadcast-gated, one
     * co-partitioned join + one map-side-combined aggregation. */
   def q86AttentionPropagate(spark: SparkSession, dir: String): DataFrame = {
-    val und = undFrom(factBase(spark, dir).select(col("src"), col("dst")))
-      .cache() // degree agg + the message join
+    // degree agg + the message join
+    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
     val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val gate = nodeGate(spark, dir)
     val di = gate(deg.select(col("n").as("src"), col("d").as("di")))
@@ -1111,8 +1111,8 @@ object Graph {
     * node-sized rank table (localCheckpointed, broadcast-gated) + one
     * map-side-combined aggregation. */
   def q73PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val und = undFrom(factBase(spark, dir).select(col("src"), col("dst")))
-      .cache() // normalizer agg + one message join per round
+    // normalizer agg + one message join per round
+    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
     // uniform transitions: w ≡ 1, so Σw per src is the plain degree and
     // prs·1/d is bit-identical to the oracle's rs/d (·1.0 is IEEE-exact)
     pagerankLoop(und.withColumn("w", lit(1L)), nodeGate(spark, dir))
@@ -1130,14 +1130,13 @@ object Graph {
     // the E directed pairs down to E′ weighted rows, then symmetrize
     // and SUM the doubled copy — w(a,b) = cnt(a→b) + cnt(b→a) exactly
     // as the one-pass count over the symmetrized raw stream produced
-    val adj = factBase(spark, dir).select(col("src"), col("dst"))
+    val adj = Release.cache(factBase(spark, dir).select(col("src"), col("dst"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
       .select(explode(array(
         struct(col("src"), col("dst"), col("w")),
         struct(col("dst").as("src"), col("src").as("dst"), col("w")))).as("e"))
       .select(col("e.src"), col("e.dst"), col("e.w"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .cache()
+      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
     pagerankLoop(adj, nodeGate(spark, dir)).orderBy(col("node"))
   }
 
@@ -1152,8 +1151,8 @@ object Graph {
     * its supplier label. TRAIN fold only on BOTH endpoints (q18's LCG
     * split — the inference literals must never see held-out labels). */
   private[graft] def q86GateFitBase(spark: SparkSession, dir: String): DataFrame = {
-    val und = undFrom(factBase(spark, dir).select(col("src"), col("dst")))
-      .cache() // degree agg + the edge join
+    // degree agg + the edge join
+    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
     val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val lab = Tables.customer(spark, dir).select(col("c_custkey").as("n"),
         (col("c_acctbal") < 0).cast("int").as("clab"))
@@ -1191,9 +1190,9 @@ object Graph {
     // checkpoint is its own execution, so exchange reuse never crosses
     // rounds), r0, nn and the final join — cache the node-sized table
     // or the full-edge aggregation reruns ~5× per query (measured:
-    // ~1.2 s per rerun at sf0.1, ProfileQ73)
-    val ws = adj.groupBy(col("src").as("n")).agg(sum(col("w")).as("ws"))
-      .cache()
+    // ~1.2 s per rerun at sf0.1, by the ProfileQ73 probe, since
+    // removed; see git history)
+    val ws = Release.cache(adj.groupBy(col("src").as("n")).agg(sum(col("w")).as("ws")))
     val nn = ws.agg(count(lit(1)).as("nn"))
     val wsS = gated(ws.select(col("n").as("src"), col("ws")))
     // Σw folded into the edge cache ONCE (w and ws stay separate
@@ -1201,12 +1200,12 @@ object Graph {
     // change the IEEE op order): every round's join then touches only
     // the node-sized checkpointed rank table; past the broadcast gate
     // this removes one edge-set sort-merge join per round (guide §2.4).
-    val adjW = adj.join(wsS, "src")
-      .select(col("src"), col("dst"), col("w"), col("ws")).cache()
+    val adjW = Release.cache(adj.join(wsS, "src")
+      .select(col("src"), col("dst"), col("w"), col("ws")))
     var rs = ws.select(col("n"), lit(1.0).as("rs"))
     for (_ <- 1 to pagerankRounds) {
       // node-sized: checkpoint cuts round k−1's plan out of round k
-      val prev = gated(rs.localCheckpoint(true)
+      val prev = gated(Release.checkpoint(rs)
         .select(col("n").as("src"), col("rs").as("prs")))
       rs = adjW.join(prev, "src")
         .select(col("dst"),
@@ -1260,8 +1259,8 @@ object Graph {
     *
     * Scale: per round one map-side-combined degree agg + two semi-joins
     * against the (node-sized, broadcast-gated) survivor list; the edge
-    * set only shrinks, each round's restriction persists and the
-    * previous round's unpersists, and the fixpoint early-exit stops
+    * set only shrinks, each round's restriction is checkpointed and the
+    * previous round's is dropped, and the fixpoint early-exit stops
     * paying for rounds the data doesn't need. */
   def q75KCore(spark: SparkSession, dir: String): DataFrame = {
     val und = undFrom(factBase(spark, dir).select(col("src"), col("dst")))
@@ -1285,15 +1284,18 @@ object Graph {
   private[graft] def kcorePeel(und: DataFrame, k: Int, rounds: Int,
       nodeBoundHint: Long = -1L): DataFrame = {
     val broadcastNodeLimit = 50L * 1000 * 1000
-    var e = und.persist()
+    // every edge set is an eager checkpoint, a plan leaf: round k plans
+    // only its own operators and its lineage reads no earlier round, and
+    // no cache of the caller's `und` plan is touched
+    var e = Release.checkpoint(und)
     var prevEdges = e.count()
     var round = 0
     var stable = false
     while (round < rounds && !stable) {
       round += 1
-      val keep = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("n"))
-        .localCheckpoint(true) // node-sized, eager: cuts per-round lineage
+      // node-sized, eager: cuts per-round lineage
+      val keep = Release.checkpoint(e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
+        .filter(col("d") >= k).select(col("n")))
       // survivors only shrink, so a caller-supplied node bound gates
       // every round with zero jobs (parquet footers — the CC-gate
       // discipline); synthetic-graph callers keep the count fallback
@@ -1301,26 +1303,20 @@ object Graph {
         if ((if (nodeBoundHint >= 0L) nodeBoundHint else keep.count()) <=
             broadcastNodeLimit) broadcast(keep)
         else keep
-      val e2 = e
+      val e2 = Release.checkpoint(e
         .join(kb.select(col("n").as("src")), Seq("src"), "leftsemi")
         .join(kb.select(col("n").as("dst")), Seq("dst"), "leftsemi")
-        .select(col("src"), col("dst"))
-        .persist()
+        .select(col("src"), col("dst")))
       val edges = e2.count()
-      e.unpersist()
       e = e2
       // e_i == e_{i-1} ⇒ every later round is a no-op: the bounded
       // result equals the converged k-core and the loop can stop
       stable = edges == prevEdges
       prevEdges = edges
     }
-    // materialize the node-sized result BEFORE dropping the edge cache:
-    // the returned frame is lazy, and unpersisting first would force the
-    // caller's collect to recompute the whole peel chain uncached
-    val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    e.unpersist()
-    out
+    // the node-sized result, materialized: the caller reads a leaf, not
+    // the peel chain
+    Release.checkpoint(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")))
   }
 
   /** The q80 oracle: q73's unroll with line-count transition weights —

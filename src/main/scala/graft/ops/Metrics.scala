@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -111,7 +111,7 @@ object Metrics {
     val g = sc
       .groupBy(col("score"))
       .agg(count(lit(1)).as("cnt"), sum(col("y")).cast("long").as("pos"))
-    val bk = Ranking.withRangeBucket(g, "score", descending = false).persist()
+    val bk = Release.cache(Ranking.withRangeBucket(g, "score", descending = false))
     val off = Ranking.exclusiveOffsets(bk, Map("cum" -> sum(col("cnt"))))
     val w = Window.partitionBy(col("_b")).orderBy(col("score"))
     val r = bk
@@ -149,8 +149,7 @@ object Metrics {
     // (descending-monotone), window PARTITIONED by bucket, add the
     // bucket's exclusive row/positive offsets — bit-identical to the
     // single-partition window it replaces (see Ranking).
-    val bk = Ranking.withRangeBucket(sc, "score", descending = true)
-      .persist()
+    val bk = Release.cache(Ranking.withRangeBucket(sc, "score", descending = true))
     val off = Ranking.exclusiveOffsets(bk, Map(
       "rows" -> count(lit(1)), "pos" -> sum(col("y")).cast("long")))
     val w = Window.partitionBy(col("_b")).orderBy(col("score").desc, col(idCol))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -309,9 +309,9 @@ object Relational {
         col("l_orderkey"), col("l_linenumber"))
     // 256 buckets × |flags| partitions is already ≫ any executor count;
     // the smaller offset map keeps the per-row element_at probe cheap
-    val bk = Ranking.withRangeBucket(base, "l_extendedprice", descending = false,
-        buckets = 256)
-      .persist() // offsets agg + totals agg + the ranked projection
+    // offsets agg + totals agg + the ranked projection
+    val bk = Release.cache(Ranking.withRangeBucket(base, "l_extendedprice", descending = false,
+        buckets = 256))
     val off = Ranking.exclusiveOffsetsBy(bk, "l_returnflag",
       Map("rows" -> count(lit(1))))
     val w = Window.partitionBy(col("l_returnflag"), col("_b"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Release, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -85,7 +85,7 @@ object Text {
     val maxDf = q31MaxDf
     // Cached: the shingling is the expensive part and feeds both the df
     // aggregation and the semi-join below.
-    val sh = shingled(spark, dir).cache()
+    val sh = Release.cache(shingled(spark, dir))
     // Document frequency via hash aggregation + an ANTI-join against the
     // hot-shingle list — NOT `count(*) OVER (PARTITION BY shingle)`,
     // which sort-shuffles the entire posting list just to drop the hot
@@ -102,9 +102,9 @@ object Text {
     val hot = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
       .select(col("shingle"))
-    sh.join(hot, Seq("shingle"), "left_anti")
-      .select(col("doc_id"), col("shingle"))
-      .cache() // feeds sizing + the posting-list aggregation
+    // the cache feeds sizing + the posting-list aggregation
+    Release.cache(sh.join(hot, Seq("shingle"), "left_anti")
+      .select(col("doc_id"), col("shingle")))
   }
 
   /** q31's unordered candidate-pair frame (id1, id2, inter) over an

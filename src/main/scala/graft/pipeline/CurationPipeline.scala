@@ -53,8 +53,15 @@ import org.apache.spark.sql.functions._
   * stage completion. [[graft.Release.checkpoint]] also frees the
   * broadcast relations each gate's query built (16 MB per gate at 500
   * docs), so the heap a call leaves behind does not depend on GC
-  * timing. The report row is collected once and returned as
-  * a driver-local frame, so reading `stats` never runs a job.
+  * timing.
+  *
+  * The call owns what it materializes: `run` is one
+  * [[graft.Release.scope]], which on return releases every cache the
+  * ops made and every gate hand-off checkpoint but the leaves of the
+  * returned `keeplist`, `clean` and `plan`, so back-to-back calls leave
+  * the session as they found it. The report row is collected once and
+  * returned as a driver-local frame, so reading `stats` never runs a
+  * job.
   *
   * Trade: checkpoint blocks live only on the executors that wrote
   * them, so a lost executor fails the run instead of recomputing the
@@ -73,7 +80,7 @@ object CurationPipeline {
       dupRatioCap: Option[Double] = None,
       retrievalSeed: Option[Seq[String]] = None,
       retrievalTopK: Int = 1000,
-      mixBudget: Option[Double] = None): Result = {
+      mixBudget: Option[Double] = None): Result = Release.scope {
     // 1. the q57 keep-list: survivors of the language, quality,
     //    exact-dedup and near-dup gates, with per-doc token counts
     val kept = Release.checkpoint(ops.Corpus.q57Kept(spark, dir))
@@ -221,8 +228,6 @@ object CurationPipeline {
           .otherwise(lit(0.0)))
     // Collect the report row once and hand it back as a driver-local
     // frame: reading it never schedules a job or re-plans a stage.
-    // Intermediate checkpoints need no unpersist — the ContextCleaner
-    // frees their blocks once the frames are unreferenced.
     val statsOut = spark.createDataFrame(
       java.util.List.of(stats.head()), stats.schema)
     Result(kept, clean, plan, statsOut)

@@ -325,8 +325,12 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val lm = scores(ops.Corpus.q68LmQuality(spark, sf), "avg_logp")
     val ds = scores(ops.Corpus.q71DsirWeight(spark, sf), "log_w")
     val dup = scores(ops.Corpus.q78DupSpans(spark, sf), "dup_ratio")
+    // each call leaves no cache entry and no persisted RDD but the
+    // checkpoint leaves of the Results still alive
+    val (e0, p0) = (cacheEntries, persistedRdds)
     val base = pipeline.CurationPipeline.run(spark, sf,
       buckets = 4, lakePrefix = "curation_all")
+    assertSessionAsFound(e0, p0, base)
     val baseKept = base.keeplist.select("doc_id").collect().map(_.getLong(0))
     val baseClean = base.clean.count()
     // quartile thresholds over the ungated keep-list: each score gate
@@ -348,6 +352,7 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
 
     val r = call()
+    assertSessionAsFound(e0, p0, base, r)
     val s = r.stats.head()
     val drops = Seq("n_lm_dropped", "n_dsir_dropped", "n_dup_dropped",
       "n_decon_dropped", "n_retr_dropped", "n_mix_dropped")
@@ -362,7 +367,9 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(spark.table("curation_all_chunks").count() == nFinal)
 
     // back to back in the same session: the same report, row for row
-    assert(call().stats.head() == s)
+    val again = call()
+    assertSessionAsFound(e0, p0, base, r, again)
+    assert(again.stats.head() == s)
     assert(spark.table("curation_all_keeplist").count() == nFinal)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import graft.ops.Features
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types._
 
 class FeaturesSpec extends SparkSpec {
 
@@ -492,17 +494,20 @@ class FeaturesSpec extends SparkSpec {
     Q90Ref.cell(x, h, c)
 
   private def q90Tensor(rows: Seq[(Long, Int, Long, Long, Double)]) = {
-    // (user, scale, bucket, n_events, mean_val); other slots constant
-    rows.map { case (u, s, b, n, m) =>
-      val slots = Features.q87FeatureAttn.map {
-        case ("n_events", _) => lit(n).as("n_events")
-        case ("mean_val", _) => lit(m).as("mean_val")
-        case (c, _) => lit(0.125).as(c)
-      }
-      spark.range(1).select(
-        lit(u).as("user_id") +: lit(s).as("scale") +: lit(b).as("bucket") +:
-          slots: _*)
-    }.reduce(_ unionByName _)
+    // (user, scale, bucket, n_events, mean_val); other slots constant.
+    // One local frame: a union of one-row frames would plan and run one
+    // partition per row
+    val slots = Features.q87FeatureAttn.map(_._1)
+    val schema = StructType(Seq(StructField("user_id", LongType, false),
+        StructField("scale", IntegerType, false), StructField("bucket", LongType, false)) ++
+      slots.map(c => StructField(c, if (c == "n_events") LongType else DoubleType, false)))
+    spark.createDataFrame(java.util.List.of(rows.map { case (u, s, b, n, m) =>
+      Row.fromSeq(Seq[Any](u, s, b) ++ slots.map {
+        case "n_events" => n
+        case "mean_val" => m
+        case _ => 0.125
+      })
+    }: _*), schema)
   }
 
   private def q90RefX(n: Long, m: Double): Double = Q90Ref.x(n, m)

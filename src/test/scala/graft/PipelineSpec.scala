@@ -260,8 +260,13 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("pipeline split is reproducible") {
+    // each call leaves no cache entry and no persisted RDD but the
+    // checkpoint leaves of the Results still alive
+    val (e0, p0) = (cacheEntries, persistedRdds)
     val ra = pipeline.FraudPipeline.run(spark, sf)
+    assertSessionAsFound(e0, p0, ra)
     val rb = pipeline.FraudPipeline.run(spark, sf)
+    assertSessionAsFound(e0, p0, ra, rb)
     val a = ra.scored.select("user_id").collect().map(_.getLong(0)).sorted.toSeq
     val b = rb.scored.select("user_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(a == b)
