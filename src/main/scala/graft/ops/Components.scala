@@ -39,12 +39,7 @@ object Components {
     // edge build — e.g. q47's LSN self-join — once per branch; exchange
     // reuse cannot dedupe the two branches because their projections
     // differ).
-    val sym0 = Release.cache(edges
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
-      .distinct())
+    val sym0 = Release.cache(Graph.symmetrized(edges).distinct())
     // Round 0 fused into initialization: with identity starting labels,
     // the first neighbor-min pass is just min(dst) per src (and the
     // pointer jump is the identity), so labels₀ = least(node, min nbr)
@@ -65,10 +60,9 @@ object Components {
     // gate fall back to the shuffle plan, pre-partitioning the edge
     // cache on the join key so only the node-sized label table moves
     // per round.
-    val small =
-      (if (nodeBoundHint >= 0L) nodeBoundHint else labels.count()) <=
-        50L * 1000 * 1000
-    val gate: DataFrame => DataFrame = df => if (small) broadcast(df) else df
+    val bound = if (nodeBoundHint >= 0L) nodeBoundHint else labels.count()
+    val small = Graph.broadcastable(bound)
+    val gate = Graph.gate(bound)
     val sym =
       if (small) sym0
       else {
@@ -241,11 +235,7 @@ object Components {
     // gate as q22 (LSN nodes ⊆ customers); past it, the shuffle join
     // falls under AQE's skew-join splitting, which a window never gets.
     val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("comp_size"))
-    val sizeSide =
-      if (graft.Tables.cachedRowCount(spark, dir, "customer") <= Graph.broadcastNodeLimit)
-        broadcast(sizes)
-      else sizes
-    labels.join(sizeSide, "comp")
+    labels.join(Graph.gate(Tables.cachedRowCount(spark, dir, "customer"))(sizes), "comp")
       .select(col("node"), col("comp"), col("comp_size"))
       .orderBy(col("comp"), col("node"))
   }

@@ -17,11 +17,15 @@ import org.apache.spark.sql.types.DecimalType
 object Exact {
   private val dec = DecimalType(18, 2)
 
-  /** Order-independent sum of a column holding exact 2-dp decimals. */
-  def dsum(c: Column): Column = sum(c.cast(dec)).cast("double")
+  /** Order-independent sum of a column holding exact `scale`-dp
+    * decimals (2 dp for the raw fact columns, 6 dp for values already
+    * quantized by [[r]]). */
+  def dsum(c: Column, scale: Int = 2): Column =
+    sum(c.cast(DecimalType(18, scale))).cast("double")
 
-  /** sum/count instead of avg() — avg accumulators are engine-specific. */
-  def davg(c: Column): Column = dsum(c) / count(c)
+  /** sum/count instead of avg() — avg accumulators are engine-specific
+    * and order-dependent. */
+  def davg(c: Column, scale: Int = 2): Column = dsum(c, scale) / count(c)
 
   /** Population variance via exact decimal sums: (Σx² − (Σx)²/n)/n,
     * clamped at 0 against cancellation producing −0.0. */

@@ -22,13 +22,8 @@ object Features {
   /** q85's cache gate: the narrow events projection is cached only while
     * the table is at most this many rows (parquet-footer count — the q63
     * discipline; past it, each consumer re-scans instead of spilling a
-    * corpus-sized cache). ~100M × 6 narrow columns ≈ a few GB resident.
-    * Conf-overridable so the spec can pin the ungated (recompute) branch
-    * on small data; production never sets the key. */
-  private[graft] val q85CacheEventLimitDefault = 100L * 1000 * 1000
-  private[graft] def q85CacheEventLimit(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.q85.cacheEventLimit")
-      .map(_.toLong).getOrElse(q85CacheEventLimitDefault)
+    * corpus-sized cache). ~100M × 6 narrow columns ≈ a few GB resident. */
+  private[graft] val q85CacheEventLimit = 100L * 1000 * 1000
 
   /** q10: per-user mean/variance of `value` at multiple time scales
     * (1/2/3/4-week buckets, `for scale in range(1, 5)` —
@@ -314,9 +309,9 @@ object Features {
     val undAll = Release.cache(Graph.undWithHot(Graph.factBase(spark, dir)))
     val nad = Graph.q22FromUnd(spark, dir, undAll.select(col("src"), col("dst")))
       .select(col("node").as("user_id"), col("nbr_avg_deg"))
-    val cc = Graph.q23FromUnd(undAll
+    val cc = Graph.q23FromUndKeyed(undAll
         .filter(col("hot") === 1 && col("src") =!= col("dst"))
-        .select(col("src"), col("dst")))
+        .select(col("src"), col("dst")), Nil)
       .select(col("node").as("user_id"), col("clustering"))
     base
       .join(sd, Seq("user_id"), "left")
@@ -524,7 +519,7 @@ object Features {
     q85CoreFromEv(q85Ev(spark, dir), q85CcIntersect(spark, dir))
 
   /** Density gate for the keyed triangle core's spelling (see
-    * [[Graph.q23FromUndKeyedIntersect]]): below this many events the
+    * [[Graph.q23FromUndKeyed]]): below this many events the
     * candidate-pair join wins (stage-overhead-bound); at/above it the
     * adjacency-intersection wins (shuffle-volume-bound). Measured
     * crossover between 100k events (sf0.1: join ~15 % faster) and 1M
@@ -544,10 +539,12 @@ object Features {
     * 1×-corpus narrow projection. Cache only while events is modest —
     * parquet-footer count, statistics-only, the q63 discipline: past
     * the bound, one extra scan per consumer beats a corpus-sized cache
-    * spill-thrashing the executors at 100 TB. */
-  private[graft] def q85Ev(spark: SparkSession, dir: String): DataFrame = {
+    * spill-thrashing the executors at 100 TB. `cacheEventLimit` lets the
+    * spec pin the uncached branch on small data. */
+  private[graft] def q85Ev(spark: SparkSession, dir: String,
+      cacheEventLimit: Long = q85CacheEventLimit): DataFrame = {
     val evBase = q85EvBase(spark, dir)
-    if (Tables.cachedRowCount(spark, dir, "events") <= q85CacheEventLimit(spark))
+    if (Tables.cachedRowCount(spark, dir, "events") <= cacheEventLimit)
       Release.cache(evBase)
     else evBase
   }
@@ -575,7 +572,7 @@ object Features {
     // join — three exchanges of the slice edge set gone. No new skew:
     // the cap window already funnels each (keys, src) adjacency into
     // one partition; this just establishes that distribution once.
-    val und = Release.cache(Graph.symmetrizedKeyed(e0, keys)
+    val und = Release.cache(Graph.symmetrized(e0, keys)
       .repartition(col("scale"), col("bucket"), col("src"))
       .dropDuplicates())
     val nad = Graph.q22FromUndKeyed(und, keys)
@@ -583,8 +580,7 @@ object Features {
     // triangle spelling by density (the footer gate above): pair join
     // below the crossover, adjacency-array intersection at/above it
     val ccUnd = und.filter(col("src") =!= col("dst"))
-    val cc = (if (ccIntersect) Graph.q23FromUndKeyedIntersect(ccUnd, keys)
-              else Graph.q23FromUndKeyed(ccUnd, keys))
+    val cc = Graph.q23FromUndKeyed(ccUnd, keys, intersect = ccIntersect)
       .select(col("scale"), col("bucket"), col("node"), col("clustering"))
     val jk = Seq("user_id", "scale", "bucket")
     act
@@ -931,11 +927,6 @@ object Features {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The q87 oracle: q85's body as a CTE, then the attention math
-    * spelled op-for-op (dyadic literals to DOUBLE, the same
-    * left-associated term order as [[q87FeatureAttn]], tanh and e^s
-    * quantized at 6dp, DECIMAL(18,6) denominator, DECIMAL(28,12)
-    * messages). */
   /** DuckDB spelling of q87's feature-attention dot product — the same
     * left-associated term order as [[q87FeatureAttn]]; shared by the
     * q87 and q90 oracles. */
@@ -947,6 +938,11 @@ object Features {
       .mkString(" + ")
   }
 
+  /** The q87 oracle: q85's body as a CTE, then the attention math
+    * spelled op-for-op (dyadic literals to DOUBLE, the same
+    * left-associated term order as [[q87FeatureAttn]], tanh and e^s
+    * quantized at 6dp, DECIMAL(18,6) denominator, DECIMAL(28,12)
+    * messages). */
   private def q87OracleSql: String = {
     def w(d: Double): String = new java.math.BigDecimal(d).toPlainString
     val pSql = q87PooledSql

@@ -130,7 +130,7 @@ object Fused {
     * [[graft.DualFit]] collects exactly the edges the served query
     * propagates over. */
   private[graft] def q94Und(spark: SparkSession, dir: String): DataFrame =
-    Graph.undFrom(Graph.factBase(spark, dir).select(col("src"), col("dst")))
+    Graph.undFrom(Graph.edgesFrom(Graph.factBase(spark, dir)))
 
   /** The per-node input vector `final` (layers.py:57-59 concat):
     * f1..f8 = trained H=2 LSTM finals (q92) pivoted across the four
@@ -141,7 +141,7 @@ object Fused {
     * persons missing from a slice (data_process.py's reindex). `nodes`
     * fixes the node domain (one row per graph node, column `node`);
     * both feature sides are node-sized, so `gated` broadcast-gates
-    * them under the shared [[Graph.nodeBound]] rule. */
+    * them under the shared [[Graph.nodeGate]] rule. */
   private[graft] def q94Feat(spark: SparkSession, dir: String,
       nodes: DataFrame, gated: DataFrame => DataFrame): DataFrame = {
     // ONE events pass for both feature sides: the LSTM tensor reads the
@@ -205,9 +205,7 @@ object Fused {
     // without this the full-edge degree agg reruns ~6× per query (the
     // gcnRounds/pagerankLoop lesson, OPTIMIZATION_r11.md)
     val deg = Release.cache(und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d")))
-    val bound = Graph.nodeBound(spark, dir)
-    def gated(df: DataFrame): DataFrame =
-      if (bound <= Graph.broadcastNodeLimit) broadcast(df) else df
+    val gated = Graph.nodeGate(spark, dir)
     val di = gated(deg.select(col("n").as("src"), col("d").as("di")))
     val dj = gated(deg.select(col("n").as("dst"), col("d").as("dj")))
     val feat = q94Feat(spark, dir, deg.select(col("n").as("node")), gated)
@@ -350,14 +348,11 @@ object Fused {
     * sides/checkpoint discipline are gcnRounds'. */
   def q95DualChannelPropagate(spark: SparkSession, dir: String): DataFrame = {
     // degree agg + two message joins
-    val und = Release.cache(
-      Graph.undFrom(Graph.factBase(spark, dir).select(col("src"), col("dst"))))
+    val und = Release.cache(q94Und(spark, dir))
     // cached: di/dj/r1 rebuild per checkpointed round execution (the
     // gcnRounds/pagerankLoop lesson, OPTIMIZATION_r11.md)
     val deg = Release.cache(und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d")))
-    val bound = Graph.nodeBound(spark, dir)
-    def gated(df: DataFrame): DataFrame =
-      if (bound <= Graph.broadcastNodeLimit) broadcast(df) else df
+    val gated = Graph.nodeGate(spark, dir)
     val di = gated(deg.select(col("n").as("src"), col("d").as("di")))
     val dj = gated(deg.select(col("n").as("dst"), col("d").as("dj")))
     val norm = (lit(1.0) / sqrt(col("di"))) * (lit(1.0) / sqrt(col("dj")))

@@ -22,6 +22,17 @@ import org.apache.spark.sql.expressions.Window
   * LSH/triangle literature, so no single celebrity vertex can blow up
   * a stage; linear ops (q20/q22/q24/q25) are single shuffles keyed
   * on the vertex id with map-side partial aggregation.
+  *
+  * Shared primitives: each has one definition, and the static
+  * (unkeyed) operators call the keyed cores with `keys = Nil`; a
+  * presentation `orderBy` appears only in the public `qNN` op.
+  *  - [[factBase]]: the one `orders ⋈ lineitem` edge join;
+  *  - [[symmetrized]]: both edge directions, optionally keyed;
+  *  - [[capPerKeys]]: the hub adjacency cap;
+  *  - [[q20DegreesKeyed]]: the in/out degree core;
+  *  - [[q23FromUndKeyed]]: the triangle/clustering core, in its
+  *    pair-join and adjacency-intersection spellings;
+  *  - [[gate]] over [[broadcastable]]: the node-count broadcast gate.
   */
 object Graph {
 
@@ -32,7 +43,9 @@ object Graph {
     * instead of once per operator. Standalone q23 filters it through
     * [[hotEdgesFrom]] — the l_quantity predicate still pushes through
     * the join into the lineitem parquet scan (Catalyst one-side
-    * pushdown), so carrying the column costs nothing when filtered.
+    * pushdown), so carrying the column costs nothing when filtered;
+    * column pruning drops `l_quantity` and `o_orderpriority` from
+    * every plan that does not read them.
     *
     * SHARED-ID CONVENTION (applies to every operator built on this
     * base: q20–q23, q47, q66/q67, q73/q75/q80, q86): customer keys
@@ -48,22 +61,31 @@ object Graph {
     Tables.orders(spark, dir)
       .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"),
-        col("l_quantity"))
+        col("l_quantity"), col("o_orderpriority"))
 
-  /** Node-count broadcast gate shared by every graph operator that
-    * broadcasts a node-sized side (degree tables, rank tables, label
-    * tables): a per-node broadcast is a driver killer past ~50M nodes,
-    * so the hint is size-GATED on an UPPER BOUND of the node count read
-    * from the dimension tables' parquet footers (count(*) over parquet
-    * is statistics-only; nodes ⊆ customers ∪ suppliers). The counts are
-    * memoized via [[Tables.cachedRowCount]] — one footer job per
-    * (dir, table) per session, not two fresh jobs per operator call. */
-  private[ops] val broadcastNodeLimit = 50L * 1000 * 1000
+  /** Node-count broadcast gate shared by every operator that broadcasts
+    * a node-sized side (degree tables, rank tables, label tables): a
+    * per-node broadcast is a driver killer past ~50M nodes, so the hint
+    * is size-GATED on an UPPER BOUND of the side's row count. Callers
+    * pass a zero-job bound where they have one — [[nodeBound]] or one
+    * dimension table's footer count — and a row count otherwise. */
+  private val broadcastNodeLimit = 50L * 1000 * 1000
+  private[ops] def broadcastable(rows: Long): Boolean = rows <= broadcastNodeLimit
+  private[ops] def gate(rows: Long): DataFrame => DataFrame =
+    df => if (broadcastable(rows)) broadcast(df) else df
+
+  /** Upper bound of the node count, read from the dimension tables'
+    * parquet footers (count(*) over parquet is statistics-only; nodes ⊆
+    * customers ∪ suppliers). The counts are memoized via
+    * [[Tables.cachedRowCount]] — one footer job per (dir, table) per
+    * session, not two fresh jobs per operator call. */
   private[ops] def nodeBound(spark: SparkSession, dir: String): Long =
     Tables.cachedRowCount(spark, dir, "customer") +
       Tables.cachedRowCount(spark, dir, "supplier")
+  private[ops] def nodeGate(spark: SparkSession, dir: String): DataFrame => DataFrame =
+    gate(nodeBound(spark, dir))
 
-  /** RAW (non-distinct) edge rows: q22On/q23On symmetrize and THEN
+  /** RAW (non-distinct) edge rows: q22/q23 symmetrize and THEN
     * dedup, so a distinct here would be a wasted extra shuffle of the
     * fact rows — symmetrize-raw → one distinct does the same work in
     * one pass. (q20 keeps its own distinct edges(): its conditional
@@ -103,10 +125,7 @@ object Graph {
 
   /** Distinct directed edges (src=customer, dst=supplier). */
   private def edges(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
-      .distinct()
+    edgesFrom(factBase(spark, dir)).distinct()
 
   private[ops] val edgesSql =
     """SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
@@ -117,22 +136,18 @@ object Graph {
     * candidate-pair blowup the same way the reference bounds buildLSN
     * with its common-neighbor threshold k. */
   private def hotEdges(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("l_quantity") >= 45)
-      .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
-      .distinct()
+    hotEdgesFrom(factBase(spark, dir)).distinct()
 
-  /** Both edge directions from one scan: explode duplicates each joined
-    * row into (src,dst) and (dst,src) inside the same stage, so the
-    * symmetrized edge list needs ONE distinct shuffle and never runs
-    * the upstream join twice. */
-  private def symmetrized(joined: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    joined
-      .select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
+  /** Both edge directions from one scan: explode duplicates each
+    * (keys…, src, dst) row into (src,dst) and (dst,src) inside the same
+    * stage, so the symmetrized edge list needs ONE distinct shuffle and
+    * never runs the upstream join twice. `keys` (q85's time slice,
+    * q88's relation) ride through the explode unchanged. */
+  private[graft] def symmetrized(e: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    e.select(keys.map(col) :+ explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"): _*)
+      .select(keys.map(col) :+ col("e.src") :+ col("e.dst"): _*)
 
   /** Distinct undirected pair set from raw directed fact pairs: dedup
     * the DIRECTED pairs first (one E-row shuffle), THEN symmetrize and
@@ -148,7 +163,7 @@ object Graph {
     * (q22/q23/q66/q67/q73/q75/q86); q80 keeps raw multiplicities for
     * its edge weights and q85's keyed build already dedups first. */
   private[graft] def undFrom(e: DataFrame): DataFrame =
-    symmetrized(e.distinct(), "src", "dst").distinct()
+    symmetrized(e.distinct()).distinct()
 
   /** [[undFrom]] with the final dedup spelled repartition(src) +
     * dropDuplicates — the SAME single exchange (hash(src) colocates
@@ -162,7 +177,7 @@ object Graph {
     * [[undFrom]], whose spread (src,dst) layout plus map-side partial
     * aggregation is the more skew-robust shape. */
   private[graft] def undFromBySrc(e: DataFrame): DataFrame =
-    symmetrized(e.distinct(), "src", "dst")
+    symmetrized(e.distinct())
       .repartition(col("src")).dropDuplicates()
 
   private val hotEdgesSql =
@@ -180,12 +195,10 @@ object Graph {
     * on a synthetic hub). */
   private[graft] val adjCap = 256
 
-  private[graft] def capPerKey(e: DataFrame, key: String, ord: String, cap: Int): DataFrame =
-    capPerKeys(e, Seq(key), ord, cap)
-
-  /** [[capPerKey]] with a COMPOSITE partition key — the q85 time-slice
-    * variant caps adjacency per (scale, bucket, src), so each slice's
-    * subgraph gets its own independent hub bound. */
+  /** Keeps the `cap` smallest `ord` values per `keys` group (see
+    * [[adjCap]]). The key may be composite — the q85 time-slice variant
+    * caps adjacency per (scale, bucket, src), so each slice's subgraph
+    * gets its own independent hub bound. */
   private[graft] def capPerKeys(e: DataFrame, keys: Seq[String], ord: String, cap: Int): DataFrame =
     e.withColumn("_rn",
         row_number().over(Window.partitionBy(keys.map(col): _*).orderBy(col(ord))))
@@ -193,28 +206,22 @@ object Graph {
       .drop("_rn")
 
   // ---------------------------------------------------------------------
-  // Keyed generalizations of the q20/q22/q23 cores (SURVEY §2.C grain
-  // note): identical relational shapes with `keys` (e.g. q85's
-  // (scale, bucket) time-slice) prepended to every groupBy / join /
-  // window key. Slicing therefore adds NO new shuffle kinds — the same
-  // degree agg, neighbor join and triangle pairing run co-partitioned on
-  // (keys…, node) instead of (node). Unlike the static cores there is NO
-  // broadcast gate here: the per-slice degree table scales with
-  // slices × nodes (edge-sized in the worst case), so the joins stay
-  // shuffle joins co-partitioned on the full composite key — the right
-  // 100 TB shape for per-window graph tensors.
+  // Keyed q20/q22/q23 cores (SURVEY §2.C grain note): `keys` (e.g.
+  // q85's (scale, bucket) time-slice) prepended to every groupBy / join
+  // / window key, and `keys = Nil` is the static graph. Slicing
+  // therefore adds NO new shuffle kinds — the same degree agg, neighbor
+  // join and triangle pairing run co-partitioned on (keys…, node)
+  // instead of (node). There is NO broadcast gate here: the per-slice
+  // degree table scales with slices × nodes (edge-sized in the worst
+  // case), so the joins stay shuffle joins co-partitioned on the full
+  // composite key — the right 100 TB shape for per-window graph tensors.
   // ---------------------------------------------------------------------
-
-  /** [[symmetrized]] carrying extra slice keys through the explode. */
-  private[graft] def symmetrizedKeyed(e: DataFrame, keys: Seq[String]): DataFrame =
-    e.select(keys.map(col) :+ explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"): _*)
-      .select(keys.map(col) :+ col("e.src") :+ col("e.dst"): _*)
 
   /** q20's conditional-count degree core per (keys…, node), over a
     * DISTINCT directed edge set (so the conditional count IS the
-    * distinct counterpart count, one-phase hash agg). */
+    * distinct counterpart count, one-phase hash agg, no expand/dedup
+    * pass). Exploding both directions from the same scan avoids caching
+    * the edges for a double read. */
   private[ops] def q20DegreesKeyed(e: DataFrame, keys: Seq[String]): DataFrame =
     e.select(keys.map(col) :+ explode(array(
         struct(col("src").as("node"), lit(1).as("dir")),
@@ -253,45 +260,19 @@ object Graph {
 
   /** q23's triangle/clustering core per (keys…, node), over an already
     * symmetrized+deduped, self-loop-free pair set; hub adjacency is
-    * capped per (keys…, src) — see [[adjCap]]. */
-  private[graft] def q23FromUndKeyed(und: DataFrame, keys: Seq[String]): DataFrame = {
-    // three references in the triangle join
-    val canon = Release.cache(
-      capPerKeys(und.filter(col("src") < col("dst")), keys :+ "src", "dst", adjCap))
-    def kEq(a: String, b: String) =
-      keys.map(k => col(s"$a.$k") === col(s"$b.$k")).reduce(_ && _)
-    val tris = canon.as("e1")
-      .join(canon.as("e2"), kEq("e1", "e2") && col("e2.src") === col("e1.dst"))
-      .join(canon.as("e3"), kEq("e1", "e3") &&
-        col("e3.src") === col("e1.src") && col("e3.dst") === col("e2.dst"))
-      .select(keys.map(k => col(s"e1.$k").as(k)) :+
-        col("e1.src").as("a") :+ col("e1.dst").as("b") :+ col("e2.dst").as("c"): _*)
-    // one corner explode — see q23FromUnd: unionAll of three
-    // projections re-runs the uncached double join per branch
-    val perNode = tris
-      .select(keys.map(col) :+
-        explode(array(col("a"), col("b"), col("c"))).as("node"): _*)
-      .groupBy((keys :+ "node").map(col): _*).agg(count(lit(1)).as("t"))
-    und.groupBy(keys.map(col) :+ col("src").as("node"): _*)
-      .agg(count(lit(1)).as("deg"))
-      .join(perNode, keys :+ "node", "left")
-      .select((keys :+ "node").map(col) :+ col("deg") :+
-        coalesce(col("t"), lit(0L)).as("triangles") :+
-        Exact.r(when(col("deg") >= 2,
-            coalesce(col("t"), lit(0L)) * lit(2.0) / (col("deg") * (col("deg") - 1)))
-          .otherwise(lit(0.0)), 6).as("clustering"): _*)
-  }
-
-  /** [[q23FromUndKeyed]] respelled as ADJACENCY-ARRAY INTERSECTION:
-    * per capped canonical edge (a, b), the triangle corners are
-    * array_intersect(N(a), N(b)) over collect_list adjacency arrays —
-    * one groupBy + two array-carrying joins instead of the 3-way
-    * candidate-pair self-join. Exact-equal to the join spelling
-    * (exceptAll 0/0 at sf0.1 AND sf1, measured by the ProfileQ85b probe
-    * since removed, see git history; FeaturesSpec pins it
-    * on the randomized fixture) — canon is DISTINCT so array_intersect
-    * never dedups anything, and the exploded corner multiset is
-    * order-independent.
+    * capped per (keys…, src) — see [[adjCap]] — and `deg` stays the
+    * TRUE degree from the uncapped graph.
+    *
+    * Two spellings of the triangle frame, exact-equal (exceptAll 0/0 at
+    * sf0.1 AND sf1, measured by the ProfileQ85b probe since removed, see
+    * git history; GraphSpec pins it on a randomized graph):
+    *  - the candidate-pair join (default): canonical a<b<c two-hop join
+    *    of the capped canonical edges;
+    *  - `intersect`: ADJACENCY-ARRAY INTERSECTION — per capped canonical
+    *    edge (a, b), the corners are array_intersect(N(a), N(b)) over
+    *    collect_list adjacency arrays, one groupBy + two array-carrying
+    *    joins. canon is DISTINCT so array_intersect never dedups
+    *    anything, and the exploded corner multiset is order-independent.
     *
     * WHEN: the two spellings cross over with slice density — at sf0.1
     * (100k events) the join wins ~15 % (candidate-pair exchanges are
@@ -303,23 +284,40 @@ object Graph {
     * ([[Features.q85CcIntersectMinEvents]]); state stays bounded at any
     * scale — adjacency arrays are ≤ adjCap (256) longs by construction.
     */
-  private[graft] def q23FromUndKeyedIntersect(und: DataFrame, keys: Seq[String]): DataFrame = {
-    // adjacency build + the edge probe read it
+  private[graft] def q23FromUndKeyed(und: DataFrame, keys: Seq[String],
+      intersect: Boolean = false): DataFrame = {
+    // the pair join reads canon three times, the intersection twice
     val canon = Release.cache(
       capPerKeys(und.filter(col("src") < col("dst")), keys :+ "src", "dst", adjCap))
-    // (keys, src)-grouped adjacency ≤ adjCap long each; und arrives
-    // (keys…, src)-clustered, so this aggregation reuses the cache's
-    // partitioning — no new exchange
-    // joined twice (src side + dst side)
-    val adj = Release.cache(canon.groupBy((keys :+ "src").map(col): _*)
-      .agg(collect_list(col("dst")).as("nbrs")))
-    val edges = canon
-      .join(adj.select(keys.map(col) :+ col("src") :+ col("nbrs").as("na"): _*),
-        keys :+ "src")
-      .join(adj.select(keys.map(col) :+ col("src").as("dst") :+ col("nbrs").as("nb"): _*),
-        keys :+ "dst")
-    val tris = edges.select(keys.map(col) :+ col("src").as("a") :+ col("dst").as("b") :+
-      explode(array_intersect(col("na"), col("nb"))).as("c"): _*)
+    val tris =
+      if (intersect) {
+        // (keys, src)-grouped adjacency ≤ adjCap long each; und arrives
+        // (keys…, src)-clustered, so this aggregation reuses the cache's
+        // partitioning — no new exchange; joined twice (src + dst side)
+        val adj = Release.cache(canon.groupBy((keys :+ "src").map(col): _*)
+          .agg(collect_list(col("dst")).as("nbrs")))
+        canon
+          .join(adj.select(keys.map(col) :+ col("src") :+ col("nbrs").as("na"): _*),
+            keys :+ "src")
+          .join(adj.select(keys.map(col) :+ col("src").as("dst") :+ col("nbrs").as("nb"): _*),
+            keys :+ "dst")
+          .select(keys.map(col) :+ col("src").as("a") :+ col("dst").as("b") :+
+            explode(array_intersect(col("na"), col("nb"))).as("c"): _*)
+      } else {
+        // zero keys add no condition
+        def on(a: String, b: String, conds: Column*): Column =
+          (keys.map(k => col(s"$a.$k") === col(s"$b.$k")) ++ conds).reduce(_ && _)
+        canon.as("e1")
+          .join(canon.as("e2"), on("e1", "e2", col("e2.src") === col("e1.dst")))
+          .join(canon.as("e3"), on("e1", "e3",
+            col("e3.src") === col("e1.src"), col("e3.dst") === col("e2.dst")))
+          .select(keys.map(k => col(s"e1.$k").as(k)) :+
+            col("e1.src").as("a") :+ col("e1.dst").as("b") :+ col("e2.dst").as("c"): _*)
+      }
+    // ONE corner explode, not unionAll of three projections: tris is
+    // deliberately uncached (triangle-sized), so a 3-way union re-runs
+    // the double join per branch — measured 3× the whole-query cost in
+    // the q85 keyed twin before this fix
     val perNode = tris
       .select(keys.map(col) :+ explode(array(col("a"), col("b"), col("c"))).as("node"): _*)
       .groupBy((keys :+ "node").map(col): _*).agg(count(lit(1)).as("t"))
@@ -333,7 +331,7 @@ object Graph {
           .otherwise(lit(0.0)), 6).as("clustering"): _*)
   }
 
-  /** DuckDB spelling of [[capPerKey]]. */
+  /** DuckDB spelling of [[capPerKeys]]. */
   private def capSql(src: String, key: String, ord: String, cap: Int): String =
     s"""SELECT src, dst FROM (SELECT src, dst,
        |   row_number() OVER (PARTITION BY $key ORDER BY $ord) AS rn FROM $src)
@@ -396,23 +394,10 @@ object Graph {
     * One union + one groupBy: each edge contributes an out-row for src
     * and an in-row for dst; distinct-counting the counterpart per
     * direction gives both degrees in a single shuffle. */
-  def q20Degrees(spark: SparkSession, dir: String): DataFrame = {
-    // e is DISTINCT (src, dst), so each (node, counterpart) pair is
-    // unique per direction — the distinct-count is a plain conditional
-    // count (one-phase hash agg, no expand/dedup pass). Exploding both
-    // directions from the same scan avoids caching e for a double read.
-    edges(spark, dir)
-      .select(explode(array(
-        struct(col("src").as("node"), lit(1).as("dir")),
-        struct(col("dst").as("node"), lit(0).as("dir")))).as("x"))
-      .select(col("x.node").as("node"), col("x.dir").as("dir"))
-      .groupBy(col("node"))
-      .agg(
-        coalesce(sum(when(col("dir") === 1, 1L)), lit(0L)).as("out_deg"),
-        coalesce(sum(when(col("dir") === 0, 1L)), lit(0L)).as("in_deg"))
+  def q20Degrees(spark: SparkSession, dir: String): DataFrame =
+    q20DegreesKeyed(edges(spark, dir), Nil)
       .withColumn("deg", col("out_deg") + col("in_deg"))
       .orderBy(col("node"))
-  }
 
   /** q21: link-similarity network — vertex pairs with ≥ k common
     * out-neighbors (buildLSN, data_process.py:20-48). Self-join on the
@@ -421,7 +406,7 @@ object Graph {
     // self-join reads the subgraph twice: persist it instead of running
     // the orders⋈lineitem build per side (standard at any scale);
     // hub vertices are degree-capped BEFORE pairing (see adjCap)
-    val e = Release.cache(capPerKey(hotEdges(spark, dir), "dst", "src", adjCap))
+    val e = Release.cache(capPerKeys(hotEdges(spark, dir), Seq("dst"), "src", adjCap))
     e.as("a").join(e.as("b"),
         col("a.dst") === col("b.dst") && col("a.src") < col("b.src"))
       .groupBy(col("a.src").as("u"), col("b.src").as("v"))
@@ -435,15 +420,11 @@ object Graph {
     * averages the node's own degree; we implement the intended
     * neighbor-degree mean. Integer sum / count keeps the oracle exact. */
   def q22NeighborAvgDegree(spark: SparkSession, dir: String): DataFrame =
-    q22On(spark, dir, edgesFrom(factBase(spark, dir)))
-
-  private[ops] def q22On(spark: SparkSession, dir: String,
-      e: DataFrame): DataFrame =
     // dedup-first undirected build — measurement and 100 TB argument
-    // on [[undFrom]] (this site previously symmetrized raw then ran
-    // one 2E-row distinct; the flip was measured, not assumed)
-    // the cache feeds both the degree agg and the neighbor join
-    q22FromUnd(spark, dir, Release.cache(undFrom(e)))
+    // on [[undFrom]]; the cache feeds both the degree agg and the
+    // neighbor join
+    q22FromUnd(spark, dir, Release.cache(undFrom(edgesFrom(factBase(spark, dir)))))
+      .orderBy(col("node"))
 
   /** q22 core over an ALREADY symmetrized+deduped (and cached) pair
     * set — q59 shares one such build between q22 and q23. */
@@ -454,56 +435,19 @@ object Graph {
     // broadcasting it keeps und partitioned in place (falling back to a
     // shuffle join past the shared [[nodeBound]] gate; AQE may still
     // choose better at runtime).
-    val degSide =
-      if (nodeBound(spark, dir) <= broadcastNodeLimit) broadcast(deg) else deg
-    und.join(degSide, col("dst") === col("n"))
+    und.join(nodeGate(spark, dir)(deg), col("dst") === col("n"))
       .groupBy(col("src").as("node"))
       .agg(Exact.r(sum(col("d")) * lit(1.0) / count(lit(1)), 6).as("nbr_avg_deg"),
         count(lit(1)).as("n_nbrs"))
-      .orderBy(col("node"))
   }
 
   /** q23: per-vertex triangle count → local clustering coefficient
     * (nx.clustering, data_process.py:147). Canonical a<b<c two-hop join
     * counts each triangle once; 2T/(d(d-1)) with integer-exact T, d. */
   def q23Triangles(spark: SparkSession, dir: String): DataFrame =
-    q23On(spark, dir, hotEdgesFrom(factBase(spark, dir)))
-
-  private[ops] def q23On(spark: SparkSession, dir: String,
-      e: DataFrame): DataFrame =
-    q23FromUnd(Release.cache(undFromBySrc(e)
-      .filter(col("src") =!= col("dst"))))
-
-  /** q23 core over an ALREADY symmetrized+deduped, self-loop-free
-    * (and cached) pair set — q59 shares one such build with q22. */
-  private[ops] def q23FromUnd(und: DataFrame): DataFrame = {
-    // canon appears three times in the triangle join — persist, or the
-    // edge build runs 3×; hub out-adjacency is degree-capped BEFORE the
-    // two-hop pairing (bounds candidates at cap² per vertex — adjCap);
-    // `deg` below stays the TRUE degree from the uncapped graph
-    val canon = Release.cache(
-      capPerKey(und.filter(col("src") < col("dst")), "src", "dst", adjCap))
-    val tris = canon.as("e1")
-      .join(canon.as("e2"), col("e2.src") === col("e1.dst"))
-      .join(canon.as("e3"),
-        col("e3.src") === col("e1.src") && col("e3.dst") === col("e2.dst"))
-      .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
-    // ONE corner explode, not unionAll of three projections: tris is
-    // deliberately uncached (triangle-sized), so a 3-way union re-runs
-    // the double join per branch — measured 3× the whole-query cost in
-    // the q85 keyed twin before this fix
-    val perNode = tris
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("t"))
-    und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .join(perNode, Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("t"), lit(0L)).as("triangles"),
-        Exact.r(when(col("deg") >= 2,
-            coalesce(col("t"), lit(0L)) * lit(2.0) / (col("deg") * (col("deg") - 1)))
-          .otherwise(lit(0.0)), 6).as("clustering"))
+    q23FromUndKeyed(Release.cache(undFromBySrc(hotEdgesFrom(factBase(spark, dir)))
+      .filter(col("src") =!= col("dst"))), Nil)
       .orderBy(col("node"))
-  }
 
   /** q24: degree^0.75, class-balanced sampling probability
     * (new_utlis_1.py:52-65 node_probability). deg^0.75 is spelled
@@ -540,9 +484,8 @@ object Graph {
     * normalize_row): each out-edge weight divided by the row sum.
     * Integer weight sums via a src-partitioned window keep it exact. */
   def q25RowNormalizeAdj(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
+    factBase(spark, dir)
+      .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("w"))
       .withColumn("norm_w",
         Exact.r(col("w") * lit(1.0) / sum(col("w")).over(Window.partitionBy(col("src"))), 6))
@@ -553,9 +496,8 @@ object Graph {
     * its destination column's mean weight. Integer sums keep it exact. */
   def q43ColNormalizeAdj(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("dst"))
-    Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
+    factBase(spark, dir)
+      .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("w"))
       .withColumn("norm_w",
         Exact.r(col("w") / (sum(col("w")).over(w) * lit(1.0) / count(lit(1)).over(w)), 6))
@@ -568,9 +510,8 @@ object Graph {
     * order priority class. Shared by q45 (per-relation degrees) and
     * q88 (per-relation propagation): one fact scan, one distinct. */
   private[ops] def relEdges(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"),
+    factBase(spark, dir)
+      .select(col("src"), col("dst"),
         when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
           .when(col("o_orderpriority") === "3-MEDIUM", 2)
           .otherwise(3).as("rel"))
@@ -650,13 +591,6 @@ object Graph {
       .orderBy(col("s_suppkey"))
   }
 
-  /** q46: degree-weighted edge sampling probability
-    * (new_utlis_1.py:66-97 edge_probability): for edges whose BOTH
-    * endpoints are in the train split, p ∝ deg(src)^w · deg(dst)^w,
-    * normalized; edge label = 1 where endpoint labels agree positive,
-    * 0 on label disagreement (the reference's homo/hetero edge split).
-    * deg^0.75 via sqrt(d·sqrt(d)), normalizer via exact decimal sum —
-    * the same determinism toolkit as q24. */
   /** Shared scaffold of the edge-sampling family (q46/q65): the
     * distinct edge list joined with per-endpoint degrees and
     * train-split labels, filtered to train-only edges, carrying the
@@ -671,12 +605,10 @@ object Graph {
     * through the SAME gate. */
   private def trainEdgeBase(spark: SparkSession, dir: String): DataFrame = {
     val e = Release.cache(edges(spark, dir)) // degree aggs + the edge join itself
-    val custBound = Tables.cachedRowCount(spark, dir, "customer")
-    val suppBound = Tables.cachedRowCount(spark, dir, "supplier")
-    def gated(df: DataFrame, bound: Long): DataFrame =
-      if (bound <= broadcastNodeLimit) broadcast(df) else df
-    val outDeg = gated(e.groupBy(col("src")).agg(count(lit(1)).as("sd")), custBound)
-    val inDeg = gated(e.groupBy(col("dst")).agg(count(lit(1)).as("dd")), suppBound)
+    val custGate = gate(Tables.cachedRowCount(spark, dir, "customer"))
+    val suppGate = gate(Tables.cachedRowCount(spark, dir, "supplier"))
+    val outDeg = custGate(e.groupBy(col("src")).agg(count(lit(1)).as("sd")))
+    val inDeg = suppGate(e.groupBy(col("dst")).agg(count(lit(1)).as("dd")))
     val lab = Tables.customer(spark, dir).select(col("c_custkey"),
       (col("c_acctbal") < 0).cast("int").as("src_label"),
       Exact.lcgTrain80("c_custkey").as("src_train"))
@@ -684,8 +616,8 @@ object Graph {
       (col("s_acctbal") < 0).cast("int").as("dst_label"),
       Exact.lcgTrain80("s_suppkey").as("dst_train"))
     e.join(outDeg, "src").join(inDeg, "dst")
-      .join(gated(lab, custBound), col("src") === col("c_custkey"))
-      .join(gated(slab, suppBound), col("dst") === col("s_suppkey"))
+      .join(custGate(lab), col("src") === col("c_custkey"))
+      .join(suppGate(slab), col("dst") === col("s_suppkey"))
       .filter(col("src_train") && col("dst_train"))
       .select(col("src"), col("dst"),
         when(col("src_label") =!= col("dst_label"), 0)
@@ -718,6 +650,13 @@ object Graph {
     normalizeProbU(scored)
   }
 
+  /** q46: degree-weighted edge sampling probability
+    * (new_utlis_1.py:66-97 edge_probability): for edges whose BOTH
+    * endpoints are in the train split, p ∝ deg(src)^w · deg(dst)^w,
+    * normalized; edge label = 1 where endpoint labels agree positive,
+    * 0 on label disagreement (the reference's homo/hetero edge split).
+    * deg^0.75 via sqrt(d·sqrt(d)), normalizer via exact decimal sum —
+    * the same determinism toolkit as q24. */
   def q46EdgeSamplingProb(spark: SparkSession, dir: String): DataFrame =
     q46ProbsU(spark, dir).orderBy(col("src"), col("dst"))
 
@@ -853,16 +792,14 @@ object Graph {
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // degree agg + one message join per round
-    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
+    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
     // deg is re-executed once PER di/dj broadcast build PER round
     // execution (broadcast-exchange reuse only holds within one query
     // execution, and every round's eager checkpoint is its own
     // execution) — cache the node-sized table so each rebuild scans it
     // instead of re-aggregating the full edge cache
     val deg = Release.cache(und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d")))
-    val bound = nodeBound(spark, dir) // memoized footer counts, no per-call jobs
-    def gated(df: DataFrame): DataFrame =
-      if (bound <= broadcastNodeLimit) broadcast(df) else df
+    val gated = nodeGate(spark, dir) // memoized footer counts, no per-call jobs
     val di = gated(deg.select(col("n").as("src"), col("d").as("di")))
     val dj = gated(deg.select(col("n").as("dst"), col("d").as("dj")))
     val norm = (lit(1.0) / sqrt(col("di"))) * (lit(1.0) / sqrt(col("dj")))
@@ -946,30 +883,23 @@ object Graph {
     // dedup-first (undFrom's discipline, keyed by rel): distinct
     // directed triples, THEN symmetrize and re-dedup the doubled set
     // degree agg + message join
-    val und = Release.cache(relEdges(spark, dir)
-      .select(col("rel"), explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
-      .select(col("rel"), col("p.src"), col("p.dst"))
-      .distinct())
+    val und = Release.cache(symmetrized(relEdges(spark, dir), Seq("rel")).distinct())
     // di + dj + h0 all derive from it
     val deg = Release.cache(und.groupBy(col("rel"), col("src").as("n"))
       .agg(count(lit(1)).as("d")))
     // h⁰: total symmetrized degree across the three relation graphs
     val h0 = deg.groupBy(col("n").as("node")).agg(sum(col("d")).as("h0"))
     val bound = nodeBound(spark, dir)
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastNodeLimit) broadcast(df) else df
     // di/dj are REL-keyed — one row per (rel, node), up to 3× the node
     // count — so their gate must bound 3·nodes, not nodes: a graph just
     // under the node limit would otherwise broadcast a 3×-over-limit
     // frame (the driver-OOM hazard the gate exists to prevent). Only
     // h0/hj is truly node-sized.
-    val di = gated(deg.select(col("rel"), col("n").as("src"), col("d").as("di")),
-      3L * bound)
-    val dj = gated(deg.select(col("rel"), col("n").as("dst"), col("d").as("dj")),
-      3L * bound)
-    val hj = gated(h0.select(col("node").as("dst"), col("h0").as("hj")), bound)
+    val relGate = gate(3L * bound)
+    val nodeGated = gate(bound)
+    val di = relGate(deg.select(col("rel"), col("n").as("src"), col("d").as("di")))
+    val dj = relGate(deg.select(col("rel"), col("n").as("dst"), col("d").as("dj")))
+    val hj = nodeGated(h0.select(col("node").as("dst"), col("h0").as("hj")))
     val norm = (lit(1.0) / sqrt(col("di"))) * (lit(1.0) / sqrt(col("dj")))
     // all three relations' messages through ONE exchange: each edge
     // belongs to exactly one rel, so the pivot is three conditional sums
@@ -985,7 +915,7 @@ object Graph {
     def hr(zc: Column): Column =
       Exact.r(lit(residualEps) * col("h0") +
         coalesce(zc.cast("double"), lit(0.0)), 6)
-    h0.join(gated(z, bound), Seq("node"), "left") // node-sized message agg
+    h0.join(nodeGated(z), Seq("node"), "left") // node-sized message agg
       .select(col("node"),
         hr(col("z1")).as("h_r1"),
         hr(col("z2")).as("h_r2"),
@@ -1042,11 +972,11 @@ object Graph {
     * co-partitioned join + one map-side-combined aggregation. */
   def q86AttentionPropagate(spark: SparkSession, dir: String): DataFrame = {
     // degree agg + the message join
-    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
+    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
     val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-    val gate = nodeGate(spark, dir)
-    val di = gate(deg.select(col("n").as("src"), col("d").as("di")))
-    val dj = gate(deg.select(col("n").as("dst"), col("d").as("dj")))
+    val gated = nodeGate(spark, dir)
+    val di = gated(deg.select(col("n").as("src"), col("d").as("di")))
+    val dj = gated(deg.select(col("n").as("dst"), col("d").as("dj")))
     // tanh spelled overflow-safe as 1 − 2/(e^2x + 1): identical IEEE op
     // chain in both engines (this DuckDB build ships exp but not tanh),
     // saturating to EXACTLY ±1.0 for large |x| instead of inf/inf NaN
@@ -1112,7 +1042,7 @@ object Graph {
     * map-side-combined aggregation. */
   def q73PageRank(spark: SparkSession, dir: String): DataFrame = {
     // normalizer agg + one message join per round
-    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
+    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
     // uniform transitions: w ≡ 1, so Σw per src is the plain degree and
     // prs·1/d is bit-identical to the oracle's rs/d (·1.0 is IEEE-exact)
     pagerankLoop(und.withColumn("w", lit(1L)), nodeGate(spark, dir))
@@ -1130,7 +1060,7 @@ object Graph {
     // the E directed pairs down to E′ weighted rows, then symmetrize
     // and SUM the doubled copy — w(a,b) = cnt(a→b) + cnt(b→a) exactly
     // as the one-pass count over the symmetrized raw stream produced
-    val adj = Release.cache(factBase(spark, dir).select(col("src"), col("dst"))
+    val adj = Release.cache(edgesFrom(factBase(spark, dir))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
       .select(explode(array(
         struct(col("src"), col("dst"), col("w")),
@@ -1152,7 +1082,7 @@ object Graph {
     * split — the inference literals must never see held-out labels). */
   private[graft] def q86GateFitBase(spark: SparkSession, dir: String): DataFrame = {
     // degree agg + the edge join
-    val und = Release.cache(undFrom(factBase(spark, dir).select(col("src"), col("dst"))))
+    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
     val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val lab = Tables.customer(spark, dir).select(col("c_custkey").as("n"),
         (col("c_acctbal") < 0).cast("int").as("clab"))
@@ -1160,9 +1090,7 @@ object Graph {
         (col("s_acctbal") < 0).cast("int").as("slab")), Seq("n"), "full")
       .select(col("n"), coalesce(col("clab"), col("slab")).as("lab"),
         Exact.lcgTrain80("n").as("tr"))
-    val bound = nodeBound(spark, dir)
-    def gated(df: DataFrame): DataFrame =
-      if (bound <= broadcastNodeLimit) broadcast(df) else df
+    val gated = nodeGate(spark, dir)
     und
       .join(gated(deg.select(col("n").as("src"), col("d").as("di"))), "src")
       .join(gated(deg.select(col("n").as("dst"), col("d").as("dj"))), "dst")
@@ -1174,11 +1102,6 @@ object Graph {
       .select(col("di").cast("double").as("di"),
         col("dj").cast("double").as("dj"),
         (col("li") === col("lj")).cast("double").as("label"))
-  }
-
-  private def nodeGate(spark: SparkSession, dir: String): DataFrame => DataFrame = {
-    val bound = nodeBound(spark, dir) // memoized footer counts
-    df => if (bound <= broadcastNodeLimit) broadcast(df) else df
   }
 
   /** The damped power iteration behind q73/q80 over ANY symmetric
@@ -1263,7 +1186,7 @@ object Graph {
     * previous round's is dropped, and the fixpoint early-exit stops
     * paying for rounds the data doesn't need. */
   def q75KCore(spark: SparkSession, dir: String): DataFrame = {
-    val und = undFrom(factBase(spark, dir).select(col("src"), col("dst")))
+    val und = undFrom(edgesFrom(factBase(spark, dir)))
     // survivor lists are node-bounded: the footer bound makes every
     // per-round broadcast gate job-free (the CC-gate lesson — the old
     // per-round keep.count() was one extra job per peel round)
@@ -1283,7 +1206,6 @@ object Graph {
     * the peel semantics and the convergence-at-bound claim. */
   private[graft] def kcorePeel(und: DataFrame, k: Int, rounds: Int,
       nodeBoundHint: Long = -1L): DataFrame = {
-    val broadcastNodeLimit = 50L * 1000 * 1000
     // every edge set is an eager checkpoint, a plan leaf: round k plans
     // only its own operators and its lineage reads no earlier round, and
     // no cache of the caller's `und` plan is touched
@@ -1299,10 +1221,7 @@ object Graph {
       // survivors only shrink, so a caller-supplied node bound gates
       // every round with zero jobs (parquet footers — the CC-gate
       // discipline); synthetic-graph callers keep the count fallback
-      val kb =
-        if ((if (nodeBoundHint >= 0L) nodeBoundHint else keep.count()) <=
-            broadcastNodeLimit) broadcast(keep)
-        else keep
+      val kb = gate(if (nodeBoundHint >= 0L) nodeBoundHint else keep.count())(keep)
       val e2 = Release.checkpoint(e
         .join(kb.select(col("n").as("src")), Seq("src"), "leftsemi")
         .join(kb.select(col("n").as("dst")), Seq("dst"), "leftsemi")

@@ -147,9 +147,10 @@ object FraudPipeline {
         else {
           val slotCols = tensor.columns
             .filterNot(Set("user_id", "scale", "bucket").contains)
-          tensor.groupBy(col("user_id"), col("scale"))
-            .agg(avg(col(slotCols.head)).as(slotCols.head),
-              slotCols.tail.map(c => avg(col(c)).as(c)): _*)
+          // every slot is a count or a 6-dp value (Exact.r), so an exact
+          // 6-dp decimal sum makes the mean independent of row order
+          val means = slotCols.map(c => ops.Exact.davg(col(c), 6).as(c))
+          tensor.groupBy(col("user_id"), col("scale")).agg(means.head, means.tail: _*)
         }
       Seq(pivotScales(pooled, ""))
     case Tier.Residual => Seq(

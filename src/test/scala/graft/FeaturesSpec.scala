@@ -144,9 +144,10 @@ class FeaturesSpec extends SparkSpec {
     // drop the first run's registrations — CacheManager would otherwise
     // substitute the still-live raw-projection cache into the gated plan
     spark.catalog.clearCache()
-    spark.conf.set("spark.graft.q85.cacheEventLimit", "0")
     try {
-      val df = Features.q85SliceFeatureTensor(spark, sf)
+      val df = Features.q85CoreFromEv(Features.q85Ev(spark, sf, cacheEventLimit = 0),
+          Features.q85CcIntersect(spark, sf))
+        .orderBy(col("user_id"), col("scale"), col("bucket"))
       // the day-grain uw/e0/und caches stay (bounded by design); only
       // the RAW events projection — the one with ts+value columns —
       // must not be cached when the gate is shut
@@ -157,7 +158,6 @@ class FeaturesSpec extends SparkSpec {
       assert(rawImrs.isEmpty, "gate shut must mean no raw-projection cache")
       assert(df.collect().toSeq == cached)
     } finally {
-      spark.conf.unset("spark.graft.q85.cacheEventLimit")
       spark.catalog.clearCache()
     }
   }

@@ -198,7 +198,7 @@ class GraphSpec extends SparkSpec {
     val cap = 16
     // one hub (dst=0) with 1000 distinct neighbors + a small clique side
     val hub = (1 to 1000).map(i => (i.toLong, 0L)).toDF("src", "dst")
-    val capped = ops.Graph.capPerKey(hub, "dst", "src", cap)
+    val capped = ops.Graph.capPerKeys(hub, Seq("dst"), "src", cap)
     assert(capped.count() == cap)
     // deterministic: the cap keeps the SMALLEST src ids
     assert(capped.agg(max("src")).head().getLong(0) == cap.toLong)
@@ -210,22 +210,60 @@ class GraphSpec extends SparkSpec {
   }
 
   test("keyed triangle core: intersect spelling exact-equals the pair join") {
-    // the density-gated alternative (Graph.q23FromUndKeyedIntersect,
-    // chosen by q85Core past the events footer gate) must be value-
-    // identical to the join spelling on a graph with shared neighbors,
-    // hubs (cap-exercising), isolated pairs and multiple slices
+    // the density-gated alternative (the `intersect` spelling, chosen by
+    // q85Core past the events footer gate) must be value-identical to
+    // the join spelling on a graph with shared neighbors, hubs
+    // (cap-exercising), isolated pairs and multiple slices
     import spark.implicits._
     val rnd = new scala.util.Random(4242L)
     val edges = (1 to 4000).map { _ =>
       (1 + rnd.nextInt(2), rnd.nextInt(3).toLong, // (scale, bucket)
         rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)
     }.toDF("scale", "bucket", "src", "dst")
-    val und = ops.Graph.symmetrizedKeyed(edges, Seq("scale", "bucket"))
+    val keys = Seq("scale", "bucket")
+    val und = ops.Graph.symmetrized(edges, keys)
       .distinct().filter(col("src") =!= col("dst"))
-    val a = ops.Graph.q23FromUndKeyed(und, Seq("scale", "bucket"))
-    val b = ops.Graph.q23FromUndKeyedIntersect(und, Seq("scale", "bucket"))
+    val a = ops.Graph.q23FromUndKeyed(und, keys)
+    val b = ops.Graph.q23FromUndKeyed(und, keys, intersect = true)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    // zero keys is the static core: over one slice's edges it gives
+    // exactly that slice's keyed rows, in both spellings
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("node", "deg", "triangles", "clustering").collect().map(_.toSeq).toSeq
+        .sortBy(_.head.asInstanceOf[Long])
+    val slices = und.select(keys.map(col): _*).distinct().collect()
+    assert(slices.length == 6)
+    for (intersect <- Seq(false, true); s <- slices) {
+      val inSlice = col("scale") === s.getInt(0) && col("bucket") === s.getLong(1)
+      val static = ops.Graph.q23FromUndKeyed(
+        und.filter(inSlice).select("src", "dst"), Nil, intersect)
+      assert(rows(static) == rows((if (intersect) b else a).filter(inSlice)),
+        s"slice $s, intersect = $intersect")
+    }
     spark.catalog.clearCache() // canon/adj caches
+  }
+
+  test("src/main gates broadcasts only through Graph.gate") {
+    // one broadcast gate: the node limit appears only where the gate is
+    // defined, so no operator can re-spell or shadow it
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val limit = """broadcastNodeLimit|50L \* 1000 \* 1000""".r
+    val definition = Set(
+      "private val broadcastNodeLimit = 50L * 1000 * 1000",
+      "private[ops] def broadcastable(rows: Long): Boolean = rows <= broadcastNodeLimit")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f: Path =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if limit.findFirstIn(line).nonEmpty &&
+              !(f.getFileName.toString == "Graph.scala" && definition(line.trim)) =>
+            s"$f:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("q25 row-normalized weights sum to 1 per src") {
