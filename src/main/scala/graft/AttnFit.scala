@@ -66,8 +66,10 @@ object AttnFit {
     (model.coefficients.toArray, model.intercept, scored)
   }
 
+  // AUC ignores the id the ranking core breaks AP's ties with
   private def aucOf(scored: DataFrame): Double =
-    ops.Metrics.rocAucFrom(scored).head().getAs[Double]("auc")
+    ops.Metrics.rankingFrom(scored.withColumn("id", monotonically_increasing_id()), "id")
+      .head().getAs[Double]("auc")
 
   def main(args: Array[String]): Unit = {
     val dir = Cli.sfDirOf(args, usage).getOrElse(return)

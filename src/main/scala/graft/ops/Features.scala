@@ -292,7 +292,12 @@ object Features {
     * persons missing from a slice. Every join is a per-user-key
     * left join onto an already-aggregated (node-sized) table, so the
     * assembly adds co-partitioned merges, never another fact scan. */
-  def q59FullFeatureMatrix(spark: SparkSession, dir: String): DataFrame = {
+  def q59FullFeatureMatrix(spark: SparkSession, dir: String): DataFrame =
+    q59Core(spark, dir).orderBy(col("user_id"))
+
+  /** q59's rows without its presentation sort (a range exchange and a
+    * sampling job), for callers that need no order. */
+  private[graft] def q59Core(spark: SparkSession, dir: String): DataFrame = {
     val base = q19FeatureMatrix(spark, dir)
     // direct per-node rollup — routing through q53's output paid its
     // (node, side) aggregation + presentation sort + a re-aggregation
@@ -321,7 +326,6 @@ object Features {
       .withColumn("in_deg_signed", coalesce(col("in_deg_signed"), lit(0L)))
       .withColumn("nbr_avg_deg", coalesce(col("nbr_avg_deg"), lit(0.0)))
       .withColumn("clustering", coalesce(col("clustering"), lit(0.0)))
-      .orderBy(col("user_id"))
   }
 
   private val q19OracleSql: String = {

@@ -15,10 +15,10 @@ import org.apache.spark.sql.expressions.Window
   * component is the score — deterministic, so the DuckDB oracle is exact.
   *
   * Scale notes: confusion counts are one partial-aggregated scan; AUC
-  * and AP rank via [[Ranking]]'s two-pass range-bucketed windows — no
-  * single-partition global sort anywhere (PlanSpec pins this); AP terms
-  * quantize to DECIMAL before the final sum so the result is
-  * accumulation-order independent.
+  * and AP share one ranking pass ([[rankingFrom]]) via [[Ranking]]'s
+  * two-pass range-bucketed windows — no single-partition global sort
+  * anywhere (PlanSpec pins this); every partial sum is an exact integer
+  * or DECIMAL, so the results are accumulation-order independent.
   */
 object Metrics {
 
@@ -46,14 +46,25 @@ object Metrics {
     * Threshold 0: pred = score > 0. All outputs are ratios of exact
     * integer counts, so the oracle matches bit-for-bit. */
   def q26ConfusionMetrics(spark: SparkSession, dir: String): DataFrame =
-    confusionFrom(scored(spark, dir)
-      .withColumn("pred", (col("score") > 0).cast("int")))
+    confusionRatios(scored(spark, dir)
+      .withColumn("pred", (col("score") > 0).cast("int"))
+      .agg(confusionCounts.head, confusionCounts.tail: _*))
 
-  /** The q26 metric core over ANY (y, pred) frame — the oracled operator
-    * and [[graft.pipeline.FraudPipeline]]'s held-out evaluation are the
-    * same code path, so the flagship reports exactly the numbers the
-    * correctness gate checks. */
-  private[graft] def confusionFrom(p: DataFrame): DataFrame = {
+  /** q26's four confusion counts as aggregate columns over ANY
+    * (y, pred) frame. The oracled operator and
+    * [[graft.pipeline.FraudPipeline]]'s held-out evaluation share them
+    * and [[confusionRatios]], so the flagship reports exactly the
+    * numbers the correctness gate checks; the flagship folds them into
+    * its [[rankingFrom]] aggregate. */
+  private[graft] val confusionCounts: Seq[Column] = Seq(
+    sum(when(col("y") === 1 && col("pred") === 1, 1L).otherwise(0L)).as("tp"),
+    sum(when(col("y") === 0 && col("pred") === 1, 1L).otherwise(0L)).as("fp"),
+    sum(when(col("y") === 0 && col("pred") === 0, 1L).otherwise(0L)).as("tn"),
+    sum(when(col("y") === 1 && col("pred") === 0, 1L).otherwise(0L)).as("fn"))
+
+  /** q26's metric row from a frame holding the [[confusionCounts]]: the
+    * counts, then every ratio, then the `tail` columns as they are. */
+  private[graft] def confusionRatios(c: DataFrame, tail: String*): DataFrame = {
     // sklearn's zero_division=0 semantics: a class with no predicted (or
     // no true) members contributes 0, not a crash — under ANSI mode a
     // degenerate fold (e.g. a model predicting nothing positive) would
@@ -62,107 +73,93 @@ object Metrics {
     // branch keeps the exact division spelling the oracle hashes.
     def ratio(num: Column, den: Column): Column =
       when(den === 0, lit(0.0)).otherwise(num / den)
-    val c = p.agg(
-      sum(when(col("y") === 1 && col("pred") === 1, 1L).otherwise(0L)).as("tp"),
-      sum(when(col("y") === 0 && col("pred") === 1, 1L).otherwise(0L)).as("fp"),
-      sum(when(col("y") === 0 && col("pred") === 0, 1L).otherwise(0L)).as("tn"),
-      sum(when(col("y") === 1 && col("pred") === 0, 1L).otherwise(0L)).as("fn"))
-    c.select(col("tp"), col("fp"), col("tn"), col("fn"),
-        Exact.r(ratio((col("tp") + col("tn")) * lit(1.0),
-          col("tp") + col("fp") + col("tn") + col("fn")), 6).as("accuracy"),
-        Exact.r(ratio(col("tp") * lit(1.0), col("tp") + col("fp")), 6).as("precision_pos"),
-        Exact.r(ratio(col("tp") * lit(1.0), col("tp") + col("fn")), 6).as("recall_pos"),
-        Exact.r(ratio(col("tn") * lit(1.0), col("tn") + col("fn")), 6).as("precision_neg"),
-        Exact.r(ratio(col("tn") * lit(1.0), col("tn") + col("fp")), 6).as("recall_neg"))
-      .withColumn("macro_precision",
-        Exact.r((ratio(col("tp") * lit(1.0), col("tp") + col("fp"))
-          + ratio(col("tn") * lit(1.0), col("tn") + col("fn"))) / 2, 6))
-      .withColumn("macro_recall",
-        Exact.r((ratio(col("tp") * lit(1.0), col("tp") + col("fn"))
-          + ratio(col("tn") * lit(1.0), col("tn") + col("fp"))) / 2, 6))
-      .withColumn("f1_pos",
-        Exact.r(ratio(col("tp") * lit(2.0),
-          col("tp") * 2 + col("fp") + col("fn")), 6))
-      .withColumn("f1_neg",
-        Exact.r(ratio(col("tn") * lit(2.0),
-          col("tn") * 2 + col("fn") + col("fp")), 6))
-      // the reference's headline f1_score(average="macro"),
-      // new_utlis_1.py:42: unweighted mean of the per-class F1s
-      .withColumn("macro_f1",
-        Exact.r((ratio(col("tp") * lit(2.0), col("tp") * 2 + col("fp") + col("fn"))
-          + ratio(col("tn") * lit(2.0), col("tn") * 2 + col("fn") + col("fp"))) / 2, 6))
+    val (tp, fp, tn, fn) = (col("tp"), col("fp"), col("tn"), col("fn"))
+    val (precPos, precNeg) = (ratio(tp * lit(1.0), tp + fp), ratio(tn * lit(1.0), tn + fn))
+    val (recPos, recNeg) = (ratio(tp * lit(1.0), tp + fn), ratio(tn * lit(1.0), tn + fp))
+    val f1Pos = ratio(tp * lit(2.0), tp * 2 + fp + fn)
+    val f1Neg = ratio(tn * lit(2.0), tn * 2 + fn + fp)
+    c.select(Seq(tp, fp, tn, fn,
+        Exact.r(ratio((tp + tn) * lit(1.0), tp + fp + tn + fn), 6).as("accuracy"),
+        Exact.r(precPos, 6).as("precision_pos"),
+        Exact.r(recPos, 6).as("recall_pos"),
+        Exact.r(precNeg, 6).as("precision_neg"),
+        Exact.r(recNeg, 6).as("recall_neg"),
+        Exact.r((precPos + precNeg) / 2, 6).as("macro_precision"),
+        Exact.r((recPos + recNeg) / 2, 6).as("macro_recall"),
+        Exact.r(f1Pos, 6).as("f1_pos"),
+        Exact.r(f1Neg, 6).as("f1_neg"),
+        // the reference's headline f1_score(average="macro"),
+        // new_utlis_1.py:42: unweighted mean of the per-class F1s
+        Exact.r((f1Pos + f1Neg) / 2, 6).as("macro_f1")) ++ tail.map(col): _*)
   }
 
   /** q27: ROC AUC as the Mann–Whitney U rank statistic —
-    * AUC = (Σ midrank(positives) − n₊(n₊+1)/2) / (n₊·n₋).
-    * Midranks (cum_before + (ties+1)/2) are half-integers, so every
-    * partial sum is exact in a double regardless of order.
-    *
-    * Scale-safe ranking: scores first collapse to per-score groups
-    * (one shuffle), then the prefix count comes from [[Ranking]]'s
-    * two-pass range-bucketed window — no single-partition global sort
-    * anywhere in the plan (pinned by PlanSpec). */
+    * AUC = (Σ midrank(positives) − n₊(n₊+1)/2) / (n₊·n₋), the
+    * `auc` of [[rankingFrom]]. */
   def q27RocAuc(spark: SparkSession, dir: String): DataFrame =
-    rocAucFrom(scored(spark, dir))
-
-  /** The q27 rank-statistic core over ANY (y, score) frame — shared with
-    * the FraudPipeline flagship (see [[confusionFrom]]). */
-  private[graft] def rocAucFrom(sc: DataFrame): DataFrame = {
-    val g = sc
-      .groupBy(col("score"))
-      .agg(count(lit(1)).as("cnt"), sum(col("y")).cast("long").as("pos"))
-    val bk = Release.cache(Ranking.withRangeBucket(g, "score", descending = false))
-    val off = Ranking.exclusiveOffsets(bk, Map("cum" -> sum(col("cnt"))))
-    val w = Window.partitionBy(col("_b")).orderBy(col("score"))
-    val r = bk
-      .withColumn("cum_before", sum(col("cnt")).over(w) - col("cnt") + off("cum"))
-      // midrank of every row in this score group:
-      // rank + (ties−1)/2 = cum_before + (ties+1)/2
-      .withColumn("rk", col("cum_before").cast("double") + (col("cnt") + 1) / lit(2.0))
-    r.agg(
-        sum(col("pos") * col("rk")).as("rsum"),
-        sum(col("pos")).cast("double").as("np"),
-        sum(col("cnt") - col("pos")).cast("double").as("nn"))
-      // AUC is undefined on a single-class sample (sklearn raises
-      // there); emit NULL instead of DIVIDE_BY_ZERO so a degenerate
-      // held-out fold (tiny SF, no positives) reports honestly rather
-      // than crashing the pipeline. Oracle data is two-class, so the
-      // guard never fires on the hash gate.
-      .select(Exact.r(
-          when(col("np") > 0 && col("nn") > 0,
-            (col("rsum") - col("np") * (col("np") + 1) / 2) /
-              (col("np") * col("nn"))),
-          6).as("auc"),
-        col("np").cast("long").as("n_pos"), col("nn").cast("long").as("n_neg"))
-  }
+    rankingFrom(scored(spark, dir), "vec_id").select(col("auc"), col("n_pos"), col("n_neg"))
 
   /** q28: average precision (sklearn AP = Σ (R_k − R_{k−1})·P_k over the
-    * score-desc ranking, vec_id tiebreak). Per-rank terms quantize to
-    * DECIMAL(28,12) so the global sum is order-independent. */
+    * score-desc ranking, vec_id tiebreak), the `avg_precision` of
+    * [[rankingFrom]]. */
   def q28AvgPrecision(spark: SparkSession, dir: String): DataFrame =
-    avgPrecisionFrom(scored(spark, dir), "vec_id")
+    rankingFrom(scored(spark, dir), "vec_id").select(col("avg_precision"), col("n_pos"))
 
-  /** The q28 AP core over ANY (idCol, y, score) frame, `idCol` breaking
-    * rank ties — shared with the FraudPipeline flagship. */
-  private[graft] def avgPrecisionFrom(sc: DataFrame, idCol: String): DataFrame = {
-    // Scale-safe global row_number/prefix-sum: range-bucket on score
-    // (descending-monotone), window PARTITIONED by bucket, add the
-    // bucket's exclusive row/positive offsets — bit-identical to the
-    // single-partition window it replaces (see Ranking).
+  /** The q27/q28 ranking core over ANY (`idCol`, y, score) frame, ONE
+    * pass for both rank metrics: one 1-row aggregate emitting `auc`,
+    * `avg_precision`, `n_pos` and `n_neg`, after the `extra` aggregate
+    * columns (the FraudPipeline flagship folds q26's
+    * [[confusionCounts]] in here). `idCol` breaks AP's rank ties.
+    *
+    * Scale-safe global ranking: one descending range bucket on score,
+    * windows PARTITIONED by bucket, plus the bucket's exclusive
+    * row/positive offsets from one metadata collect — bit-identical to
+    * the single-partition windows they replace (see [[Ranking]]; no
+    * single-partition window anywhere, PlanSpec pins it).
+    *  - AP: the row at (score desc, id) rank k adds y·cum_pos/k,
+    *    quantized to DECIMAL(28,12) so the sum is order-independent.
+    *  - AUC: a score group's descending midrank is
+    *    gt + (ties+1)/2 (gt rows strictly above it), so twice it,
+    *    gt + ge + 1 (ge rows at or above), is an integer; the ascending
+    *    rank sum the U statistic needs is the reflection
+    *    Σ₊asc = n₊(N+1) − Σ₊desc. Every partial sum is an exact long,
+    *    and AUC is one IEEE division of two exact integers. */
+  private[graft] def rankingFrom(sc: DataFrame, idCol: String,
+      extra: Seq[Column] = Nil): DataFrame = {
     val bk = Release.cache(Ranking.withRangeBucket(sc, "score", descending = true))
     val off = Ranking.exclusiveOffsets(bk, Map(
       "rows" -> count(lit(1)), "pos" -> sum(col("y")).cast("long")))
-    val w = Window.partitionBy(col("_b")).orderBy(col("score").desc, col(idCol))
+    val byRow = Window.partitionBy(col("_b")).orderBy(col("score").desc, col(idCol))
+    // ordered by score alone, so the RANGE frame's peers are the score ties
+    val byScore = Window.partitionBy(col("_b")).orderBy(col("score").desc)
+    // byScore's columns come second: its sort order is a prefix of
+    // byRow's, so both windows share one sort
     val t = bk
-      .withColumn("k", row_number().over(w).cast("long") + off("rows"))
-      .withColumn("cum_pos", sum(col("y")).over(w) + off("pos"))
-      .withColumn("term",
-        (col("y") * col("cum_pos") * lit(1.0) / col("k")).cast("decimal(28,12)"))
-    t.agg(sum(col("term")).cast("double").as("s"), sum(col("y")).as("np"))
-      // undefined with zero positives (same contract as the AUC guard)
-      .select(Exact.r(when(col("np") > 0, col("s") / col("np")), 6)
-          .as("avg_precision"),
-        col("np").as("n_pos"))
+      .withColumn("k", row_number().over(byRow).cast("long") + off("rows"))
+      .withColumn("cum_pos", sum(col("y")).over(byRow) + off("pos"))
+      .withColumn("gt", (rank().over(byScore) - 1).cast("long") + off("rows"))
+      .withColumn("ge", count(lit(1)).over(byScore) + off("rows"))
+    val aggs = extra ++ Seq(
+      sum(col("y") * (col("gt") + col("ge") + 1)).as("r2"),
+      sum((col("y") * col("cum_pos") * lit(1.0) / col("k")).cast("decimal(28,12)"))
+        .cast("double").as("s"),
+      sum(col("y")).cast("long").as("np"),
+      count(lit(1)).as("n"))
+    val (np, n) = (col("np"), col("n"))
+    t.agg(aggs.head, aggs.tail: _*)
+      // AUC is undefined on a single-class sample and AP without
+      // positives (sklearn raises there); emit NULL instead of
+      // DIVIDE_BY_ZERO so a degenerate held-out fold (tiny SF, no
+      // positives) reports honestly rather than crashing the pipeline.
+      // Oracle data is two-class, so the guards never fire on the hash
+      // gate.
+      .select(col("*"),
+        Exact.r(when(np > 0 && n - np > 0,
+          (lit(2) * np * (n + 1) - col("r2") - np * (np + 1)).cast("double") /
+            (lit(2) * np * (n - np)).cast("double")), 6).as("auc"),
+        Exact.r(when(np > 0, col("s") / np), 6).as("avg_precision"),
+        np.as("n_pos"), (n - np).as("n_neg"))
+      .drop("r2", "s", "np", "n")
   }
 
   /** q29: the training-side analog (new_train_*.py) — MLlib

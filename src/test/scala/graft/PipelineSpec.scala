@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import pipeline.FraudPipeline.Tier
@@ -244,15 +243,12 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("the model stage hands off through checkpoint leaves, not caches") {
-    // `scored` is a plan leaf: reading it neither re-runs the feature DAG
-    // (no file scan) nor holds a cache; the metric suite reads only it
+    // `scored` is a plan leaf, the driver fit's local frame: reading it
+    // neither re-runs the feature DAG (no file scan) nor holds a cache;
+    // the metric suite reads only it
     val r = pipeline.FraudPipeline.run(spark, sf)
     val sp = r.scored.queryExecution.executedPlan
-    val upstream = collect(sp) {
-      case s: FileSourceScanExec => s
-      case s: InMemoryTableScanExec => s
-    }
-    assert(upstream.isEmpty, s"scored is not a plan leaf:\n$sp")
+    assert(stripAQEPlan(sp).isInstanceOf[LocalTableScanExec], s"scored is not a plan leaf:\n$sp")
     assert(r.scored.storageLevel == StorageLevel.NONE, r.scored.storageLevel)
     val mp = r.metrics.queryExecution.executedPlan
     assert(collect(mp) { case s: FileSourceScanExec => s }.isEmpty,

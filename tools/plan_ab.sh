@@ -2,8 +2,10 @@
 # Query-plan A/B: runs graft.Explain on the compiled classes of two
 # checkouts (say, a parent commit and a change) and prints a unified
 # diff of the formatted physical plans. Run-to-run ids are normalized
-# first (expression ids #N, plan_id=N, RDD[N], Subquery N and lambda
-# class names), so a clean run prints only the closing summary line.
+# first (expression ids #N, plan_id=N, RDD[N], Subquery N, lambda class
+# names, and the ids AQE and whole-stage codegen number in completion
+# order: query-stage ids and codegen ids), so a clean run prints only
+# the closing summary line.
 # Build each checkout first (`sbt -batch compile`).
 #
 # usage: tools/plan_ab.sh <checkoutA> <checkoutB> <sfDir> [key ...]
@@ -34,7 +36,10 @@ explain() { # <checkout> <out>
       graft.Explain "$DIR" "${KEYS[@]}" 2>"$2.log" |
     sed -E -e 's/#[0-9]+L?/#N/g' -e 's/plan_id=[0-9]+/plan_id=N/g' \
       -e 's/RDD\[[0-9]+\]/RDD[N]/g' -e 's/Subquery [0-9]+/Subquery N/g' \
-      -e 's/\$\$Lambda[^ ,)]*@[0-9a-f]+/$$Lambda/g' >"$2"
+      -e 's/\$\$Lambda[^ ,)]*@[0-9a-f]+/$$Lambda/g' \
+      -e 's/([A-Za-z]+QueryStage) [0-9]+/\1 N/g' \
+      -e '/^\([0-9]+\) [A-Za-z]+QueryStage$/,/^Arguments:/s/^Arguments: [0-9]+$/Arguments: N/' \
+      -e 's/\*\([0-9]+\)/*(N)/g' -e 's/\[codegen id : [0-9]+\]/[codegen id : N]/g' >"$2"
   local rc="${PIPESTATUS[0]}"
   if [ "$rc" -ne 0 ]; then
     echo "== graft.Explain FAILED in $1 (rc=$rc; stderr: $2.log) ==" >&2
