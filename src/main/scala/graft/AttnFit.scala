@@ -73,9 +73,7 @@ object AttnFit {
 
   def main(args: Array[String]): Unit = {
     val dir = Cli.sfDirOf(args, usage).getOrElse(return)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     try Release.scope { fitQ87(spark, dir); fitQ86(spark, dir) }
     finally spark.stop()
   }

@@ -3,9 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     // The two deliberate global-rank windows (q56/q74 — each sorts an
     // already-limit()-cut ≤100-row top-k set, see their Scaladoc) emit
     // one benign WindowExec WARN per execution; over 86 queries × reps

@@ -34,9 +34,7 @@ object CurationRun {
     val sfDir = Cli.sfDirOf(args, usage, valueFlags = flagNames.toSet)
       .getOrElse(return)
     def opt(name: String): Option[String] = Cli.value(args, name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val t0 = System.nanoTime()
     val r = pipeline.CurationPipeline.run(spark, sfDir,
       lmFloor = opt("lm-floor").map(_.toDouble),

@@ -241,9 +241,7 @@ object DualFit {
 
   def main(args: Array[String]): Unit = {
     val dir = Cli.sfDirOf(args, usage).getOrElse(return)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     try Release.scope(run(spark, dir)) finally spark.stop()
   }
 

@@ -13,8 +13,7 @@ object Explain {
       case d :: rest if d.startsWith("/") => (d, rest)
       case rest => ("/root/testdata/sf0.001", rest)
     }
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.fromEnv(logLevel = "ERROR")
     val wanted =
       if (keys.isEmpty) SparkEntry.queries.keys.toSeq.sorted
       else keys

@@ -31,6 +31,14 @@ object GraftSession {
 
   def local(cores: Int): SparkSession = build(s"local[$cores]", cores)
 
+  /** A command-line main's session: [[local]] with `SPARK_GRAFT_CPUS`
+    * cores (`defaultCores` when unset), logging at `logLevel`. */
+  def fromEnv(defaultCores: Int = 4, logLevel: String = "WARN"): SparkSession = {
+    val spark = local(sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString).toInt)
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   def build(master: String, shufflePartitions: Int): SparkSession = {
     val base = SparkSession.builder()
       .master(master)

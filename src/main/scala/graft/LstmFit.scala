@@ -230,9 +230,7 @@ object LstmFit {
 
   def main(args: Array[String]): Unit = {
     val dir = Cli.sfDirOf(args, usage).getOrElse(return)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     try Release.scope(run(spark, dir)) finally spark.stop()
   }
 

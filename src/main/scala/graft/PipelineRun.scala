@@ -53,9 +53,7 @@ object PipelineRun {
   def main(args: Array[String]): Unit = {
     val sfDir = Cli.sfDirOf(args, usage, boolFlags = tierFlags.map(_._1).toSet)
       .getOrElse(return)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val t0 = System.nanoTime()
     val r = pipeline.FraudPipeline.run(spark, sfDir, tiersOf(args.toSeq))
     val m = r.metrics.head()

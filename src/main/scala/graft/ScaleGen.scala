@@ -80,8 +80,7 @@ object ScaleGen {
         "(k an integer in 1..100)")
     val Array(srcDir, outDir, kStr) = pos
     val k = kStr.toInt
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(defaultCores = 16)
     try run(spark, srcDir, outDir, k, skew = flags.contains("--skew"))
     finally spark.stop()
   }

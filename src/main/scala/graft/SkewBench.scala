@@ -16,8 +16,7 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(defaultCores = 16)
     try {
       def time[A](f: => A): (A, Double) = {
         val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)

@@ -36,13 +36,16 @@ object Tables {
   private val schemas =
     new scala.collection.concurrent.TrieMap[String, StructType]
 
-  /** Memoized table row count for cache-gate decisions (q63/q85): the
-    * count itself is statistics-only (parquet footers, no data read) but
-    * still schedules a job with a footer read per file — at lake scale
-    * that is real per-invocation metadata work, so gate decisions reuse
-    * one count per (dir, table) for the session. Testdata dirs are
-    * immutable within a session; a regenerated dir under the same path
-    * needs a new session (or this map cleared) to re-gate. */
+  /** Memoized table row count, one per (dir, table) for the session.
+    * Its readers: the cache gates (q63/q85), the graph and dedup
+    * broadcast-gate hints ([[graft.ops.Graph.gate]], q55's node bound)
+    * and `CurationPipeline`'s report `n_docs`. The count itself is
+    * statistics-only (parquet footers, no data read) but still schedules
+    * a job with a footer read per file — at lake scale that is real
+    * per-invocation metadata work, so every reader reuses the one count.
+    * Testdata dirs are immutable within a session; a regenerated dir
+    * under the same path needs a new session (or this map cleared) to
+    * re-count. */
   private val rowCounts =
     new scala.collection.concurrent.TrieMap[(String, String), Long]
   def cachedRowCount(spark: SparkSession, dir: String, name: String): Long =

@@ -9,9 +9,7 @@ object Verify {
     require(args.length == 2,
       "usage: sbt \"runMain graft.Verify <sfDir> <outDir>\"")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     // Optional key filter for local iteration (same contract as Bench);
     // the driver leaves it unset and dumps everything.

@@ -53,6 +53,9 @@ import org.apache.spark.sql.types._
   * The metric suite is one ranking pass with the confusion counts
   * folded into its aggregate ([[graft.ops.Metrics.rankingFrom]]).
   *
+  * Each stage labels its Spark jobs ([[Stage]]): `features` (the
+  * feature DAG into the assembly checkpoint), `fit` and `metrics`.
+  *
   * The call owns what it materializes: `run` is one
   * [[graft.Release.scope]], and every cache and checkpoint the ops and
   * the model stage register in it is released when `run` returns, so
@@ -271,32 +274,35 @@ object FraudPipeline {
     // 1. the full 32-slot feature matrix per user (the reference's
     //    slice_feature incl. signed degrees / neighbor degree /
     //    clustering — data_process.py:159-168), then each tier's frames;
-    //    sort-free, as nothing downstream needs its order
-    val parity = ops.Features.q59Core(spark, dir)
-    lazy val tensor = ops.Features.q85Core(spark, dir)
-    val features = tiers.foldLeft(parity) { (acc, tier) =>
-      // one zero fill per tier, after all of its joins
-      val frames = framesOf(tier, spark, dir, tensor)
-      frames.foldLeft(acc)(_.join(_, Seq("user_id"), "left"))
-        .na.fill(0.0, frames.flatMap(_.columns).filterNot(_ == "user_id"))
-    }
-
+    //    sort-free, as nothing downstream needs its order.
     // 2. labels, the stratified split and the feature vector. The
     //    assembly feeds the fit AND the held-out scoring, so the feature
     //    DAG runs once, into a checkpoint both read as a leaf; its row
     //    count is the labeled user count
-    val assembled = Release.checkpoint(assemble(spark, dir, features))
-    val nUsers = assembled.count()
+    val (features, assembled, nUsers) = Stage(spark, "features") {
+      val parity = ops.Features.q59Core(spark, dir)
+      lazy val tensor = ops.Features.q85Core(spark, dir)
+      val features = tiers.foldLeft(parity) { (acc, tier) =>
+        // one zero fill per tier, after all of its joins
+        val frames = framesOf(tier, spark, dir, tensor)
+        frames.foldLeft(acc)(_.join(_, Seq("user_id"), "left"))
+          .na.fill(0.0, frames.flatMap(_.columns).filterNot(_ == "user_id"))
+      }
+      val assembled = Release.checkpoint(assemble(spark, dir, features))
+      (features, assembled, assembled.count())
+    }
 
     // 3. train on the train fold only, score the held-out fold: hard
     //    prediction for the confusion suite, P(fraud) for the ranking
     //    metrics, all on the driver
-    val (train, test) = driverRows(assembled).partition(_.getBoolean(2))
-    val model = driverFit(train.toSeq)
-    val scored = spark.createDataFrame(java.util.List.of(test.map { r =>
-      val x = r.getAs[Vector](3).toArray
-      Row(r.getLong(0), r.getDouble(1).toInt, model.predict(x), model.score(x))
-    }: _*), scoredSchema)
+    val scored = Stage(spark, "fit") {
+      val (train, test) = driverRows(assembled).partition(_.getBoolean(2))
+      val model = driverFit(train.toSeq)
+      spark.createDataFrame(java.util.List.of(test.map { r =>
+        val x = r.getAs[Vector](3).toArray
+        Row(r.getLong(0), r.getDouble(1).toInt, model.predict(x), model.score(x))
+      }: _*), scoredSchema)
+    }
 
     // 4. the reference's full test_model suite (new_utlis_1.py:35-50:
     //    accuracy + macro P/R/F1 + roc_auc_score + average_precision),
@@ -305,11 +311,13 @@ object FraudPipeline {
     //    the row is collected while the call's caches are live and
     //    handed back as a driver-local frame, so reading it never runs
     //    a job
-    val metrics = ops.Metrics.confusionRatios(
-      ops.Metrics.rankingFrom(scored, "user_id", ops.Metrics.confusionCounts),
-      "auc", "avg_precision")
-    Result(features, scored,
-      spark.createDataFrame(java.util.List.of(metrics.head()), metrics.schema), nUsers)
+    val metrics = Stage(spark, "metrics") {
+      val m = ops.Metrics.confusionRatios(
+        ops.Metrics.rankingFrom(scored, "user_id", ops.Metrics.confusionCounts),
+        "auc", "avg_precision")
+      spark.createDataFrame(java.util.List.of(m.head()), m.schema)
+    }
+    Result(features, scored, metrics, nUsers)
   }
 
   private val scoredSchema = StructType(Seq(

@@ -114,6 +114,14 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(s.getAs[Long]("n_split_docs") == rows.count(_.getBoolean(5)))
     assert(s.getAs[Long]("n_chunks") ==
       math.ceil(rows.map(_.getLong(1)).sum.toDouble / ops.Corpus.ctxLen).toLong)
+    // the report's columns, in order, with their types; n_docs counts
+    // every document, not only the kept ones
+    assert(r.stats.columns.toSeq == Seq("n_docs", "n_kept", "n_final", "n_tokens",
+      "n_split_docs", "n_lm_dropped", "n_dsir_dropped", "n_dup_dropped",
+      "n_decon_dropped", "n_retr_dropped", "n_mix_dropped", "n_chunks", "split_frac"))
+    assert(r.stats.dtypes.map(_._2).toSeq == Seq.fill(12)("LongType") :+ "DoubleType",
+      r.stats.dtypes.mkString(","))
+    assert(s.getAs[Long]("n_docs") == Tables.documents(spark, sf).count())
 
     // the shipped lake: same grain, and the downstream join the data
     // loader runs every epoch is exchange-free
@@ -351,7 +359,18 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         mixBudget = Some(2.0))
     }
 
-    val r = call()
+    // every job the call starts carries one of its stage labels, and
+    // the caller's label reads as before once the call returns
+    val sc = spark.sparkContext
+    sc.setLocalProperty(pipeline.Stage.Key, "caller")
+    val ((r, jobs), after) =
+      try (jobsDuring(call()), sc.getLocalProperty(pipeline.Stage.Key))
+      finally sc.setLocalProperty(pipeline.Stage.Key, null)
+    assert(after == "caller")
+    assert(jobs.nonEmpty)
+    val stray = unlabeled(jobs, Set("keep", "lm", "dsir", "dup", "decon", "retr", "mix",
+      "pack", "lake", "stats"))
+    assert(stray.isEmpty, stray)
     assertSessionAsFound(e0, p0, base, r)
     val s = r.stats.head()
     val drops = Seq("n_lm_dropped", "n_dsir_dropped", "n_dup_dropped",

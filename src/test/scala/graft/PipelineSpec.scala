@@ -255,6 +255,17 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"metrics re-read the source tables:\n$mp")
   }
 
+  test("every job a call starts carries one of the pipeline's stage labels") {
+    val sc = spark.sparkContext
+    val before = sc.getLocalProperty(pipeline.Stage.Key)
+    val (r, jobs) = jobsDuring(pipeline.FraudPipeline.run(spark, sf))
+    assert(r.nUsers > 0 && jobs.nonEmpty)
+    val stray = unlabeled(jobs, Set("features", "fit", "metrics"))
+    assert(stray.isEmpty, stray)
+    // the label is the call's own: the caller's value reads as before
+    assert(sc.getLocalProperty(pipeline.Stage.Key) == before)
+  }
+
   test("pipeline split is reproducible") {
     // each call leaves no cache entry and no persisted RDD but the
     // checkpoint leaves of the Results still alive

@@ -1,10 +1,13 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -35,6 +38,45 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(extra.subsetOf(leafRddIds(live: _*)),
       s"persisted RDDs outlived the call: ${extra -- leafRddIds(live: _*)}")
   }
+
+  /** `body`'s value and the jobs it started. Job-start events reach a
+    * listener asynchronously but in order, so the jobs that fall between
+    * two marker jobs are exactly the ones `body` started. */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val begun = new CountDownLatch(1)
+    val ended = new CountDownLatch(1)
+    val seen = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties).getOrElse(new java.util.Properties)
+        props.getProperty("spark.job.description") match {
+          case "spark-spec-begin" => begun.countDown()
+          case "spark-spec-end" => ended.countDown()
+          case _ if begun.getCount == 0 && ended.getCount > 0 => seen.add(j)
+          case _ =>
+        }
+      }
+    }
+    def marker(name: String, latch: CountDownLatch): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(latch.await(60, TimeUnit.SECONDS), s"$name never reached the listener")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("spark-spec-begin", begun)
+      val out = body
+      marker("spark-spec-end", ended)
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The jobs in `jobs` whose `graft.stage` label is none of `labels`,
+    * as "job <id>: <label>". */
+  def unlabeled(jobs: Seq[SparkListenerJobStart], labels: Set[String]): Seq[String] =
+    jobs.map(j => j.jobId -> Option(j.properties).map(_.getProperty(pipeline.Stage.Key)).orNull)
+      .collect { case (id, label) if !labels(label) => s"job $id: $label" }
 }
 
 object SparkSpec {

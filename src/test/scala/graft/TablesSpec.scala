@@ -1,47 +1,9 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import scala.jdk.CollectionConverters._
-
 /** `Tables.apply`'s schema memo: only the first read of a path pays
   * parquet's schema-inference job, the memo equals what inference
   * returns, and later reads still list the files afresh. */
 class TablesSpec extends SparkSpec {
-
-  /** The call sites of the jobs `body` starts. Job-start events reach a
-    * listener asynchronously but in order, so the jobs that fall between
-    * two marker jobs are exactly the ones `body` started. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val begun = new CountDownLatch(1)
-    val ended = new CountDownLatch(1)
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val props = Option(j.properties).getOrElse(new java.util.Properties)
-        props.getProperty("spark.job.description") match {
-          case "tables-spec-begin" => begun.countDown()
-          case "tables-spec-end" => ended.countDown()
-          case _ if begun.getCount == 0 && ended.getCount > 0 =>
-            seen.add(s"job ${j.jobId}: ${j.stageInfos.map(_.name).mkString(", ")}")
-          case _ =>
-        }
-      }
-    }
-    def marker(name: String, latch: CountDownLatch): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(latch.await(60, TimeUnit.SECONDS), s"$name never reached the listener")
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("tables-spec-begin", begun)
-      body
-      marker("tables-spec-end", ended)
-      seen.asScala.toSeq
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def writeEvents(path: String, mode: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
@@ -55,8 +17,8 @@ class TablesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-tables-memo").toString
     writeEvents(s"$dir/events.parquet", "overwrite", 1L to 5L)
     Tables.events(spark, dir) // first read: infers and memoizes
-    val jobs = jobsDuring(Tables.events(spark, dir).schema)
-    assert(jobs.isEmpty, jobs)
+    val (_, jobs) = jobsDuring(Tables.events(spark, dir).schema)
+    assert(jobs.isEmpty, jobs.map(j => s"job ${j.jobId}: ${j.stageInfos.map(_.name).mkString(", ")}"))
   }
 
   test("every table's memoized schema equals parquet's inferred schema") {
