@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import ops.Exact.dyad
+
 /** Training seam for the attention-weight plan literals — the q35/q71
   * pattern run in reverse: the reference TRAINS its attention weights
   * end-to-end (FALayer gate, new_model_1.py:23-31; MultiLstm temporal
@@ -35,9 +37,6 @@ import org.apache.spark.sql.functions._
   * SF (its metrics come from the held-out fold).
   */
 object AttnFit {
-
-  private val grain = 1L << 20
-  private def dyad(x: Double): Double = math.rint(x * grain) / grain
 
   /** Largest power-of-two scale s with s·q99 ≤ 2 — puts the 99th
     * percentile |logit| at tanh's responsive edge without saturating. */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import ops.Exact.dyad
 import ops.Fused.DualHeads
 
 /** Training seam for the q94 fused-pass head weights — the analog of
@@ -39,9 +40,6 @@ import ops.Fused.DualHeads
   * the train fold from the held-out fold.
   */
 object DualFit {
-
-  private val grain = 1L << 20
-  private def dyad(x: Double): Double = math.rint(x * grain) / grain
 
   private val eps = 0.3 // main.py:24 default; exact-decimal in serving
   private val gamma = 0.4 // main.py:27 joint-loss mix

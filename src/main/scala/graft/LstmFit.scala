@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import ops.Exact.dyad
+
 /** Training seam for the q90/q92 LSTM cell weights — the last place
   * the engine served fixed plan literals where the reference trains
   * end-to-end (MultiLstm, `Code for Sichuan/src/layers.py:17-24`;
@@ -10,9 +12,10 @@ import org.apache.spark.sql.SparkSession
   * EXACT per-bucket inputs the shipped folds consume (pooled q85
   * tensor projection, 6dp-rounded, bucket-sorted — see
   * [[ops.Features.lstmTrainSequences]]), then PRINTS the
-  * 1/2²⁰-dyadic-quantized tables for inlining into
-  * [[ops.Features.q90ScalarW]] (H=1) and [[ops.Features.q90Units]]
-  * (H=2).
+  * 1/2²⁰-dyadic-quantized table of every shipped cell
+  * ([[ops.Features.lstmShipped]]: [[ops.Features.q90Scalar]] at H=1,
+  * [[ops.Features.q90Units]] at H=2) for inlining into Features.scala,
+  * each in the `LstmUnits` form it is pasted as.
   *
   * Why the driver and not MLlib: MLlib has no recurrent estimator, and
   * the training set is bounded by |customers|×4 sequences (the
@@ -44,9 +47,6 @@ import org.apache.spark.sql.SparkSession
   * SF (its metrics come from the held-out fold).
   */
 object LstmFit {
-
-  private val grain = 1L << 20
-  private def dyad(x: Double): Double = math.rint(x * grain) / grain
 
   private val Gates = Array("i", "f", "g", "o")
 
@@ -215,8 +215,7 @@ object LstmFit {
     (p, auc(scored), lastLoss / data.length)
   }
 
-  private def packInit(L: Layout,
-      units: IndexedSeq[Map[String, (Double, IndexedSeq[Double], Double)]]): Array[Double] = {
+  private def packInit(L: Layout, units: ops.Features.LstmUnits): Array[Double] = {
     val p = new Array[Double](L.len)
     for (u <- 0 until L.h; (g, gi) <- Gates.zipWithIndex) {
       val (wx, wh, b) = units(u)(g)
@@ -255,38 +254,25 @@ object LstmFit {
       f"max ${xAll.map(math.abs).max}%.4f, pos rate ${data.map(_._2).sum / data.length}%.4f")
     val epochs = sys.env.getOrElse("SPARK_GRAFT_LSTM_EPOCHS", "200").toInt
 
-    // H=1 (scalar cell, q90). Both runs start from the PRE-training
-    // FIXED table, not the shipped (already-trained) q90ScalarW:
+    // Every shipped cell, smallest first. Both runs start from the
+    // PRE-training FIXED table, not the shipped (already-trained) one:
     // warm-starting from trained weights would make the printed
     // "readout-only (fixed cell)" baseline a trained-cell number and
     // the whole comparison irreproducible after one paste-back.
-    locally {
-      val L = new Layout(1)
-      val init = packInit(L, IndexedSeq(
-        ops.Features.q90ScalarWFixed.map { case (g, (wx, wh, b)) =>
-          g -> ((wx, IndexedSeq(wh), b)) }))
+    for ((h, cell) <- ops.Features.lstmShipped) {
+      val L = new Layout(h)
+      val init = packInit(L, cell.fixed)
       val (_, auc0, loss0) = fit(L, init, data, epochs, cellFrozen = true)
       val (p, auc1, loss1) = fit(L, init, data, epochs, cellFrozen = false)
-      println(f"[lstmfit] H=1 readout-only (fixed cell) train AUC $auc0%.4f loss $loss0%.4f")
-      println(f"[lstmfit] H=1 full BPTT              train AUC $auc1%.4f loss $loss1%.4f")
-      println("[lstmfit] q90ScalarW (paste into Features.scala):")
-      for ((g, gi) <- Gates.zipWithIndex)
-        println(s"""[lstmfit]   "$g" -> (${dyad(p(L.wx(0, gi)))}, ${dyad(p(L.wh(0, gi, 0)))}, ${dyad(p(L.b(0, gi)))}),""")
-    }
-
-    // H=2 (vector cell, q92) — same fixed-table start as H=1
-    locally {
-      val L = new Layout(2)
-      val init = packInit(L, ops.Features.q90UnitsFixed)
-      val (_, auc0, loss0) = fit(L, init, data, epochs, cellFrozen = true)
-      val (p, auc1, loss1) = fit(L, init, data, epochs, cellFrozen = false)
-      println(f"[lstmfit] H=2 readout-only (fixed cell) train AUC $auc0%.4f loss $loss0%.4f")
-      println(f"[lstmfit] H=2 full BPTT              train AUC $auc1%.4f loss $loss1%.4f")
-      println("[lstmfit] q90Units (paste into Features.scala):")
-      for (u <- 0 until 2) {
+      println(f"[lstmfit] H=$h readout-only (fixed cell) train AUC $auc0%.4f loss $loss0%.4f")
+      println(f"[lstmfit] H=$h full BPTT              train AUC $auc1%.4f loss $loss1%.4f")
+      println(s"[lstmfit] ${cell.name} (paste into Features.scala):")
+      for (u <- 0 until h) {
         println(s"[lstmfit]   Map(")
-        for ((g, gi) <- Gates.zipWithIndex)
-          println(s"""[lstmfit]     "$g" -> (${dyad(p(L.wx(u, gi)))}, IndexedSeq(${dyad(p(L.wh(u, gi, 0)))}, ${dyad(p(L.wh(u, gi, 1)))}), ${dyad(p(L.b(u, gi)))}),""")
+        for ((g, gi) <- Gates.zipWithIndex) {
+          val wh = (0 until h).map(j => dyad(p(L.wh(u, gi, j)))).mkString(", ")
+          println(s"""[lstmfit]     "$g" -> (${dyad(p(L.wx(u, gi)))}, IndexedSeq($wh), ${dyad(p(L.b(u, gi)))}),""")
+        }
         println(s"[lstmfit]   ),")
       }
     }

@@ -38,11 +38,12 @@ object Tables {
 
   /** Memoized table row count, one per (dir, table) for the session.
     * Its readers: the cache gates (q63/q85), the graph and dedup
-    * broadcast-gate hints ([[graft.ops.Graph.gate]], q55's node bound)
-    * and `CurationPipeline`'s report `n_docs`. The count itself is
-    * statistics-only (parquet footers, no data read) but still schedules
-    * a job with a footer read per file — at lake scale that is real
-    * per-invocation metadata work, so every reader reuses the one count.
+    * broadcast-gate hints ([[graft.ops.Graph.gate]], q55's node bound),
+    * the q29/q54 trainers' small-input gate and `CurationPipeline`'s
+    * report `n_docs`. The count itself is statistics-only (parquet
+    * footers, no data read) but still schedules a job with a footer
+    * read per file — at lake scale that is real per-invocation
+    * metadata work, so every reader reuses the one count.
     * Testdata dirs are immutable within a session; a regenerated dir
     * under the same path needs a new session (or this map cleared) to
     * re-count. */

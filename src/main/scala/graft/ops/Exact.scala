@@ -51,6 +51,14 @@ object Exact {
   def dsumPartial(c: Column): Column = sum(c.cast(dec))
   def dsumSqPartial(c: Column): Column = sum(c.cast(dec) * c.cast(dec))
 
+  /** The fit mains' weight grid ([[graft.AttnFit]], [[graft.LstmFit]],
+    * [[graft.DualFit]]): `x` rounded to the nearest multiple of 2⁻²⁰.
+    * A dyadic weight is an exact double whose printed decimal parses
+    * back to the same double in Spark and in DuckDB, so a fitted
+    * literal pasted into plan text and oracle SQL multiplies exactly
+    * in both. */
+  def dyad(x: Double): Double = math.rint(x * (1 << 20)) / (1 << 20)
+
   /** Engine-identical rounding: floor(x·10^d + 0.5)/10^d.
     *
     * `round()` itself is NOT portable at boundaries: Spark rounds the

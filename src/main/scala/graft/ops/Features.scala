@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import scala.collection.immutable.SortedMap
+
 /** CDR-style fraud feature engineering (SURVEY.md §2.B), re-expressing the
   * Sichuan pipeline (reference: Code for Sichuan/Data_processing/
   * data_process.py + src/utils.py) over the `events` table:
@@ -974,12 +976,22 @@ object Features {
   // layers.py:9-68 runs an LSTM per time scale over the bucket sequence
   // before the attention pool) re-expressed as an ordered relational
   // fold. q87 covers the attention/pooling stage; this closes the
-  // recurrent state transition itself: a scalar LSTM cell (dyadic plan
+  // recurrent state transition itself: an LSTM cell (dyadic plan
   // literals, input = the same trained feature-attention projection q87
-  // gates on) folded left over the bucket-sorted sequence via the
-  // aggregate() higher-order function — per-group SEQUENTIAL, as the
-  // recurrence semantically demands, but fully distributed across
-  // (user, scale) groups.
+  // gates on) folded left over the bucket-sorted sequence — per-group
+  // SEQUENTIAL, as the recurrence semantically demands, but fully
+  // distributed across (user, scale) groups.
+  //
+  // One cell serves every hidden size, as the reference's MultiLstm is
+  // one cell whose hidden_size is a parameter (layers.py:17-24,
+  // main.py:19): q90 is H = 1, q92 H = 2, q93 H = 4, and q94 embeds
+  // q92's fold. State is an ARRAY of H packed doubles (one per unit,
+  // see [[q90Pack]]), and every gate of every unit mixes x and all H
+  // hidden states with dyadic weights — a full H×H recurrent matrix, so
+  // the units are coupled, not H independent scalar folds. Subscripting
+  // differs by engine (Spark [] is 0-based, DuckDB 1-based), so the cell
+  // text comes from ONE generator parameterized by the subscript
+  // renderer — the same single-definition discipline as Exact.sql.
   //
   // Scale: sequences are bounded by the CALENDAR, not the data — at most
   // horizon/7 buckets per scale per user — so the collect_list state is
@@ -994,25 +1006,30 @@ object Features {
   // exact; exp is the only libm call, and the 6dp quantization after
   // each nonlinearity is the same discipline the q86/q87 hash gates
   // already prove portable. The DuckDB oracle folds the IDENTICAL
-  // generated cell text via list_reduce over a PACKED-double state (see
-  // q90MergeExpr for why a struct accumulator is not portable), so the
-  // recurrences are bit-identical step by step.
+  // generated cell text via list_reduce, so the recurrences are
+  // bit-identical step by step.
   // ---------------------------------------------------------------------
 
-  /** The LSTM state (h, c) PACKED into one double: h6 = h·10⁶ and
-    * c6 = c·10⁶ are integers (the 6dp quantization grid), and
+  /** One unit's LSTM state (h, c) PACKED into one double: h6 = h·10⁶
+    * and c6 = c·10⁶ are integers (the 6dp quantization grid), and
     * acc = (h6 + 2e6)·2²⁵ + (c6 + 8e6) — max ~1.0e14, far under 2⁵³,
     * so every encode/decode is EXACT integer arithmetic in float64.
+    * Cell state is clipped at ±4.0 (standard LSTM cell clipping) so c6
+    * provably fits its 2²⁵ slot whatever the data does to the input
+    * projection; h = o·tanh(c) ∈ (−1, 1) always fits.
     *
-    * Why packed instead of a struct accumulator: DuckDB's list_reduce
+    * Why packed and not a struct per unit: DuckDB's list_reduce
     * evaluates a struct-typed lambda's fields IN PLACE and in order —
     * the `c` field's expression sees the already-updated `h` (found by
     * bit-tracing a 2-step fold; Spark's aggregate() snapshots the old
-    * struct instead). A scalar accumulator has no field-update order to
-    * disagree on, and lets the two engines share the cell text
-    * VERBATIM. Cell state is clipped at ±4.0 (standard LSTM cell
-    * clipping) so c6 provably fits its 2²⁵ slot whatever the data does
-    * to the input projection; h = o·tanh(c) ∈ (−1, 1) always fits. */
+    * struct instead). A LIST-typed lambda is snapshot-based in both
+    * engines ([acc[1]+e[1], acc[1]*100] over acc=[1,10] yields 100, not
+    * 300), so a list of packed scalars has no field-update order to
+    * disagree on, and the two engines share the cell text VERBATIM.
+    * Spark's aggregate() accepts any zero type, so its accumulator is
+    * array(packed, …) over scalar inputs; DuckDB's list_reduce demands
+    * acc type == element type, so the oracle wraps each input as the
+    * H-element list [x, 0, …] and seeds the zero list at the list head. */
   // Constants are spelled CAST(… AS DOUBLE): Spark parses a bare
   // `2000000.0` as DECIMAL and its floor() returns LONG, so unguarded
   // text would silently promote the whole cell into decimal arithmetic
@@ -1027,131 +1044,32 @@ object Features {
   private def q90DecodeC(acc: String): String =
     s"($acc - floor($acc / $q90Pack) * $q90Pack - $q90COff) / 1e6"
 
-  /** Scalar-cell gate weights (wx, wh, bias), all dyadic (exact
-    * doubles) — the H=1 row of the trainer seam: [[graft.LstmFit]]
-    * fits these end-to-end (the reference trains its MultiLstm,
-    * layers.py:17-24) and prints the 1/2²⁰-quantized table to paste
-    * here; the shipped values are the fit on the sf0.1 train fold. */
-  private[graft] val q90ScalarW: Map[String, (Double, Double, Double)] = Map(
-    "i" -> (-1.982945442199707, -1.5916595458984375, 1.4523820877075195),
-    "f" -> (-2.3713760375976562, -1.2606096267700195, 1.2257881164550781),
-    "g" -> (0.8584566116333008, 1.382364273071289, -0.9942464828491211),
-    "o" -> (-3.0686349868774414, 0.2022695541381836, 0.25170326232910156))
-
-  /** The pre-training dyadic literals (rounds 8-9's shipped values) —
-    * kept as the README A/B's fixed-cell baseline (PipelineRun
-    * --lstm-fixed, which applies to whichever LSTM tier is active). */
-  private[graft] val q90ScalarWFixed: Map[String, (Double, Double, Double)] = Map(
-    "i" -> (0.5, 0.25, 0.0625),
-    "f" -> (0.25, 0.25, 0.5),
-    "g" -> (0.5, 0.25, 0.0),
-    "o" -> (0.5, 0.25, -0.0625))
-
-  /** One step of the scalar LSTM cell as portable SQL text over the
-    * packed accumulator `acc` and input scalar `x` — the IDENTICAL
-    * string runs inside Spark's aggregate() and DuckDB's list_reduce.
-    * Weights are dyadic (exact doubles) from the selected table;
-    * every gate output quantizes at 6dp (Exact.r's floor spelling), so
-    * the recurrences agree step by step. h' references c' textually
-    * (no lets inside SQL lambdas) — duplication, not re-evaluation
-    * drift, since the text is pure arithmetic on acc and x. */
-  private def q90MergeExpr(acc: String, x: String,
-      wt: Map[String, (Double, Double, Double)] = q90ScalarW): String = {
-    def w(d: Double): String = new java.math.BigDecimal(d).toPlainString
-    def r6(s: String) = Exact.sql.r(s, 6)
-    def sig(z: String) = r6(s"1.0 / (1.0 + exp(-($z)))")
-    def th(z: String) = r6(s"1.0 - 2.0 / (exp(2.0 * ($z)) + 1.0)")
-    val hp = s"(${q90DecodeH(acc)})"
-    val cp = s"(${q90DecodeC(acc)})"
-    // weights come from the selected table (the [[graft.LstmFit]]
-    // seam); the sign-aware bias spelling keeps the emitted text
-    // byte-identical to the pre-table version for the same values
-    def z(g: String): String = {
-      val (wx, wh, b) = wt(g)
-      val base = s"${w(wx)} * $x + ${w(wh)} * $hp"
-      if (b == 0.0) base
-      else if (b > 0) s"$base + ${w(b)}"
-      else s"$base - ${w(-b)}"
-    }
-    val cRaw = s"${sig(z("f"))} * $cp + ${sig(z("i"))} * ${th(z("g"))}"
-    val c6 = s"floor(greatest(least($cRaw, 4.0), -4.0) * 1e6 + 0.5)"
-    val h6 = s"floor((${sig(z("o"))} * ${th(s"(($c6) / 1e6)")}) * 1e6 + 0.5)"
-    s"(($h6) + $q90HOff) * $q90Pack + (($c6) + $q90COff)"
-  }
-
-  /** q90: final LSTM state per (user, scale) over the q85 tensor. */
-  def q90LstmState(spark: SparkSession, dir: String): DataFrame =
-    q90From(q85Core(spark, dir)).orderBy(col("user_id"), col("scale"))
-
-  /** Training rows for [[graft.LstmFit]]: the EXACT per-bucket inputs
-    * the q90/q92/q93 folds consume (same pooled projection, same 6dp
-    * rounding), bucket-sorted per (user, scale), with the user fraud
-    * label — TRAIN fold only (the AttnFit leakage discipline). Row
-    * count is |users|×4, so the trainer's collect is bounded by the
-    * customer table, never the event stream. */
-  private[graft] def lstmTrainSequences(spark: SparkSession, dir: String): DataFrame = {
-    val pooled =
-      q87FeatureAttn.map { case (c, w) => lit(w) * q87Slot(c) }.reduce(_ + _)
-    q85Core(spark, dir)
-      .withColumn("x", Exact.r(pooled, 6))
-      .groupBy(col("user_id"), col("scale"))
-      .agg(expr("transform(sort_array(collect_list(struct(bucket, x))), s -> s.x)")
-        .as("xs"))
-      .join(Tables.customer(spark, dir).select(
-        col("c_custkey").as("user_id"),
-        (col("c_acctbal") < 0).cast("double").as("label")), "user_id")
-      .filter(Exact.lcgTrain80("user_id"))
-  }
-
-  /** The sort-free fold core over any frame with the q85 tensor columns
-    * (the q87PoolFrom pattern — specs feed it a synthetic tensor). */
-  private[graft] def q90From(t: DataFrame,
-      wt: Map[String, (Double, Double, Double)] = q90ScalarW): DataFrame = {
-    val pooled =
-      q87FeatureAttn.map { case (c, w) => lit(w) * q87Slot(c) }.reduce(_ + _)
-    t.withColumn("x", Exact.r(pooled, 6))
-      .groupBy(col("user_id"), col("scale"))
-      .agg(count(lit(1)).as("n_buckets"),
-        sort_array(collect_list(struct(col("bucket"), col("x")))).as("bx"))
-      .withColumn("st", expr(
-        s"""aggregate(transform(bx, s -> s.x), $q90Zero,
-           |  (acc, e) -> ${q90MergeExpr("acc", "e", wt)})""".stripMargin))
-      .select(col("user_id"), col("scale"), col("n_buckets"),
-        expr(q90DecodeH("st")).as("h_last"),
-        expr(q90DecodeC("st")).as("c_last"))
-  }
-
-  // ---------------------------------------------------------------------
-  // q90 v2 (hidden_size = 2): the reference's MultiLstm cell is a
-  // VECTOR cell (layers.py:17-24 — hidden_size state columns with a
-  // full recurrent matrix), and the scalar fold above cannot exhibit
-  // cross-unit coupling. State here = an ARRAY of TWO packed doubles
-  // (unit i packs its (h_i, c_i) on the proven 6dp grid), and every
-  // gate of every unit mixes x, h1 AND h2 with dyadic weights — a
-  // genuine 2×2 recurrent matrix, not two independent scalar folds.
-  // Spark's aggregate() accepts any zero type, so the accumulator is
-  // array(packed, packed) over scalar inputs; DuckDB's list_reduce
-  // demands acc type == element type, so the oracle wraps each input
-  // as [x, 0] and seeds the zero pair at the list head. Re-verified
-  // this round: a LIST-typed list_reduce lambda is SNAPSHOT-based
-  // ([acc[1]+e[1], acc[1]*100] over acc=[1,10] yields 100, not 300) —
-  // the in-place-field trap is a STRUCT-lambda artifact and does not
-  // reach list accumulators. Subscripting differs by engine (Spark []
-  // is 0-based, DuckDB 1-based), so the cell text comes from ONE
-  // generator parameterized by the subscript renderer — the same
-  // single-definition discipline as Exact.sql.
-  // ---------------------------------------------------------------------
-
-  /** Vector-cell weights: per unit, per gate, (wx, w_h·, bias) with
-    * w_h· one recurrent weight per hidden unit — a full H×H recurrent
-    * matrix. All dyadic (exact doubles). */
+  /** Cell weights: per unit, per gate, (wx, w_h·, bias) with w_h· one
+    * recurrent weight per hidden unit — a full H×H recurrent matrix.
+    * All dyadic (exact doubles). */
   private[graft] type LstmUnits = IndexedSeq[Map[String, (Double, IndexedSeq[Double], Double)]]
 
-  /** The shipped hidden_size=2 table (q92). Cross weights are nonzero
-    * in BOTH directions, so the units are coupled both ways. Like
-    * [[q90ScalarW]], this is the [[graft.LstmFit]] trainer's paste
-    * target, 1/2²⁰-quantized so both engines' SQL carries the exact
-    * same doubles. */
+  /** The shipped hidden_size=1 table (q90, `--lstm`): the
+    * [[graft.LstmFit]] fit on the sf0.1 train fold (the reference
+    * trains its MultiLstm, layers.py:17-24), 1/2²⁰-quantized so both
+    * engines' SQL carries the exact same doubles. */
+  private[graft] val q90Scalar: LstmUnits = IndexedSeq(Map(
+    "i" -> (-1.982945442199707, IndexedSeq(-1.5916595458984375), 1.4523820877075195),
+    "f" -> (-2.3713760375976562, IndexedSeq(-1.2606096267700195), 1.2257881164550781),
+    "g" -> (0.8584566116333008, IndexedSeq(1.382364273071289), -0.9942464828491211),
+    "o" -> (-3.0686349868774414, IndexedSeq(0.2022695541381836), 0.25170326232910156)))
+
+  /** The pre-training H=1 literals (rounds 8-9's shipped values) — the
+    * fixed-cell baseline under `--lstm --lstm-fixed`. */
+  private[graft] val q90ScalarFixed: LstmUnits = IndexedSeq(Map(
+    "i" -> (0.5, IndexedSeq(0.25), 0.0625),
+    "f" -> (0.25, IndexedSeq(0.25), 0.5),
+    "g" -> (0.5, IndexedSeq(0.25), 0.0),
+    "o" -> (0.5, IndexedSeq(0.25), -0.0625)))
+
+  /** The shipped hidden_size=2 table (q92, `--lstm2`). Cross weights
+    * are nonzero in BOTH directions, so the units are coupled both
+    * ways. Fitted and quantized as [[q90Scalar]] is. */
   private[graft] val q90Units: LstmUnits = IndexedSeq(
     Map(
       "i" -> (-1.9584484100341797, IndexedSeq(-1.1841411590576172, -1.1148595809936523), 1.3009471893310547),
@@ -1177,13 +1095,58 @@ object Features {
         "g" -> (0.25, IndexedSeq(0.25, -0.25), 0.0),
         "o" -> (0.5, IndexedSeq(-0.25, 0.25), 0.0625)))
 
+  /** A shipped cell: the trained table, the pre-training table (the
+    * `--lstm-fixed` baseline and [[graft.LstmFit]]'s starting point),
+    * and the name of the trained table, which LstmFit prints. */
+  private[graft] final case class LstmCell(name: String, trained: LstmUnits,
+      fixed: LstmUnits)
+
+  /** The cells that ship, by hidden size: the `units` values
+    * `Tier.Lstm` accepts, the tables its fold runs, and the tables
+    * [[graft.LstmFit]] refits, in that order. */
+  private[graft] val lstmShipped: SortedMap[Int, LstmCell] = SortedMap(
+    1 -> LstmCell("q90Scalar", q90Scalar, q90ScalarFixed),
+    2 -> LstmCell("q90Units", q90Units, q90UnitsFixed))
+
+  /** Each unit's (h, c) state names: `h`/`c` for the scalar cell,
+    * `h1`/`c1` … `hH`/`cH` above it. The fold and the oracle emit them
+    * with a `_last` suffix; the Lstm tier pivots them bare. */
+  private[graft] def lstmStateNames(h: Int): IndexedSeq[(String, String)] =
+    if (h == 1) IndexedSeq(("h", "c"))
+    else IndexedSeq.tabulate(h)(u => (s"h${u + 1}", s"c${u + 1}"))
+
+  /** q90: final scalar-cell LSTM state per (user, scale) over the q85
+    * tensor. */
+  def q90LstmState(spark: SparkSession, dir: String): DataFrame =
+    q90FromH(q85Core(spark, dir), q90Scalar).orderBy(col("user_id"), col("scale"))
+
+  /** Training rows for [[graft.LstmFit]]: the EXACT per-bucket inputs
+    * the q90/q92/q93 folds consume (same pooled projection, same 6dp
+    * rounding), bucket-sorted per (user, scale), with the user fraud
+    * label — TRAIN fold only (the AttnFit leakage discipline). Row
+    * count is |users|×4, so the trainer's collect is bounded by the
+    * customer table, never the event stream. */
+  private[graft] def lstmTrainSequences(spark: SparkSession, dir: String): DataFrame = {
+    val pooled =
+      q87FeatureAttn.map { case (c, w) => lit(w) * q87Slot(c) }.reduce(_ + _)
+    q85Core(spark, dir)
+      .withColumn("x", Exact.r(pooled, 6))
+      .groupBy(col("user_id"), col("scale"))
+      .agg(expr("transform(sort_array(collect_list(struct(bucket, x))), s -> s.x)")
+        .as("xs"))
+      .join(Tables.customer(spark, dir).select(
+        col("c_custkey").as("user_id"),
+        (col("c_acctbal") < 0).cast("double").as("label")), "user_id")
+      .filter(Exact.lcgTrain80("user_id"))
+  }
+
   /** Deterministic dyadic initialization for ANY hidden size — the
     * construction that makes the reference's `hidden_size=64` default
     * (main.py:19) one constant away: weights derive from md5 of
     * (seed, unit, gate, slot) mapped onto odd dyadic grids (wx ∈
     * ±odd/16, w_h ∈ ±odd/64 — never zero, so every unit pair stays
     * coupled both ways), forget bias at the standard +0.5, i/o biases
-    * small ±odd/32, g bias 0 (the scalar and H=2 tables' shape). Both
+    * small ±odd/32, g bias 0 (the shipped fixed tables' shape). Both
     * engines see only the emitted literals, so any (h, seed) is
     * hash-oracle-able by construction. */
   private[graft] def lstmInit(h: Int, seed: Long): LstmUnits = {
@@ -1212,12 +1175,14 @@ object Features {
     }
   }
 
-  /** One unit's step of the H-unit cell: text over the array
-    * accumulator `acc` (via the engine's subscript renderer `idx`) and
-    * the input scalar `x`. Same 6dp/clip discipline as the scalar
-    * cell; h' references c' textually, as there. For the shipped
-    * [[q90Units]] table this emits byte-identical text to the
-    * hand-listed 2-unit version it replaced. */
+  /** One unit's step of the H-unit cell as portable SQL text over the
+    * array accumulator `acc` (via the engine's subscript renderer
+    * `idx`) and the input scalar `x` — the IDENTICAL string runs inside
+    * Spark's aggregate() and DuckDB's list_reduce. Every gate output
+    * quantizes at 6dp (Exact.r's floor spelling), so the recurrences
+    * agree step by step. h' references c' textually (no lets inside
+    * SQL lambdas) — duplication, not re-evaluation drift, since the
+    * text is pure arithmetic on acc and x. */
   private def q90CellExpr(acc: String, x: String, unit: Int,
       units: LstmUnits, idx: (String, Int) => String): String = {
     def w(d: Double): String = new java.math.BigDecimal(d).toPlainString
@@ -1239,12 +1204,9 @@ object Features {
     s"(($h6) + $q90HOff) * $q90Pack + (($c6) + $q90COff)"
   }
 
-  /** q90 v2: final 2-unit LSTM state per (user, scale). */
+  /** q92: final 2-unit LSTM state per (user, scale). */
   def q90LstmState2(spark: SparkSession, dir: String): DataFrame =
-    q90From2(q85Core(spark, dir)).orderBy(col("user_id"), col("scale"))
-
-  private[graft] def q90From2(t: DataFrame): DataFrame =
-    q90FromH(t, q90Units)
+    q90FromH(q85Core(spark, dir), q90Units).orderBy(col("user_id"), col("scale"))
 
   /** q93: the hidden_size=4 instance — same fold, same oracle
     * generator, weights from [[lstmInit]](4, 93). Exists to prove the
@@ -1256,9 +1218,11 @@ object Features {
 
   private[graft] val q93Units: LstmUnits = lstmInit(4, 93L)
 
-  /** The H-unit fold core: state is an ARRAY of H packed doubles; each
-    * step applies one LSTM cell per unit, every unit reading every
-    * unit's h (the full recurrent matrix).
+  /** The fold core over any frame with the q85 tensor columns (the
+    * q87PoolFrom pattern — specs feed it a synthetic tensor): state is
+    * an ARRAY of H packed doubles; each step applies one LSTM cell per
+    * unit, every unit reading every unit's h (the full recurrent
+    * matrix).
     *
     * The fold runs as a COMPILED Scala twin of the generated cell text
     * ([[lstmFoldUdf]]) by default: Spark's aggregate() is a
@@ -1285,9 +1249,9 @@ object Features {
       else expr(
         s"""aggregate(transform(bx, s -> s.x), array($zero),
            |  (acc, e) -> array($merge))""".stripMargin)
-    val outs = (0 until h).flatMap(u => Seq(
-      expr(q90DecodeH(s"st[$u]")).as(s"h${u + 1}_last"),
-      expr(q90DecodeC(s"st[$u]")).as(s"c${u + 1}_last")))
+    val outs = lstmStateNames(h).zipWithIndex.flatMap { case ((hn, cn), u) => Seq(
+      expr(q90DecodeH(s"st[$u]")).as(s"${hn}_last"),
+      expr(q90DecodeC(s"st[$u]")).as(s"${cn}_last")) }
     t.withColumn("x", Exact.r(pooled, 6))
       .groupBy(col("user_id"), col("scale"))
       .agg(count(lit(1)).as("n_buckets"),
@@ -1357,12 +1321,11 @@ object Features {
     * emissions on extraction. */
   private[graft] def q90OracleCtesH(units: LstmUnits): String = {
     val h = units.length
-    require(h >= 2, "vector-cell oracle needs H >= 2 (H=1 is the scalar q90)")
     def dIdx(a: String, i: Int) = s"$a[${i + 1}]" // DuckDB subscripts: 1-based
     val merge = (0 until h).map(u => q90CellExpr("acc", "e[1]", u, units, dIdx))
       .mkString(",\n   ")
     val zero = Seq.fill(h)(q90Zero).mkString(", ")
-    val pad = Seq.fill(h - 1)("CAST(0 AS DOUBLE)").mkString(", ")
+    val wrap = ("x" +: Seq.fill(h - 1)("CAST(0 AS DOUBLE)")).mkString(", ")
     s"""t AS ($q85OracleBody),
        | b AS (SELECT user_id, scale, bucket,
        |   ${Exact.sql.r(q87PooledSql, 6)} AS x FROM t),
@@ -1371,7 +1334,7 @@ object Features {
        |   list_transform(
        |     list_transform(list_sort(list(struct_pack(b := bucket, x := x))),
        |       v -> v.x),
-       |     x -> [x, $pad]) AS xs
+       |     x -> [$wrap]) AS xs
        |  FROM b GROUP BY 1, 2),
        | f AS (SELECT user_id, scale, n_buckets,
        |   list_reduce(xs, (acc, e) -> [$merge]) AS st
@@ -1380,43 +1343,21 @@ object Features {
 
   /** The decoded per-unit output columns over `f`'s packed state. */
   private[graft] def q90OracleOutsH(h: Int): String =
-    (0 until h).map(u =>
-      s"${q90DecodeH(s"st[${u + 1}]")} AS h${u + 1}_last," +
-        s" ${q90DecodeC(s"st[${u + 1}]")} AS c${u + 1}_last")
+    lstmStateNames(h).zipWithIndex.map { case ((hn, cn), u) =>
+      s"${q90DecodeH(s"st[${u + 1}]")} AS ${hn}_last," +
+        s" ${q90DecodeC(s"st[${u + 1}]")} AS ${cn}_last" }
       .mkString(",\n ")
 
-  /** The H-unit oracle: same CTE chain as the scalar oracle, with the
-    * inputs wrapped to H-element [x, 0, …] lists so list_reduce's
-    * acc/element types match, and the cell text rendered with 1-based
-    * subscripts. */
+  /** The H-unit oracle: q85's body as a CTE, the same projection x, then
+    * the IDENTICAL cell text folded by list_reduce. list_reduce seeds
+    * its accumulator from the FIRST list element (no explicit zero), so
+    * the encoded zero state heads the bucket-sorted input list, and
+    * each input wraps to the H-element list [x, 0, …] so the
+    * accumulator and the elements share one type. */
   private def q90OracleSqlH(units: LstmUnits): String =
     s"WITH ${q90OracleCtesH(units)}\n" +
       s"SELECT user_id, scale, n_buckets,\n ${q90OracleOutsH(units.length)}\n" +
       "FROM f ORDER BY user_id, scale"
-
-  private def q90OracleSql2: String = q90OracleSqlH(q90Units)
-
-  /** The q90 oracle: q85's body as a CTE, the same projection x, then
-    * the IDENTICAL packed-accumulator cell text folded by list_reduce.
-    * list_reduce seeds its accumulator from the FIRST list element (no
-    * explicit zero), so the encoded zero state heads the bucket-sorted
-    * input list; accumulator and elements are both plain DOUBLEs, which
-    * satisfies list_reduce's matching-type rule for free. */
-  private def q90OracleSql: String =
-    s"""WITH t AS ($q85OracleBody),
-       | b AS (SELECT user_id, scale, bucket,
-       |   ${Exact.sql.r(q87PooledSql, 6)} AS x FROM t),
-       | s AS (SELECT user_id, scale, count(*) AS n_buckets,
-       |   [$q90Zero] ||
-       |   list_transform(list_sort(list(struct_pack(b := bucket, x := x))),
-       |     v -> v.x) AS xs
-       |  FROM b GROUP BY 1, 2),
-       | f AS (SELECT user_id, scale, n_buckets,
-       |   list_reduce(xs, (acc, e) -> ${q90MergeExpr("acc", "e")}) AS st
-       |  FROM s)
-       |SELECT user_id, scale, n_buckets,
-       | ${q90DecodeH("st")} AS h_last, ${q90DecodeC("st")} AS c_last
-       |FROM f ORDER BY user_id, scale""".stripMargin
 
   private val q85OracleSql: String =
     q85OracleBody + "\nORDER BY act.user_id, act.scale, act.bucket"
@@ -1507,8 +1448,8 @@ object Features {
   val oracles: Map[String, String] = Map(
     "q85_slice_feature_tensor" -> q85OracleSql,
     "q87_temporal_attention_pool" -> q87OracleSql,
-    "q90_lstm_state" -> q90OracleSql,
-    "q92_lstm_state_h2" -> q90OracleSql2,
+    "q90_lstm_state" -> q90OracleSqlH(q90Scalar),
+    "q92_lstm_state_h2" -> q90OracleSqlH(q90Units),
     "q93_lstm_state_h4" -> q90OracleSqlH(q93Units),
     "q83_activity_gini" ->
       """WITH pu AS (SELECT event_type AS grp, user_id, count(*) AS x

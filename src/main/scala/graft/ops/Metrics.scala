@@ -162,27 +162,32 @@ object Metrics {
       .drop("r2", "s", "np", "n")
   }
 
+  /** The q29/q54 training input: each embedding as a `features`
+    * vector with its binary `label`. Embeddings are narrow: a small-SF
+    * read arrives in one partition, so it widens to 4 and each solver
+    * iteration schedules a few tasks; a cluster-scale input keeps its
+    * natural partitioning — no forced shuffle. Gated on the memoized
+    * parquet-footer row count (statistics-only, like q22/q46) rather
+    * than `.rdd.getNumPartitions`, which forces plan materialization
+    * early. */
+  private def embeddingTrainSet(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.ml.functions.array_to_vector
+    val base = Tables.embeddings(spark, dir).select(
+      col("vec_id"),
+      (col("label") === 0).cast("double").as("label"),
+      array_to_vector(col("embedding")).as("features"))
+    if (Tables.cachedRowCount(spark, dir, "embeddings") < smallInputRows)
+      base.repartition(4)
+    else base
+  }
+
   /** q29: the training-side analog (new_train_*.py) — MLlib
     * LogisticRegression over the embedding vectors. Distributed
     * DataFrame-native train/score; solver RNG is engine-internal, so
     * this is a rows-only driver check (MetricsSpec asserts accuracy). */
   def q29MllibPipeline(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.classification.LogisticRegression
-    import org.apache.spark.ml.functions.array_to_vector
-    // embeddings are narrow: a small-SF read arrives in one partition, so
-    // widen to 4 so each LBFGS iteration schedules a few tasks; a
-    // cluster-scale input keeps its natural partitioning — no forced
-    // shuffle. Gated on the parquet-footer row count (statistics-only,
-    // like q22/q46) rather than `.rdd.getNumPartitions`, which forces
-    // plan materialization early.
-    val base = Tables.embeddings(spark, dir).select(
-      col("vec_id"),
-      (col("label") === 0).cast("double").as("label"),
-      array_to_vector(col("embedding")).as("features"))
-    val data =
-      if (Tables.embeddings(spark, dir).count() < smallInputRows)
-        base.repartition(4)
-      else base
+    val data = embeddingTrainSet(spark, dir)
     val model = new LogisticRegression()
       .setMaxIter(8).setRegParam(0.01).setStandardization(true)
       .fit(data)
@@ -198,20 +203,12 @@ object Metrics {
     * message-passing GNN, so the closest DataFrame-native capability
     * match is a MultilayerPerceptronClassifier over the same embedding
     * features (64 → 16 → 2, seeded). Training is the same distributed
-    * treeAggregate gradient loop as q29 — partitioning notes there
-    * apply. Solver RNG is engine-internal → rows-only driver check;
+    * treeAggregate gradient loop over the same input as q29
+    * ([[embeddingTrainSet]]). Solver RNG is engine-internal → rows-only driver check;
     * MetricsSpec gates accuracy against the majority class. */
   def q54MlpPipeline(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
-    import org.apache.spark.ml.functions.array_to_vector
-    val base = Tables.embeddings(spark, dir).select(
-      col("vec_id"),
-      (col("label") === 0).cast("double").as("label"),
-      array_to_vector(col("embedding")).as("features"))
-    val data =
-      if (Tables.embeddings(spark, dir).count() < smallInputRows)
-        base.repartition(4)
-      else base
+    val data = embeddingTrainSet(spark, dir)
     val model = new MultilayerPerceptronClassifier()
       .setLayers(Array(64, 16, 2))
       .setSeed(42L).setMaxIter(40)

@@ -138,14 +138,16 @@ object FraudPipeline {
       * the raw tensor) to its classifier head; this tier tests whether
       * the recurrent summary adds signal over the attention pool.
       *
-      * `units = 1` folds the scalar cell (8 columns: h, c); `units = 2`
-      * folds q92's coupled 2-unit cell (16 columns: h1, c1, h2, c2) —
-      * the lstm-vs-lstm2 README A/B isolates what the second unit buys.
-      * `fixedCells = true` serves the pre-training dyadic cell tables
-      * instead of the LstmFit-trained ones, the trained-vs-fixed A/B
-      * baseline. */
+      * `units` picks one of the shipped cells
+      * ([[ops.Features.lstmShipped]]): 1 folds q90's scalar cell (8
+      * columns: h, c), 2 folds q92's coupled 2-unit cell (16 columns:
+      * h1, c1, h2, c2) — the lstm-vs-lstm2 README A/B isolates what the
+      * second unit buys. `fixedCells = true` serves the pre-training
+      * dyadic cell tables instead of the LstmFit-trained ones, the
+      * trained-vs-fixed A/B baseline. */
     case class Lstm(units: Int = 1, fixedCells: Boolean = false) extends Tier {
-      require(units == 1 || units == 2, s"Lstm tier units must be 1 or 2, got $units")
+      require(ops.Features.lstmShipped.contains(units),
+        s"Lstm tier units must be one of ${ops.Features.lstmShipped.keys.mkString(", ")}, got $units")
     }
 
     /** q94's fused BD_BGL outputs — the MultiLstm softmax readout and
@@ -191,14 +193,9 @@ object FraudPipeline {
         .select(col("node").as("user_id"), col("h_r1").as("res_r1"),
           col("h_r2").as("res_r2"), col("h_r3").as("res_r3")))
     case Tier.Lstm(units, fixedCells) =>
-      val (st, fields) =
-        if (units == 2)
-          (ops.Features.q90FromH(tensor,
-            if (fixedCells) ops.Features.q90UnitsFixed else ops.Features.q90Units),
-            Seq("h1", "c1", "h2", "c2"))
-        else (ops.Features.q90From(tensor,
-          if (fixedCells) ops.Features.q90ScalarWFixed else ops.Features.q90ScalarW),
-          Seq("h", "c"))
+      val cell = ops.Features.lstmShipped(units)
+      val st = ops.Features.q90FromH(tensor, if (fixedCells) cell.fixed else cell.trained)
+      val fields = ops.Features.lstmStateNames(units).flatMap { case (h, c) => Seq(h, c) }
       Seq(pivotScales(st.select(col("user_id") +: col("scale") +:
         fields.map(f => col(s"${f}_last").as(f)): _*), "lstm_"))
     case Tier.Fused => Seq(

@@ -519,7 +519,7 @@ class FeaturesSpec extends SparkSpec {
       (1L, 1, 0L, 55L, 12.0),
       (2L, 1, 0L, 10L, 3.0), (2L, 1, 1L, 20L, 4.0),
       (2L, 2, 5L, 1L, -6.0))
-    val out = Features.q90From(q90Tensor(rows))
+    val out = Features.q90FromH(q90Tensor(rows), Features.q90Scalar)
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
     for (((u, s), grp) <- rows.groupBy(r => (r._1, r._2))) {
@@ -581,7 +581,7 @@ class FeaturesSpec extends SparkSpec {
     // table's was +5e4 — the invariant under test is the clip and the
     // pack bounds, not the sign)
     val rows = (0L until 12L).map(b => (9L, 1, b, 1L, -50000.0))
-    val out = Features.q90From(q90Tensor(rows)).collect()
+    val out = Features.q90FromH(q90Tensor(rows), Features.q90Scalar).collect()
     assert(out.length == 1)
     val (h, c) = rows.foldLeft((0.0, 0.0)) {
       case ((h, c), (_, _, _, n, m)) => q90RefCell(q90RefX(n, m), h, c)
@@ -598,7 +598,8 @@ class FeaturesSpec extends SparkSpec {
     // IEEE op chain EXACTLY — any drift breaks the hash oracle. Drive
     // both spellings over a randomized multi-group tensor (out-of-order
     // buckets, clip-saturating magnitudes, negative values, long
-    // sequences) and require exceptAll == 0 both directions.
+    // sequences) and require exceptAll == 0 both directions. The loop
+    // covers H=1 (q90's scalar cell) too, beyond what the name says.
     val rnd = new scala.util.Random(9012L)
     val rows = (for {
       u <- 1L to 25L
@@ -612,7 +613,7 @@ class FeaturesSpec extends SparkSpec {
       }
       (u, s, b, 1L + rnd.nextInt(100).toLong, m)
     }).toSeq
-    for (units <- Seq(Features.q90Units, Features.q93Units)) {
+    for (units <- Seq(Features.q90Scalar, Features.q90Units, Features.q93Units)) {
       val t = q90Tensor(rnd.shuffle(rows))
       val hof = Features.q90FromH(t, units, compiled = false)
       val udfF = Features.q90FromH(t, units)

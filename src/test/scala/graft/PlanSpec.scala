@@ -288,8 +288,8 @@ class PlanSpec extends SparkSpec {
       assert(lstm == base + 1, s"q85=$base q90=$lstm")
       // the 2-unit cell folds the SAME collected sequence — widening
       // hidden state must not widen the plan
-      val lstm2 = shuffles(ops.Features.q90From2(
-        ops.Features.q85SliceFeatureTensor(spark, sf)))
+      val lstm2 = shuffles(ops.Features.q90FromH(
+        ops.Features.q85SliceFeatureTensor(spark, sf), ops.Features.q90Units))
       assert(lstm2 == base + 1, s"q85=$base q92=$lstm2")
       // ...and the H-parametric path (q93) carries the same property:
       // the hidden size scales the array accumulator's WIDTH, never the

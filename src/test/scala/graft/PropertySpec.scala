@@ -64,7 +64,7 @@ class PropertySpec extends SparkSpec {
     }
     val t = rows.toDF("user_id", "scale", "bucket", "ne", "mv")
       .select(col("user_id") +: col("scale") +: col("bucket") +: slots: _*)
-    val got = ops.Features.q90From(t).collect()
+    val got = ops.Features.q90FromH(t, ops.Features.q90Scalar).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> (r.getDouble(3), r.getDouble(4)))
       .toMap
     val grouped = rows.groupBy(r => (r._1, r._2))

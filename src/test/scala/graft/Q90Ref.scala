@@ -17,11 +17,10 @@ object Q90Ref {
     // weights from the SAME table the SQL text is generated from (the
     // LstmFit seam) in the SAME left-associated IEEE order — what this
     // reference checks independently is the fold/encoding/engine
-    // plumbing, not the literals (b is ADDED here while negative-b SQL
-    // renders `- |b|`; a + b == a - (-b) bit-for-bit in IEEE)
+    // plumbing, not the literals
     def z(g: String): Double = {
-      val (wx, wh, b) = ops.Features.q90ScalarW(g)
-      wx * x + wh * h + b
+      val (wx, wh, b) = ops.Features.q90Scalar(0)(g)
+      wx * x + wh(0) * h + b
     }
     val i = sig(z("i"))
     val f = sig(z("f"))
