@@ -261,9 +261,11 @@ object DualFit {
     require(rows.nonEmpty, s"[dualfit] zero graph nodes from $dir — wrong fitDir?")
     val idx = rows.iterator.map(_._1).zipWithIndex.toMap
     val degs = new Array[Double](rows.length)
+    // (src, dst) order like the rows (idx rises with the node id), so
+    // the float sums never follow the shuffle layout
     val edges = und.collect().map { r =>
       (idx(r.getAs[Number]("src").longValue), idx(r.getAs[Number]("dst").longValue))
-    }
+    }.sorted
     edges.foreach { case (s, _) => degs(s) += 1 }
     val d = FitData(
       x = rows.map(_._2),

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -40,17 +43,34 @@ object Tables {
     * Its readers: the cache gates (q63/q85), the graph and dedup
     * broadcast-gate hints ([[graft.ops.Graph.gate]], q55's node bound),
     * the q29/q54 trainers' small-input gate and `CurationPipeline`'s
-    * report `n_docs`. The count itself is statistics-only (parquet
-    * footers, no data read) but still schedules a job with a footer
-    * read per file — at lake scale that is real per-invocation
-    * metadata work, so every reader reuses the one count.
+    * report `n_docs`. The driver sums the parquet footers' row counts,
+    * read in parallel as Spark's schema merge reads them: no job runs,
+    * but a lake table's footer reads are real work, so readers share it.
     * Testdata dirs are immutable within a session; a regenerated dir
     * under the same path needs a new session (or this map cleared) to
     * re-count. */
   private val rowCounts =
     new scala.collection.concurrent.TrieMap[(String, String), Long]
   def cachedRowCount(spark: SparkSession, dir: String, name: String): Long =
-    rowCounts.getOrElseUpdate((dir, name), apply(spark, dir, name).count())
+    rowCounts.getOrElseUpdate((dir, name), footerRowCount(spark, s"$dir/$name.parquet"))
+
+  /** Footer row counts of the files under `path` that Spark's listing
+    * keeps: none below the root named `.*` (checksums) or `_*`
+    * (`_SUCCESS`, `_temporary/`). */
+  private def footerRowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val top = fs.makeQualified(root).toUri.getPath.stripSuffix("/")
+    val listing = fs.listFiles(root, true)
+    val files = Iterator.continually(listing).takeWhile(_.hasNext).map(_.next().getPath)
+      .filterNot(_.toUri.getPath.stripPrefix(top).split('/')
+        .exists(n => n.startsWith(".") || n.startsWith("_"))).toArray
+    java.util.Arrays.stream(files).parallel().mapToLong { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum()
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

@@ -308,17 +308,18 @@ object Features {
         .withColumn("peer", get_json_object(col("props"), "$.k").cast("long")))
       .select(col("node").as("user_id"),
         col("sd_pos").as("out_deg_signed"), col("sd_neg").as("in_deg_signed"))
-    // ONE orders⋈lineitem pass AND one symmetrize+dedup shuffle feed
-    // both graph constituents: the flagged undirected pair set carries
-    // q22's full graph and q23's heavy-line subgraph (hot = 1) in the
-    // same cached table (MEMORY_AND_DISK — at scale it spills rather
-    // than re-running the fact join).
-    val undAll = Release.cache(Graph.undWithHot(Graph.factBase(spark, dir)))
-    val nad = Graph.q22FromUnd(spark, dir, undAll.select(col("src"), col("dst")))
+    // ONE orders⋈lineitem pass AND one dedup exchange feed both graph
+    // constituents: canonical pairs flagged `hot` where a heavy line
+    // backs either direction, cached (half the symmetric set's rows;
+    // MEMORY_AND_DISK spills rather than re-run the fact join) and
+    // mirrored on read into q22's graph and q23's hot = 1 subgraph.
+    val pairs = Release.cache(Graph.canonPairs(Graph.factBase(spark, dir)
+      .withColumn("hot", (col("l_quantity") >= 45).cast("int")), "hot"))
+    val nad = Graph.q22FromUnd(spark, dir, Graph.mirrored(pairs.select(col("a"), col("b"))))
       .select(col("node").as("user_id"), col("nbr_avg_deg"))
-    val cc = Graph.q23FromUndKeyed(undAll
-        .filter(col("hot") === 1 && col("src") =!= col("dst"))
-        .select(col("src"), col("dst")), Nil)
+    val cc = Graph.q23FromUndKeyed(Graph.mirrored(pairs
+        .filter(col("hot") === 1 && col("a") =!= col("b"))
+        .select(col("a"), col("b"))), Nil)
       .select(col("node").as("user_id"), col("clustering"))
     base
       .join(sd, Seq("user_id"), "left")

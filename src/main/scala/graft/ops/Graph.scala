@@ -27,7 +27,8 @@ import org.apache.spark.sql.expressions.Window
   * (unkeyed) operators call the keyed cores with `keys = Nil`; a
   * presentation `orderBy` appears only in the public `qNN` op.
   *  - [[factBase]]: the one `orders ⋈ lineitem` edge join;
-  *  - [[symmetrized]]: both edge directions, optionally keyed;
+  *  - [[undFrom]] = [[mirrored]] over [[canonPairs]]: the undirected
+  *    pair set (the keyed q85/q88 builds use [[symmetrized]]);
   *  - [[capPerKeys]]: the hub adjacency cap;
   *  - [[q20DegreesKeyed]]: the in/out degree core;
   *  - [[q23FromUndKeyed]]: the triangle/clustering core, in its
@@ -37,8 +38,8 @@ import org.apache.spark.sql.expressions.Window
 object Graph {
 
   /** One orders⋈lineitem pass carrying everything the graph family
-    * derives its edge lists from — q59 symmetrizes THIS once (see
-    * [[undWithHot]]) to feed both the full-graph (q22) and heavy-line
+    * derives its edge lists from — q59 dedups THIS once into flagged
+    * [[canonPairs]] to feed both the full-graph (q22) and heavy-line
     * (q23) constituents, so the fact join runs once per assembly
     * instead of once per operator. Standalone q23 filters it through
     * [[hotEdgesFrom]] — the l_quantity predicate still pushes through
@@ -74,54 +75,26 @@ object Graph {
   private[ops] def gate(rows: Long): DataFrame => DataFrame =
     df => if (broadcastable(rows)) broadcast(df) else df
 
-  /** Upper bound of the node count, read from the dimension tables'
-    * parquet footers (count(*) over parquet is statistics-only; nodes ⊆
-    * customers ∪ suppliers). The counts are memoized via
-    * [[Tables.cachedRowCount]] — one footer job per (dir, table) per
-    * session, not two fresh jobs per operator call. */
+  /** Upper bound of the node count, summed from the dimension tables'
+    * parquet footers on the driver (nodes ⊆ customers ∪ suppliers). The
+    * counts are memoized via [[Tables.cachedRowCount]] — no job, and
+    * one footer read per (dir, table) file per session. */
   private[ops] def nodeBound(spark: SparkSession, dir: String): Long =
     Tables.cachedRowCount(spark, dir, "customer") +
       Tables.cachedRowCount(spark, dir, "supplier")
   private[ops] def nodeGate(spark: SparkSession, dir: String): DataFrame => DataFrame =
     gate(nodeBound(spark, dir))
 
-  /** RAW (non-distinct) edge rows: q22/q23 symmetrize and THEN
-    * dedup, so a distinct here would be a wasted extra shuffle of the
-    * fact rows — symmetrize-raw → one distinct does the same work in
-    * one pass. (q20 keeps its own distinct edges(): its conditional
-    * counts rely on pair uniqueness per direction.) */
+  /** RAW (non-distinct) edge rows: [[canonPairs]] dedups them, so a
+    * distinct here would be a wasted extra shuffle of the fact rows.
+    * (q20 keeps its own distinct edges(): its conditional counts rely
+    * on pair uniqueness per direction.) */
   private[ops] def edgesFrom(base: DataFrame): DataFrame =
     base.select(col("src"), col("dst"))
 
   private[ops] def hotEdgesFrom(base: DataFrame): DataFrame =
     base.filter(col("l_quantity") >= 45)
       .select(col("src"), col("dst"))
-
-  /** ONE symmetrize+dedup pass over the raw fact pairs serving BOTH
-    * graph grains: the full undirected pair set (q22's graph) with a
-    * per-pair `hot` flag marking pairs backed by a heavy line in either
-    * direction (q23's subgraph = `hot = 1` minus self-loops). q59 pays
-    * this single shuffle of the fact rows where separate q22/q23 builds
-    * would each symmetrize+dedup their own copy. */
-  private[ops] def undWithHot(base: DataFrame): DataFrame = {
-    // dedup-first like [[undFrom]], carrying the hot flag through both
-    // passes as max(): reduce the E raw fact rows to E′ directed pairs
-    // first, then symmetrize and re-reduce the doubled unique set
-    val hot = (col("l_quantity") >= 45).cast("int").as("hot")
-    base.select(col("src"), col("dst"), hot)
-      .groupBy(col("src"), col("dst")).agg(max(col("hot")).as("hot"))
-      .select(explode(array(
-        struct(col("src"), col("dst"), col("hot")),
-        struct(col("dst").as("src"), col("src").as("dst"), col("hot")))).as("e"))
-      .select(col("e.src"), col("e.dst"), col("e.hot"))
-      // re-reduce under hash(src) instead of hash(src, dst): same one
-      // exchange, and the output partitioning then satisfies q23's cap
-      // window / degree agg and q22's final per-src aggregation (the
-      // undFromBySrc rationale — its consumers funnel per-src
-      // adjacency into one partition anyway)
-      .repartition(col("src"))
-      .groupBy(col("src"), col("dst")).agg(max(col("hot")).as("hot"))
-  }
 
   /** Distinct directed edges (src=customer, dst=supplier). */
   private def edges(spark: SparkSession, dir: String): DataFrame =
@@ -149,36 +122,38 @@ object Graph {
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"): _*)
       .select(keys.map(col) :+ col("e.src") :+ col("e.dst"): _*)
 
-  /** Distinct undirected pair set from raw directed fact pairs: dedup
-    * the DIRECTED pairs first (one E-row shuffle), THEN symmetrize and
-    * dedup the doubled copy (a 2E′-row shuffle over already-unique
-    * pairs — the reversed copy still needs its own dedup because
-    * customer and supplier keys share a numeric range, so a reverse
-    * directed pair can pre-exist). Measured ~25-30% faster at sf1 than
-    * symmetrize-raw-then-one-distinct (8.3 vs 11.8 s best-of-2; the
-    * single 2E-row distinct's map-side partial dedup is pure overhead
-    * when duplication is low, and at 100 TB — where real fact tables
-    * repeat pairs heavily — the shuffled volume E + 2E′ beats 2E
-    * outright since E′ ≪ E). Shared by every unweighted graph build
-    * (q22/q23/q66/q67/q73/q75/q86); q80 keeps raw multiplicities for
-    * its edge weights and q85's keyed build already dedups first. */
-  private[graft] def undFrom(e: DataFrame): DataFrame =
-    symmetrized(e.distinct()).distinct()
+  /** Each unordered pair of the directed pairs `e` once, as (a, b) with
+    * a ≤ b, in ONE exchange keyed on the canonical pair; each `flags`
+    * column (q59's `hot`) is OR-ed over both directions as max(). The
+    * order is null-safe, NULL first: least/greatest skip NULLs and would
+    * fold (NULL, 5) into the self-loop (5, 5). */
+  private[graft] def canonPairs(e: DataFrame, flags: String*): DataFrame = {
+    val asIs = col("src").isNull || (col("dst").isNotNull && col("src") <= col("dst"))
+    val pairs = e.select(Seq(when(asIs, col("src")).otherwise(col("dst")).as("a"),
+      when(asIs, col("dst")).otherwise(col("src")).as("b")) ++ flags.map(col): _*)
+    val ors = flags.map(f => max(f).as(f))
+    if (ors.isEmpty) pairs.distinct() else pairs.groupBy("a", "b").agg(ors.head, ors.tail: _*)
+  }
 
-  /** [[undFrom]] with the final dedup spelled repartition(src) +
-    * dropDuplicates — the SAME single exchange (hash(src) colocates
-    * every (src, dst) copy), but the resulting partitioning satisfies
-    * any downstream (src)-clustered requirement: q23's adjacency-cap
-    * window, its true-degree aggregate and the e2 side of the triangle
-    * join all run exchange-free on top of it. Only for consumers that
-    * ALREADY funnel per-src adjacency through one partition (the cap
-    * window's required distribution) — it adds no skew those plans
-    * didn't have; aggregate-only consumers (q22/q66/q73…) keep
-    * [[undFrom]], whose spread (src,dst) layout plus map-side partial
-    * aggregation is the more skew-robust shape. */
-  private[graft] def undFromBySrc(e: DataFrame): DataFrame =
-    symmetrized(e.distinct())
-      .repartition(col("src")).dropDuplicates()
+  /** (a, b) pairs mirrored map-side into (src, dst) = (a, b) and (b, a),
+    * a self-loop once. */
+  private[graft] def mirrored(pairs: DataFrame): DataFrame = {
+    def row(s: String, d: String) = struct(col(s).as("src"), col(d).as("dst"))
+    pairs.select(explode(when(col("a") <=> col("b"), array(row("a", "b")))
+      .otherwise(array(row("a", "b"), row("b", "a")))).as("e")).select("e.*")
+  }
+
+  /** The distinct undirected pair set of the raw directed pairs `e`.
+    * Customer and supplier keys share one node space, so a pair's
+    * reverse can pre-exist; canonical pairs dedup both directions in one
+    * exchange of the E raw rows, and the symmetric 2E′ set never crosses
+    * one (a traced perfbench fraud_sf1 call shuffled 435,578 records,
+    * against 797,485 when the mirrored set was deduped again). Shared
+    * by every unkeyed unweighted graph build; q80 keeps multiplicities
+    * for its weights, and the keyed q85/q88 builds stay on
+    * [[symmetrized]]: q85's dedup under hash(keys…, src) spares the
+    * three slice-keyed exchanges above it. */
+  private[graft] def undFrom(e: DataFrame): DataFrame = mirrored(canonPairs(e))
 
   private val hotEdgesSql =
     """SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
@@ -420,9 +395,7 @@ object Graph {
     * averages the node's own degree; we implement the intended
     * neighbor-degree mean. Integer sum / count keeps the oracle exact. */
   def q22NeighborAvgDegree(spark: SparkSession, dir: String): DataFrame =
-    // dedup-first undirected build — measurement and 100 TB argument
-    // on [[undFrom]]; the cache feeds both the degree agg and the
-    // neighbor join
+    // the cache feeds both the degree agg and the neighbor join
     q22FromUnd(spark, dir, Release.cache(undFrom(edgesFrom(factBase(spark, dir)))))
       .orderBy(col("node"))
 
@@ -445,8 +418,8 @@ object Graph {
     * (nx.clustering, data_process.py:147). Canonical a<b<c two-hop join
     * counts each triangle once; 2T/(d(d-1)) with integer-exact T, d. */
   def q23Triangles(spark: SparkSession, dir: String): DataFrame =
-    q23FromUndKeyed(Release.cache(undFromBySrc(hotEdgesFrom(factBase(spark, dir)))
-      .filter(col("src") =!= col("dst"))), Nil)
+    q23FromUndKeyed(Release.cache(mirrored(canonPairs(hotEdgesFrom(factBase(spark, dir)))
+      .filter(col("a") =!= col("b")))), Nil)
       .orderBy(col("node"))
 
   /** q24: degree^0.75, class-balanced sampling probability

@@ -29,11 +29,14 @@ import org.apache.spark.sql.types._
   * gets the same artifacts the Python pipeline produces, distributed.
   * The model stage reads that plan through an eager local checkpoint,
   * a plan leaf: one collect brings the assembly to the driver, which
-  * fits [[LocalLogistic]] (MLlib's objective and LBFGS, so the same
-  * model up to rounding; [[mllibFit]] stays as the reference the tests
-  * hold it to) and scores the held-out fold there, a fixed handful of
-  * jobs whatever the iteration count, where MLlib's fit runs a
-  * summarizer job and one treeAggregate job per LBFGS iteration.
+  * counts the users in the collected rows, fits [[LocalLogistic]]
+  * (MLlib's objective and LBFGS, so the same model up to rounding;
+  * [[mllibFit]] stays as the reference the tests hold it to) and
+  * scores the held-out fold there, a fixed handful of jobs whatever the
+  * iteration count, where MLlib's fit runs a summarizer job and one
+  * treeAggregate job per LBFGS iteration. The checkpoint stays although
+  * only that collect reads it: [[graft.Release.checkpoint]] releases
+  * the feature query's broadcast relations, which a bare collect keeps.
   *
   * The driver fit was the faster one at every size measured, on ScaleGen
   * replicas of sf0.1 (local[4], 3g heap, 4-core VM): at ×4 (6,000 users
@@ -78,8 +81,8 @@ object FraudPipeline {
     * its P(fraud). It is a driver-local frame, so reading it runs no
     * job. `features` is the feature matrix in no particular row order.
     *
-    * `nUsers` is counted from the checkpointed assembly during the run
-    * — callers report it instead of re-counting `features`, whose plan
+    * `nUsers` is the number of assembly rows the fit collects — callers
+    * report it instead of re-counting `features`, whose plan
     * would re-execute the whole multi-tier feature DAG. The assembly is
     * the frame AFTER the inner label join with `customer`, so `nUsers`
     * is the LABELED (trainable) user count: a feature user_id absent
@@ -272,11 +275,9 @@ object FraudPipeline {
     //    slice_feature incl. signed degrees / neighbor degree /
     //    clustering — data_process.py:159-168), then each tier's frames;
     //    sort-free, as nothing downstream needs its order.
-    // 2. labels, the stratified split and the feature vector. The
-    //    assembly feeds the fit AND the held-out scoring, so the feature
-    //    DAG runs once, into a checkpoint both read as a leaf; its row
-    //    count is the labeled user count
-    val (features, assembled, nUsers) = Stage(spark, "features") {
+    // 2. labels, the stratified split and the feature vector, run once
+    //    into a checkpoint the fit's one collect reads as a leaf
+    val (features, assembled) = Stage(spark, "features") {
       val parity = ops.Features.q59Core(spark, dir)
       lazy val tensor = ops.Features.q85Core(spark, dir)
       val features = tiers.foldLeft(parity) { (acc, tier) =>
@@ -285,20 +286,20 @@ object FraudPipeline {
         frames.foldLeft(acc)(_.join(_, Seq("user_id"), "left"))
           .na.fill(0.0, frames.flatMap(_.columns).filterNot(_ == "user_id"))
       }
-      val assembled = Release.checkpoint(assemble(spark, dir, features))
-      (features, assembled, assembled.count())
+      (features, Release.checkpoint(assemble(spark, dir, features)))
     }
 
     // 3. train on the train fold only, score the held-out fold: hard
     //    prediction for the confusion suite, P(fraud) for the ranking
-    //    metrics, all on the driver
-    val scored = Stage(spark, "fit") {
-      val (train, test) = driverRows(assembled).partition(_.getBoolean(2))
+    //    metrics, all on the driver; the rows count the labeled users
+    val (scored, nUsers) = Stage(spark, "fit") {
+      val rows = driverRows(assembled)
+      val (train, test) = rows.partition(_.getBoolean(2))
       val model = driverFit(train.toSeq)
-      spark.createDataFrame(java.util.List.of(test.map { r =>
+      (spark.createDataFrame(java.util.List.of(test.map { r =>
         val x = r.getAs[Vector](3).toArray
         Row(r.getLong(0), r.getDouble(1).toInt, model.predict(x), model.score(x))
-      }: _*), scoredSchema)
+      }: _*), scoredSchema), rows.length.toLong)
     }
 
     // 4. the reference's full test_model suite (new_utlis_1.py:35-50:

@@ -199,7 +199,7 @@ class PlanSpec extends SparkSpec {
 
   test("q59: ONE lineitem scan feeds both graph constituents") {
     // q22's full graph and q23's heavy-line subgraph both derive from
-    // the single flagged symmetrize+dedup pass (undWithHot) over one
+    // the single flagged canonical-pair dedup (canonPairs) over one
     // orders⋈lineitem build — a second lineitem scan means the shared
     // pass regressed into per-constituent edge builds. (events scans
     // stay bounded by the q19 pin above; filter-pushdown differences
@@ -221,10 +221,49 @@ class PlanSpec extends SparkSpec {
         }.flatten
       val lineitemScans = fileScans(plan)
         .filter(_.relation.location.inputFiles.exists(_.contains("lineitem")))
-      // one scan inside the shared cached undWithHot build; dedup by
+      // one scan inside the shared cached canonPairs build; dedup by
       // cached-subtree identity: all occurrences must be the SAME scan
       assert(lineitemScans.map(_.id).distinct.size <= 1,
         lineitemScans.map(_.simpleString(80)))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("q22/q59: the undirected set dedups on the canonical pair only, never on (src, dst)") {
+    // the symmetric set is mirrored map-side from canonical (a, b)
+    // pairs: one hash exchange keyed on (a, b) dedups each unordered
+    // pair, and no aggregate keyed on (src, dst) re-dedups the mirrored
+    // copy behind a (src, dst) exchange (q23's triangle join still
+    // shuffles its pair sides on (src, dst), into a join). Cached and
+    // adaptive subplans are walked too, each distinct one once.
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val aqeWalk = new AdaptiveSparkPlanHelper {}
+    def withCached(p: SparkPlan): Seq[SparkPlan] = p +: aqeWalk.collect(p) {
+      case im: InMemoryTableScanExec => withCached(im.relation.cachedPlan)
+    }.flatten
+    def names(es: Seq[Expression]): Seq[String] =
+      es.map { case a: Attribute => a.name; case e => e.sql }
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Release.scope {
+      for ((name, df) <- Seq(
+          "q22" -> ops.Graph.q22NeighborAvgDegree(spark, sf),
+          "q59" -> ops.Features.q59FullFeatureMatrix(spark, sf))) {
+        val plans = withCached(df.queryExecution.executedPlan).distinct
+        val exchanges = plans.flatMap(aqeWalk.collect(_) {
+          case ShuffleExchangeExec(h: HashPartitioning, _, _, _) => names(h.expressions)
+        })
+        val groupings = plans.flatMap(aqeWalk.collect(_) {
+          case agg: HashAggregateExec => names(agg.groupingExpressions)
+        })
+        assert(exchanges.count(_ == Seq("a", "b")) == 1, s"$name: $exchanges")
+        assert(!groupings.contains(Seq("src", "dst")), s"$name: $groupings")
+      }
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 

@@ -46,6 +46,36 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("undFrom: each directed pair once with NULL endpoints; a carried flag ORs both directions") {
+    // canonical-pair dedup + map-side mirror on multigraphs with
+    // self-loops, reverse duplicates and NULL endpoints: a NULL sorts
+    // first, so (NULL, 5) stays apart from the self-loop (5, 5), and
+    // (NULL, NULL) is one self-loop row
+    val rnd = new Random(13)
+    def node(): Option[Long] = if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(12).toLong)
+    def pair(r: org.apache.spark.sql.Row): (Option[Long], Option[Long]) =
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long]))
+    for (_ <- 1 to 5) {
+      val edges = Seq.fill(300)((node(), node(), rnd.nextInt(5) == 0))
+      val expected = edges.flatMap { case (a, b, _) => Seq((a, b), (b, a)) }.toSet
+      val df = edges.toDF("src", "dst", "hot").withColumn("hot", col("hot").cast("int"))
+      val got = ops.Graph.undFrom(df.select("src", "dst")).collect().map(pair)
+      assert(got.length == expected.size)
+      assert(got.toSet == expected)
+      // the canonical pair per unordered pair, NULL first, flag OR-ed
+      def canon(p: (Option[Long], Option[Long])) = p match {
+        case (Some(a), Some(b)) if a > b => p.swap
+        case (Some(_), None) => p.swap
+        case _ => p
+      }
+      val flagged = ops.Graph.canonPairs(df, "hot").collect().map(r => pair(r) -> r.getInt(2))
+      val hot = edges.groupBy { case (a, b, _) => canon((a, b)) }
+        .map { case (p, rows) => p -> (if (rows.exists(_._3)) 1 else 0) }
+      assert(flagged.length == hot.size)
+      assert(flagged.toMap == hot)
+    }
+  }
+
   test("q90 fold: state bounds and bit-equality vs reference on random sequences") {
     // random activity magnitudes push the projection x to ±thousands —
     // exp overflows to Inf and the gates must saturate identically in

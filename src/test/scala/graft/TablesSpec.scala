@@ -2,7 +2,8 @@ package graft
 
 /** `Tables.apply`'s schema memo: only the first read of a path pays
   * parquet's schema-inference job, the memo equals what inference
-  * returns, and later reads still list the files afresh. */
+  * returns, and later reads still list the files afresh. The memoized
+  * row count reads parquet footers on the driver, with no job. */
 class TablesSpec extends SparkSpec {
 
   private def writeEvents(path: String, mode: String, ids: Seq[Long]): Unit = {
@@ -40,5 +41,18 @@ class TablesSpec extends SparkSpec {
     assert(after.count() == 8)
     assert(after.select("event_id").collect().map(_.getLong(0)).sorted.toSeq ==
       (1L to 8L))
+  }
+
+  test("a footer row count schedules no job and equals count() on a multi-file table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables-footers").toString
+    val path = s"$dir/ids.parquet"
+    import spark.implicits._
+    (1L to 1000L).toDF("id").repartition(4).write.parquet(path)
+    (1L to 7L).toDF("id").coalesce(1).write.mode("append").parquet(path)
+    assert(new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet")) == 5)
+    val (n, jobs) = jobsDuring(Tables.cachedRowCount(spark, dir, "ids"))
+    assert(jobs.isEmpty, jobs.map(j => s"job ${j.jobId}: ${j.stageInfos.map(_.name).mkString(", ")}"))
+    assert(n == spark.read.parquet(path).count())
+    assert(n == 1007L)
   }
 }

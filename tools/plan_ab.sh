@@ -5,7 +5,10 @@
 # first (expression ids #N, plan_id=N, RDD[N], Subquery N, lambda class
 # names, and the ids AQE and whole-stage codegen number in completion
 # order: query-stage ids and codegen ids), so a clean run prints only
-# the closing summary line.
+# the per-key exchange table and the closing summary line.
+# After the diff, one line per key gives each side's count of Exchange
+# and BroadcastExchange nodes (as "shuffles/broadcasts"), with a `*` on
+# the keys whose counts differ; cached subplans count once each.
 # Build each checkout first (`sbt -batch compile`).
 #
 # usage: tools/plan_ab.sh <checkoutA> <checkoutB> <sfDir> [key ...]
@@ -51,5 +54,15 @@ explain "$A" "$OUT/a.txt"
 explain "$B" "$OUT/b.txt"
 diff -u --label "$A" --label "$B" "$OUT/a.txt" "$OUT/b.txt"
 rc=$?
+exchanges() { # <plans> -> "<key> <shuffles>/<broadcasts>" per key
+  awk '/^========== .* ==========$/ { k = $2; keys[++n] = k; ex[k] = 0; bx[k] = 0; next }
+       /^\([0-9]+\) Exchange$/ { ex[k]++ }
+       /^\([0-9]+\) BroadcastExchange$/ { bx[k]++ }
+       END { for (i = 1; i <= n; i++) print keys[i], ex[keys[i]] "/" bx[keys[i]] }' "$1"
+}
+echo "== plan_ab: Exchange/BroadcastExchange nodes per key, A -> B =="
+join -a 1 -a 2 -e - -o 0,1.2,2.2 <(exchanges "$OUT/a.txt" | sort) \
+    <(exchanges "$OUT/b.txt" | sort) |
+  awk '{ printf "%-36s %7s -> %-7s%s\n", $1, $2, $3, ($2 == $3 ? "" : " *") }'
 echo "== plan_ab: $(grep -c '^==========' "$OUT/a.txt") plans, diff rc=$rc (outputs: $OUT) =="
 exit "$rc"
