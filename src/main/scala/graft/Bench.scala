@@ -13,21 +13,10 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // Optional comma-separated key filter for local iteration
-    // (e.g. SPARK_GRAFT_ONLY=q47_connected_components); driver leaves it
-    // unset and measures everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // a typo'd key would silently bench nothing — fail loudly instead
-    only.foreach { keys =>
-      val unknown = keys -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val queries = only match {
-      case Some(keys) => SparkEntry.queries.filter { case (k, _) => keys(k) }
-      case None => SparkEntry.queries
-    }
+    // Optional key filter for local iteration
+    // (e.g. SPARK_GRAFT_ONLY=q47_connected_components); unset, every
+    // query is measured.
+    val queries = SparkEntry.selected(SparkEntry.queries)
     // qNN prefixes must be unique across the whole registry: a silent
     // full-name fallback on collision would quietly re-grow the JSON
     // past the driver's 2000-char stdout tail (and a bare 'qNN' key

@@ -28,4 +28,18 @@ object SparkEntry {
       ops.Sessions.oracles ++ ops.TimeJoins.oracles ++ ops.Sampling.oracles ++
       ops.Dedup.oracles ++ ops.Components.oracles ++ ops.Multimodal.oracles ++
       ops.Corpus.oracles ++ ops.Fused.oracles
+
+  /** `m` cut to the keys `SPARK_GRAFT_ONLY` names (comma-separated), or
+    * all of `m` when it is unset: the key filter `Bench` and `Verify`
+    * share for local iteration. A key that names no query fails loudly,
+    * since a typo would otherwise run nothing and read as an empty but
+    * valid result. */
+  def selected[V](m: Map[String, V]): Map[String, V] =
+    sys.env.get("SPARK_GRAFT_ONLY").fold(m) { only =>
+      val keys = only.split(",").map(_.trim).toSet
+      val unknown = keys -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      m.filter { case (k, _) => keys(k) }
+    }
 }

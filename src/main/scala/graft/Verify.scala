@@ -11,25 +11,11 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
-    // Optional key filter for local iteration (same contract as Bench);
-    // the driver leaves it unset and dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // a typo'd key would silently filter the run to nothing — an empty
-    // oracle_sql.json reads as an empty-but-valid gate, so fail loudly
-    only.foreach { keys =>
-      val unknown = keys -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val queries = only match {
-      case Some(keys) => SparkEntry.queries.filter { case (k, _) => keys(k) }
-      case None => SparkEntry.queries
-    }
-    val oracles = only match {
-      case Some(keys) => SparkEntry.oracleSql.filter { case (k, _) => keys(k) }
-      case None => SparkEntry.oracleSql
-    }
+    // Optional key filter for local iteration (same contract as Bench),
+    // applied to the oracles too; unset, every query and oracle is
+    // dumped.
+    val queries = SparkEntry.selected(SparkEntry.queries)
+    val oracles = SparkEntry.selected(SparkEntry.oracleSql)
     // one scope per query: what the op materializes goes with it
     queries.foreach { case (name, fn) =>
       try Release.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")

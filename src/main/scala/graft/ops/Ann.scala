@@ -248,11 +248,12 @@ object Ann {
   }
 
   /** q48 with LIVE training: the MLlib k-means quantizer (fixed seed)
-    * fit on the target corpus, served through the float probe path.
-    * Trainer RNG is engine-specific, so THIS path is gated by the
-    * TextDedupSpec recall spec, not a hash oracle; the registered
-    * q48_ann_ivf entry instead serves the FROZEN centroid table below,
-    * whose probe is pure deterministic arithmetic and hash-oracled. */
+    * fit on the target corpus, served through the same exact probe as
+    * the frozen table. Trainer RNG is engine-specific, so THIS path is
+    * gated by the TextDedupSpec recall spec, not a hash oracle; the
+    * registered q48_ann_ivf entry instead serves the FROZEN centroid
+    * table below, which makes the whole call deterministic arithmetic
+    * and hash-oracled. */
   def q48AnnIvfTrained(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
@@ -260,9 +261,7 @@ object Ann {
       array_to_vector(col("embedding")).as("features"))
     val model = new KMeans().setK(8).setSeed(42L).setMaxIter(10).fit(feats)
     ivfProbe(spark, dir,
-      model.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (i, c.toArray.map(_.toFloat))
-      }.toIndexedSeq)
+      model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toIndexedSeq)
   }
 
   /** q48: IVF (inverted-file) ANN — the scale path past LSH: a coarse
@@ -278,18 +277,29 @@ object Ann {
     * DuckDB, leaving only the trainer RNG outside the oracle
     * (exactly the reference's index-then-serve split). */
   def q48AnnIvf(spark: SparkSession, dir: String): DataFrame =
-    ivfProbeExact(spark, dir, Q48Centroids.table)
+    ivfProbe(spark, dir, Q48Centroids.table)
 
-  /** The EXACT-arithmetic probe under the frozen centroid table:
-    * centroids and vectors quantize to the shared 1e9-scaled int64 grid
-    * (prep's DECIMAL(18,9) discipline), and nearest-cell ranking orders
-    * by ‖y‖² − 2·x·y — the ‖x‖² term is constant per vector, so the
-    * argmin matches squared euclidean distance while every compared key
-    * is exact integer math (carried as DECIMAL(38,0): 2·dot can reach
-    * ~2.4e18 and the subtraction must not wrap int64). Ties break
-    * toward the smallest cell id, in both engines. */
-  private[graft] def ivfProbeExact(spark: SparkSession, dir: String,
-      centroids: Seq[(Int, Array[Double])], nprobe: Int = 3): DataFrame = {
+  /** Cells each query probes, of the k the centroid table holds. */
+  private final val nprobe = 3
+
+  /** The serving half of the IVF index, decoupled from training: probe
+    * the corpus with an externally supplied centroid table. The frozen
+    * table (q48), the MLlib batch fit ([[q48AnnIvfTrained]]) and the
+    * streaming mini-batch refresh (streaming.EventStream.ivfUpdateStream)
+    * all serve through THIS function, which is exactly the
+    * lambda-architecture seam: a periodic full re-train and a
+    * continuous drift-correction update share one oracled probe.
+    *
+    * Exact arithmetic: centroids and vectors quantize to the shared
+    * 1e9-scaled int64 grid (prep's DECIMAL(18,9) discipline), and
+    * nearest-cell ranking orders by ‖y‖² − 2·x·y — the ‖x‖² term is
+    * constant per vector, so the argmin matches squared euclidean
+    * distance while every compared key is exact integer math (carried
+    * as DECIMAL(38,0): 2·dot can reach ~2.4e18 and the subtraction must
+    * not wrap int64). Ties break toward the smallest cell id, in both
+    * engines. */
+  private[graft] def ivfProbe(spark: SparkSession, dir: String,
+      centroids: Seq[(Int, Array[Double])]): DataFrame = {
     val cdf = spark.createDataFrame(centroids).toDF("cell", "centroid")
       .select(col("cell"), expr("transform(centroid, x -> " +
         "CAST(CAST(x AS DECIMAL(18,9)) * 1000000000 AS BIGINT))").as("cv"))
@@ -321,56 +331,6 @@ object Ann {
       .orderBy(col("qid"), col("rk"))
   }
 
-  /** The serving half of the IVF index, decoupled from training: probe
-    * the corpus with an externally supplied centroid table — the MLlib
-    * batch fit (q48) and the streaming mini-batch refresh
-    * (streaming.EventStream.ivfUpdateStream) both hand their centroids
-    * to THIS function, which is exactly the lambda-architecture seam: a
-    * periodic full re-train and a continuous drift-correction update
-    * serve through one probe path. Cell assignment is nearest-centroid
-    * (what KMeans.transform computes), done as a broadcast crossJoin +
-    * per-vector argmin so it works for any centroid provenance; the
-    * corpus side then shuffles only by cell id. */
-  private[graft] def ivfProbe(spark: SparkSession, dir: String,
-      centroids: Seq[(Int, Array[Float])], nprobe: Int = 3): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val cdf = spark.createDataFrame(centroids).toDF("cell", "centroid")
-    val sqdist = expr(
-      """aggregate(zip_with(embedding, centroid,
-        |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) *
-        |            (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-        | CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-    val assigned = emb.crossJoin(broadcast(cdf))
-      .withColumn("dist", sqdist)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cell"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    // queries probe their nprobe closest centroids (exact double dot —
-    // ranking only, no oracle), then exact cosine within probed cells
-    val q = prep(assigned.filter(col("vec_id") < 10), "qid", "qe", "qn")
-      .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qraw")), "qid")
-    val probes = q.crossJoin(broadcast(cdf))
-      .withColumn("dist", expr(
-        """aggregate(zip_with(qraw, centroid,
-          |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) *
-          |            (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-          | CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col("cell"))))
-      .filter(col("prank") <= nprobe)
-      .select(col("qid"), col("qe"), col("qn"), col("cell"))
-    val c = prep(assigned.filter(col("vec_id") >= 10), "cid", "ce", "cn")
-      .join(assigned.select(col("vec_id").as("cid"), col("cell")), "cid")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid"))
-    c.join(broadcast(probes), Seq("cell"))
-      .select(col("qid"), col("cid"), col("cell"), cosine("qe", "ce", "qn", "cn").as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 10)
-      .orderBy(col("qid"), col("rk"))
-  }
-
   /** The 8×64 sign table as a VALUES list for the q35 oracle — the same
     * [[lshSign]] literals the Spark plan inlines. */
   private def lshSignsSql: String =
@@ -385,7 +345,7 @@ object Ann {
       s"($cell, [" + c.map(v => f"$v%.6f").mkString(",") + "])"
     }.mkString(",\n  ")
 
-  /** [[ivfProbeExact]] spelled for DuckDB: the same 1e9-scaled int64
+  /** [[ivfProbe]] spelled for DuckDB: the same 1e9-scaled int64
     * quantization, the same ‖y‖²−2·x·y DECIMAL(38,0) ranking key, the
     * same (cell, cid) tie-breaks, the shared [[cosineSql]] core. */
   private def q48OracleSql: String =
@@ -406,7 +366,7 @@ object Ann {
       |  FROM dt JOIN yy USING (cell)),
       | cellof AS (SELECT vec_id, cell FROM rankc WHERE rn = 1),
       | probes AS (SELECT vec_id AS qid, cell FROM rankc
-      |  WHERE vec_id < 10 AND rn <= 3),
+      |  WHERE vec_id < 10 AND rn <= $nprobe),
       | qt AS (SELECT * FROM embeddings WHERE vec_id < 10),
       | ct AS (SELECT e.* FROM embeddings e
       |  JOIN cellof co ON e.vec_id = co.vec_id WHERE e.vec_id >= 10),

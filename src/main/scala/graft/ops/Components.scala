@@ -12,13 +12,16 @@ import org.apache.spark.sql.functions._
   * Algorithm: hash-min label propagation — every vertex starts with its
   * own id, each round adopts the min label in its closed neighborhood,
   * until a fixed point. Each round is one join + one groupBy (both
-  * shuffles on the vertex id); rounds needed = graph diameter, and the
-  * driver loop only orchestrates — all data stays distributed. This is
-  * the standard large-graph CC (GraphX/GraphFrames use the same
-  * fixpoint); at 100 TB you'd add large-star/small-star contraction to
-  * cut rounds on high-diameter graphs.
+  * shuffles on the vertex id), and the driver loop only orchestrates —
+  * all data stays distributed. This is the standard large-graph CC
+  * (GraphX/GraphFrames use the same fixpoint, in diameter-many rounds);
+  * a pointer jump per round cuts the rounds to O(log diameter).
   */
 object Components {
+
+  /** Round cap of [[connectedComponents]]: each round halves the label
+    * distance, so 30 rounds cover a diameter up to ~2^30. */
+  private val maxIter = 30
 
   /** CC labels for an undirected edge list (src, dst). Returns
     * (node, component) with component = min vertex id in the component.
@@ -26,25 +29,23 @@ object Components {
     * Convergence: each round is a neighbor-min pass PLUS a pointer-jump
     * (comp := label(comp)), so label distance halves per round —
     * O(log diameter) rounds, not O(diameter); a 10^6-node chain
-    * converges within the default cap. Non-convergence warns loudly. */
+    * converges within the cap. Non-convergence warns loudly. */
   private[graft] def connectedComponents(
-      edges: DataFrame, maxIter: Int = 30, nodeBoundHint: Long = -1L): DataFrame = {
+      edges: DataFrame, nodeBoundHint: Long = -1L): DataFrame = {
     // Pre-partition the (cached) edge list on the per-round join key:
     // every round joins sym on dst, so paying ONE extra exchange at
     // build time means each round shuffles only the label table
     // (node-sized) into sym's partitioning — the edge list (the big
     // side at 100 TB) never moves again.
-    // Symmetrize by exploding both directions from ONE pass over the
-    // input (the union-of-reversed-plan shape evaluates the upstream
-    // edge build — e.g. q47's LSN self-join — once per branch; exchange
-    // reuse cannot dedupe the two branches because their projections
-    // differ).
-    val sym0 = Release.cache(Graph.symmetrized(edges).distinct())
+    // The undirected set comes from the one pair builder: each pair is
+    // deduped once in canonical order, so only the E input rows cross
+    // that exchange, and mirrored map-side (self-loops kept, once).
+    val sym0 = Release.cache(Graph.undFrom(edges))
     // Round 0 fused into initialization: with identity starting labels,
     // the first neighbor-min pass is just min(dst) per src (and the
     // pointer jump is the identity), so labels₀ = least(node, min nbr)
     // falls out of ONE aggregation — no init-distinct shuffle, no
-    // round-0 joins. Every node appears as a src in sym (symmetrized),
+    // round-0 joins. Every node appears as a src in sym (mirrored),
     // so coverage is complete.
     var labels = Release.checkpoint(sym0.groupBy(col("src")).agg(min(col("dst")).as("mn"))
       .select(col("src").as("node"), least(col("src"), col("mn")).as("comp")))
@@ -118,99 +119,6 @@ object Components {
         s"[graft] connectedComponents: NOT converged after $maxIter rounds " +
           s"($changed labels still moving) — labels may be fragmented")
     labels
-  }
-
-  /** Alternative CC: large-star/small-star edge contraction (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond"). Same output
-    * contract as [[connectedComponents]] — (node, comp = component min)
-    * — proven equal by ComponentsSpec on random graphs.
-    *
-    * When to prefer which: hash-min + pointer jumping funnels EVERY
-    * member of a component through the current-min vertex's partition
-    * each round — on a 100 TB graph with a billion-node component that
-    * single reduce key is a straggler no matter how many executors you
-    * add. Contraction instead rewrites the EDGE SET each round (each
-    * node's work is bounded by its current neighborhood, which the
-    * star steps actively shrink), trading more shuffles per round for
-    * per-key load that stays balanced. Locally (small graphs, few
-    * rounds) hash-min wins on fixed overhead, so it stays the default;
-    * at extreme component sizes this is the skew-robust path.
-    *
-    * Each round: large-star connects every neighbor v > u to
-    * m = min(N(u) ∪ {u}); small-star (over the canonical big→small
-    * edges) connects every smaller neighbor and u itself to
-    * m = min(N<(u) ∪ {u}). Fixpoint = the edge set is exactly the star
-    * (node → component min); O(log²) rounds on any graph. */
-  private[graft] def connectedComponentsContract(
-      edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    // canonical big→small, self-loops dropped (they carry no
-    // connectivity); the small-star step relies on this orientation
-    var e = Release.checkpoint(edges
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct())
-    var eCount = e.count()
-    var done = eCount == 0
-    var i = 0
-    while (!done && i < maxIter) {
-      // large-star: m(u) over the SYMMETRIZED neighborhood; every
-      // neighbor larger than u hooks onto m(u). Output stays big→small
-      // (m(u) ≤ u < v), so the orientation invariant is preserved.
-      val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-      val mins = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-        .select(col("src").as("u"), least(col("src"), col("mn")).as("m"))
-      val ls = sym.join(mins, col("src") === col("u"))
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .distinct()
-      // small-star: on big→small edges N<(u) is exactly the dst side;
-      // every smaller neighbor and u itself hook onto m(u) = min(dst)
-      val smins = ls.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      // truncate lineage, materialize once
-      val next = Release.checkpoint(ls.join(smins, Seq("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionAll(smins.select(col("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .distinct())
-      val nextCount = next.count()
-      // fixpoint test: same count AND no new edges ⇒ identical sets
-      done = nextCount == eCount && next.exceptAll(e).isEmpty
-      e = next
-      eCount = nextCount
-      i += 1
-    }
-    if (!done && eCount > 0)
-      System.err.println(
-        s"[graft] connectedComponentsContract: NOT converged after $maxIter rounds")
-    // at fixpoint e IS the star: every non-root points at its component
-    // min, roots appear only on the dst side
-    e.select(col("src").as("node"), col("dst").as("comp"))
-      .unionAll(e.select(col("dst").as("node"), col("dst").as("comp")).distinct())
-  }
-
-  /** Strategy chooser. Hash-min + pointer-jump stays the default — its
-    * per-round cost is one join + one agg and it wins on every graph
-    * whose reduce keys fit a task (measured: SkewBench at 2·10⁵ edges,
-    * star/chain/hub-chain all favor hash-min locally; see SURVEY §7.18
-    * for numbers). Contraction takes over when the degree histogram
-    * shows a key that one reduce task cannot absorb: a vertex whose
-    * adjacency exceeds `hubDegreeLimit` (≈ rows beyond which a single
-    * groupBy key dominates a 128 MB-ish task) funnels its whole
-    * component through one partition every hash-min round, and no
-    * executor count fixes a single hot reducer — that is precisely the
-    * regime large-star/small-star keeps balanced. Max degree is the
-    * cheap observable proxy for the giant-component straggler: one
-    * map-side-combined aggregation over the edge list, paid once. */
-  private[graft] def connectedComponentsAuto(edges: DataFrame,
-      hubDegreeLimit: Long = 8L * 1000 * 1000, maxIter: Int = 30): DataFrame = {
-    val maxDeg = edges
-      .select(explode(array(col("src"), col("dst"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      .agg(coalesce(max(col("d")), lit(0L))) // empty edge list → 0, not a NULL NPE
-      .head().getLong(0)
-    if (maxDeg > hubDegreeLimit) connectedComponentsContract(edges, maxIter)
-    else connectedComponents(edges, maxIter)
   }
 
   /** q47: components of the ≥3-common-neighbor LSN graph (q21's output

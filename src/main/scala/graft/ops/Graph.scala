@@ -116,7 +116,7 @@ object Graph {
     * stage, so the symmetrized edge list needs ONE distinct shuffle and
     * never runs the upstream join twice. `keys` (q85's time slice,
     * q88's relation) ride through the explode unchanged. */
-  private[graft] def symmetrized(e: DataFrame, keys: Seq[String] = Nil): DataFrame =
+  private[graft] def symmetrized(e: DataFrame, keys: Seq[String]): DataFrame =
     e.select(keys.map(col) :+ explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"): _*)
@@ -149,10 +149,10 @@ object Graph {
     * exchange of the E raw rows, and the symmetric 2E′ set never crosses
     * one (a traced perfbench fraud_sf1 call shuffled 435,578 records,
     * against 797,485 when the mirrored set was deduped again). Shared
-    * by every unkeyed unweighted graph build; q80 keeps multiplicities
-    * for its weights, and the keyed q85/q88 builds stay on
-    * [[symmetrized]]: q85's dedup under hash(keys…, src) spares the
-    * three slice-keyed exchanges above it. */
+    * by every unkeyed unweighted graph build, connected components
+    * included; q80 keeps multiplicities for its weights, and the keyed
+    * q85/q88 builds stay on [[symmetrized]]: q85's dedup under
+    * hash(keys…, src) spares the three slice-keyed exchanges above it. */
   private[graft] def undFrom(e: DataFrame): DataFrame = mirrored(canonPairs(e))
 
   private val hotEdgesSql =

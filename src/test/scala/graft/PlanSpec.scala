@@ -18,11 +18,15 @@ class PlanSpec extends SparkSpec {
     // global (unpartitioned) window moving all data to one task. The two
     // allowed sites rank already-limit()-cut <=100-row top-k sets.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    // each query is built and inspected inside its own scope, so the
+    // caches and checkpoints its ops register go with it and no later
+    // plan test reads them
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
+      case (name, fn) => Release.scope {
         val plan = fn(spark, sf).queryExecution.optimizedPlan
         val global = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
         if (global.nonEmpty) Some(name) else None
+      }
     }
     assert(offenders.toSet == Set("q74_bm25", "q81_pmi_bigrams"),
       s"unexpected global-window queries: $offenders")

@@ -1046,8 +1046,9 @@ class StreamingSpec extends SparkSpec {
     // the full lambda loop: corpus vectors stream through
     // ivfUpdateStream (seeded with 8 raw corpus vectors — a deliberately
     // crude starting index), the refreshed per-cell means hand off to
-    // Ann.ivfProbe, and the probe must still clear the same recall gate
-    // the batch-trained q48 index is held to
+    // Ann.ivfProbe (the exact probe the frozen q48 table is oracled
+    // through), and the probe must still clear the same recall gate the
+    // batch-trained q48 index is held to
     implicit val sq = spark.sqlContext
     val corpus = Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
@@ -1062,10 +1063,11 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     val refreshed = spark.table("ivf_handoff").as[EventStream.CentroidOut]
       .collect().groupBy(_.cell)
-      .map { case (cell, outs) => cell -> outs.maxBy(_.n).centroid.map(_.toFloat) }
+      .map { case (cell, outs) => cell -> outs.maxBy(_.n).centroid }
     q.stop()
     // cells the stream never updated keep their seed centroid
-    val centroids = seeds.indices.map(i => (i, refreshed.getOrElse(i, seeds(i))))
+    val centroids = seeds.indices.map(i =>
+      (i, refreshed.getOrElse(i, seeds(i).map(_.toDouble))))
     val probe = ops.Ann.ivfProbe(spark, sf, centroids)
       .select("qid", "cid").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).toSet }
