@@ -43,6 +43,7 @@ object DualFit {
 
   private val eps = 0.3 // main.py:24 default; exact-decimal in serving
   private val gamma = 0.4 // main.py:27 joint-loss mix
+  private val epochs = 400 // the shipped q94 heads were fitted with 400
 
   /** Flat layout: clfW(2×10), clfB(2), t1W(2×10), t1B(2), t2W(2×2),
     * t2B(2) — 50 params. */
@@ -244,7 +245,7 @@ object DualFit {
   }
 
   private def run(spark: SparkSession, dir: String): Unit = {
-    val und = ops.Fused.q94Und(spark, dir)
+    val und = ops.Graph.purchaseUnd(spark, dir)
     val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val feat = ops.Fused.q94Feat(spark, dir, deg.select(col("n").as("node")), identity)
     val lab = Tables.customer(spark, dir).select(
@@ -276,7 +277,6 @@ object DualFit {
     println(s"[dualfit] ${rows.length} nodes, ${edges.length} directed edges, " +
       s"${d.train.count(identity)} train-fold labels, " +
       f"pos rate ${d.y.zip(d.train).collect { case (y, true) => y }.sum.toDouble / d.train.count(identity)}%.4f")
-    val epochs = sys.env.getOrElse("SPARK_GRAFT_DUAL_EPOCHS", "400").toInt
     val init = pack(ops.Fused.q94HeadsFixed)
     report("fixed heads", init, d)
     val p = fit(init, d, epochs)
@@ -298,6 +298,6 @@ object DualFit {
       |  <fitDir>  scale-factor directory to fit on (default
       |            $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.01)
       |  --help    print this and exit
-      |env: SPARK_GRAFT_CPUS (threads), SPARK_GRAFT_DUAL_EPOCHS (default 400)
-      |prints the dyadic-rounded q94 head tables""".stripMargin
+      |env: SPARK_GRAFT_CPUS (threads)
+      |""".stripMargin + s"fits $epochs epochs, then prints the dyadic-rounded q94 head tables"
 }

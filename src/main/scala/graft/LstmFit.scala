@@ -49,6 +49,7 @@ import ops.Exact.dyad
 object LstmFit {
 
   private val Gates = Array("i", "f", "g", "o")
+  private val epochs = 200 // the shipped cell tables were fitted with 200
 
   /** Flat parameter vector layout for H units:
     * [u][gate](wx, wh_0..wh_{H-1}, b) then readout wr_0..wr_{H-1}, br. */
@@ -252,7 +253,6 @@ object LstmFit {
     println(f"[lstmfit] ${data.length} train sequences, " +
       f"${xAll.length} steps, |x| mean ${xAll.map(math.abs).sum / xAll.length}%.4f " +
       f"max ${xAll.map(math.abs).max}%.4f, pos rate ${data.map(_._2).sum / data.length}%.4f")
-    val epochs = sys.env.getOrElse("SPARK_GRAFT_LSTM_EPOCHS", "200").toInt
 
     // Every shipped cell, smallest first. Both runs start from the
     // PRE-training FIXED table, not the shipped (already-trained) one:
@@ -283,6 +283,6 @@ object LstmFit {
       |  <fitDir>  scale-factor directory to fit on (default
       |            $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.01)
       |  --help    print this and exit
-      |env: SPARK_GRAFT_CPUS (threads), SPARK_GRAFT_LSTM_EPOCHS (default 200)
-      |prints dyadic-rounded LSTM cell tables for q90/q92""".stripMargin
+      |env: SPARK_GRAFT_CPUS (threads)
+      |""".stripMargin + s"fits $epochs epochs, then prints dyadic-rounded LSTM cell tables for q90/q92"
 }

@@ -79,9 +79,9 @@ object Corpus {
     * run actually ships to training: every document surviving the
     * language gate, quality gate, exact-dedup canonicalization and
     * near-dup survivor pass, with its source / token count / quality.
-    * [[graft.sources.Lake.writeCuratedLake]] persists this (and q62's
-    * packing plan) bucketed on doc_id so downstream per-doc joins are
-    * exchange-free. */
+    * [[graft.pipeline.CurationPipeline.run]] gates it further and
+    * persists the survivors (and their packing plan) bucketed on doc_id
+    * so downstream per-doc joins are exchange-free. */
   private[graft] def q57Kept(spark: SparkSession, dir: String): DataFrame = {
     // language + quality gates share ONE scan and ONE tokenization —
     // the same gate expressions q37/q38 are built from, projected

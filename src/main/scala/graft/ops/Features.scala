@@ -314,7 +314,7 @@ object Features {
     // MEMORY_AND_DISK spills rather than re-run the fact join) and
     // mirrored on read into q22's graph and q23's hot = 1 subgraph.
     val pairs = Release.cache(Graph.canonPairs(Graph.factBase(spark, dir)
-      .withColumn("hot", (col("l_quantity") >= 45).cast("int")), "hot"))
+      .withColumn("hot", (col("l_quantity") >= 45).cast("int")), Nil, max("hot").as("hot")))
     val nad = Graph.q22FromUnd(spark, dir, Graph.mirrored(pairs.select(col("a"), col("b"))))
       .select(col("node").as("user_id"), col("nbr_avg_deg"))
     val cc = Graph.q23FromUndKeyed(Graph.mirrored(pairs
@@ -572,16 +572,7 @@ object Features {
     val keys = Seq("scale", "bucket")
     val e0 = q85Edges(ev)
     val dg = Graph.q20DegreesKeyed(e0, keys)
-    // dedup via repartition(keys, src) + dropDuplicates instead of a
-    // plain distinct: same single exchange (hash(keys, src) colocates
-    // every (keys, src, dst) copy), but the partitioning then SATISFIES
-    // q23's cap window, its degree agg and the e2 side of the triangle
-    // join — three exchanges of the slice edge set gone. No new skew:
-    // the cap window already funnels each (keys, src) adjacency into
-    // one partition; this just establishes that distribution once.
-    val und = Release.cache(Graph.symmetrized(e0, keys)
-      .repartition(col("scale"), col("bucket"), col("src"))
-      .dropDuplicates())
+    val und = Release.cache(q85Und(e0))
     val nad = Graph.q22FromUndKeyed(und, keys)
       .select(col("scale"), col("bucket"), col("node"), col("nbr_avg_deg"))
     // triangle spelling by density (the footer gate above): pair join
@@ -804,6 +795,20 @@ object Features {
           .select(col("user_id"), col("day_idx"), col("peer")).distinct())
       .select(col("scale"), col("bucket"), col("user_id").as("src"), col("peer").as("dst"))
       .distinct())
+
+  /** The per-slice undirected call graph of [[q85Edges]]: symmetrized,
+    * then deduped by repartition(scale, bucket, src) + dropDuplicates
+    * instead of a plain distinct (or [[Graph.canonPairs]]): the same
+    * single exchange, since hash(keys, src) colocates every (keys, src,
+    * dst) copy, but the partitioning then SATISFIES q23's cap window,
+    * its degree agg and the e2 side of the triangle join — three
+    * exchanges of the slice edge set gone. No new skew: the cap window
+    * already funnels each (keys, src) adjacency into one partition;
+    * this just establishes that distribution once. */
+  private[graft] def q85Und(e0: DataFrame): DataFrame =
+    Graph.symmetrized(e0, Seq("scale", "bucket"))
+      .repartition(col("scale"), col("bucket"), col("src"))
+      .dropDuplicates()
 
   /** q87 feature-attention weights — TRAINED plan literals for the
     * reference MultiLstm's `feature_attn` (Code for Sichuan/src/

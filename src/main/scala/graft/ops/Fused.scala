@@ -126,12 +126,6 @@ object Fused {
   // q94: the fused BD_BGL score
   // -------------------------------------------------------------------
 
-  /** The symmetrized purchase graph — q66's edge build, shared here so
-    * [[graft.DualFit]] collects exactly the edges the served query
-    * propagates over. */
-  private[graft] def q94Und(spark: SparkSession, dir: String): DataFrame =
-    Graph.undFrom(Graph.edgesFrom(Graph.factBase(spark, dir)))
-
   /** The per-node input vector `final` (layers.py:57-59 concat):
     * f1..f8 = trained H=2 LSTM finals (q92) pivoted across the four
     * scales in reference concat order [week ‖ 2wk ‖ 3wk ‖ month], each
@@ -200,7 +194,7 @@ object Fused {
     * convention: a sort below a re-aggregating consumer is a wasted
     * exchange). */
   private[graft] def q94Core(spark: SparkSession, dir: String): DataFrame = {
-    val und = Release.cache(q94Und(spark, dir)) // degree agg + one message join per round
+    val und = Release.cache(Graph.purchaseUnd(spark, dir)) // degree agg + one message join per round
     // cached: di/dj/nodes rebuild per checkpointed round execution —
     // without this the full-edge degree agg reruns ~6× per query (the
     // gcnRounds/pagerankLoop lesson, OPTIMIZATION_r11.md)
@@ -348,7 +342,7 @@ object Fused {
     * sides/checkpoint discipline are gcnRounds'. */
   def q95DualChannelPropagate(spark: SparkSession, dir: String): DataFrame = {
     // degree agg + two message joins
-    val und = Release.cache(q94Und(spark, dir))
+    val und = Release.cache(Graph.purchaseUnd(spark, dir))
     // cached: di/dj/r1 rebuild per checkpointed round execution (the
     // gcnRounds/pagerankLoop lesson, OPTIMIZATION_r11.md)
     val deg = Release.cache(und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d")))

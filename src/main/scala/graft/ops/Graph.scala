@@ -27,8 +27,11 @@ import org.apache.spark.sql.expressions.Window
   * (unkeyed) operators call the keyed cores with `keys = Nil`; a
   * presentation `orderBy` appears only in the public `qNN` op.
   *  - [[factBase]]: the one `orders ⋈ lineitem` edge join;
-  *  - [[undFrom]] = [[mirrored]] over [[canonPairs]]: the undirected
-  *    pair set (the keyed q85/q88 builds use [[symmetrized]]);
+  *  - [[canonPairs]] then [[mirrored]]: every undirected pair set,
+  *    keyed (q88's `rel`) or weighted (q80) included; [[undFrom]] is
+  *    its unkeyed, unweighted case and [[purchaseUnd]] that over the
+  *    purchase graph (q85's slice-keyed dedup alone uses
+  *    [[symmetrized]]);
   *  - [[capPerKeys]]: the hub adjacency cap;
   *  - [[q20DegreesKeyed]]: the in/out degree core;
   *  - [[q23FromUndKeyed]]: the triangle/clustering core, in its
@@ -113,34 +116,44 @@ object Graph {
 
   /** Both edge directions from one scan: explode duplicates each
     * (keys…, src, dst) row into (src,dst) and (dst,src) inside the same
-    * stage, so the symmetrized edge list needs ONE distinct shuffle and
-    * never runs the upstream join twice. `keys` (q85's time slice,
-    * q88's relation) ride through the explode unchanged. */
+    * stage, and `keys` ride through unchanged. Its one production
+    * caller is [[Features.q85Und]], whose dedup under hash(keys…, src)
+    * spares the three slice-keyed exchanges above it; every other
+    * undirected build dedups canonical pairs first ([[canonPairs]]). */
   private[graft] def symmetrized(e: DataFrame, keys: Seq[String]): DataFrame =
     e.select(keys.map(col) :+ explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"): _*)
       .select(keys.map(col) :+ col("e.src") :+ col("e.dst"): _*)
 
-  /** Each unordered pair of the directed pairs `e` once, as (a, b) with
-    * a ≤ b, in ONE exchange keyed on the canonical pair; each `flags`
-    * column (q59's `hot`) is OR-ed over both directions as max(). The
-    * order is null-safe, NULL first: least/greatest skip NULLs and would
-    * fold (NULL, 5) into the self-loop (5, 5). */
-  private[graft] def canonPairs(e: DataFrame, flags: String*): DataFrame = {
+  /** Each unordered pair of the directed pairs `e` once per `keys`, as
+    * (keys…, a, b) with a ≤ b, in ONE exchange keyed on (keys…, a, b):
+    * a distinct with no `aggs`, else a group-by computing `aggs` over
+    * the rows of each pair in both directions (q59's `max(hot)` ORs a
+    * flag, q80 sums a line weight). `aggs` read `a`, `b` and any
+    * column of `e` but src/dst. This is the one dedup of every
+    * undirected build except q85's ([[symmetrized]]). The order is
+    * null-safe, NULL first: least/greatest skip NULLs and would fold
+    * (NULL, 5) into the self-loop (5, 5). */
+  private[graft] def canonPairs(e: DataFrame, keys: Seq[String], aggs: Column*): DataFrame = {
     val asIs = col("src").isNull || (col("dst").isNotNull && col("src") <= col("dst"))
-    val pairs = e.select(Seq(when(asIs, col("src")).otherwise(col("dst")).as("a"),
-      when(asIs, col("dst")).otherwise(col("src")).as("b")) ++ flags.map(col): _*)
-    val ors = flags.map(f => max(f).as(f))
-    if (ors.isEmpty) pairs.distinct() else pairs.groupBy("a", "b").agg(ors.head, ors.tail: _*)
+    val pairs = e.select(keys.map(col) ++ Seq(when(asIs, col("src")).otherwise(col("dst")).as("a"),
+      when(asIs, col("dst")).otherwise(col("src")).as("b")) ++
+      e.columns.diff(keys :+ "src" :+ "dst").map(col): _*)
+    val by = (keys :+ "a" :+ "b").map(col)
+    if (aggs.isEmpty) pairs.select(by: _*).distinct()
+    else pairs.groupBy(by: _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** (a, b) pairs mirrored map-side into (src, dst) = (a, b) and (b, a),
-    * a self-loop once. */
+    * a self-loop once; the other columns (keys, aggregates) ride
+    * through the explode on both rows. */
   private[graft] def mirrored(pairs: DataFrame): DataFrame = {
     def row(s: String, d: String) = struct(col(s).as("src"), col(d).as("dst"))
-    pairs.select(explode(when(col("a") <=> col("b"), array(row("a", "b")))
-      .otherwise(array(row("a", "b"), row("b", "a")))).as("e")).select("e.*")
+    val rest = pairs.columns.diff(Seq("a", "b")).map(col)
+    pairs.select(rest :+ explode(when(col("a") <=> col("b"), array(row("a", "b")))
+        .otherwise(array(row("a", "b"), row("b", "a")))).as("e"): _*)
+      .select(rest :+ col("e.*"): _*)
   }
 
   /** The distinct undirected pair set of the raw directed pairs `e`.
@@ -150,10 +163,17 @@ object Graph {
     * one (a traced perfbench fraud_sf1 call shuffled 435,578 records,
     * against 797,485 when the mirrored set was deduped again). Shared
     * by every unkeyed unweighted graph build, connected components
-    * included; q80 keeps multiplicities for its weights, and the keyed
-    * q85/q88 builds stay on [[symmetrized]]: q85's dedup under
-    * hash(keys…, src) spares the three slice-keyed exchanges above it. */
-  private[graft] def undFrom(e: DataFrame): DataFrame = mirrored(canonPairs(e))
+    * included; q80's weighted and q88's rel-keyed builds spell the same
+    * [[canonPairs]] → [[mirrored]] with their aggregate or key, and only
+    * q85's slice-keyed dedup stays on [[symmetrized]]. */
+  private[graft] def undFrom(e: DataFrame): DataFrame = mirrored(canonPairs(e, Nil))
+
+  /** The undirected purchase graph: [[undFrom]] over every fact row.
+    * One name for q22, q66/q67, q73, q75, q86, q94/q95 and the fit
+    * mains, so [[graft.DualFit]] collects exactly the edges the served
+    * queries propagate over. */
+  private[graft] def purchaseUnd(spark: SparkSession, dir: String): DataFrame =
+    undFrom(edgesFrom(factBase(spark, dir)))
 
   private val hotEdgesSql =
     """SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
@@ -396,7 +416,7 @@ object Graph {
     * neighbor-degree mean. Integer sum / count keeps the oracle exact. */
   def q22NeighborAvgDegree(spark: SparkSession, dir: String): DataFrame =
     // the cache feeds both the degree agg and the neighbor join
-    q22FromUnd(spark, dir, Release.cache(undFrom(edgesFrom(factBase(spark, dir)))))
+    q22FromUnd(spark, dir, Release.cache(purchaseUnd(spark, dir)))
       .orderBy(col("node"))
 
   /** q22 core over an ALREADY symmetrized+deduped (and cached) pair
@@ -418,7 +438,7 @@ object Graph {
     * (nx.clustering, data_process.py:147). Canonical a<b<c two-hop join
     * counts each triangle once; 2T/(d(d-1)) with integer-exact T, d. */
   def q23Triangles(spark: SparkSession, dir: String): DataFrame =
-    q23FromUndKeyed(Release.cache(mirrored(canonPairs(hotEdgesFrom(factBase(spark, dir)))
+    q23FromUndKeyed(Release.cache(mirrored(canonPairs(hotEdgesFrom(factBase(spark, dir)), Nil)
       .filter(col("a") =!= col("b")))), Nil)
       .orderBy(col("node"))
 
@@ -480,15 +500,18 @@ object Graph {
   /** DISTINCT relation-tagged directed edges — the three relation
     * graphs of the Amazon/Yelp pipelines (R-U-R/R-T-R/R-S-R,
     * new_utlis_1.py:36-50), stood in by the purchase edges sliced by
-    * order priority class. Shared by q45 (per-relation degrees) and
-    * q88 (per-relation propagation): one fact scan, one distinct. */
+    * order priority class: q45's per-relation degrees, one fact scan,
+    * one distinct. q88 dedups [[relTagged]] as canonical pairs instead. */
   private[ops] def relEdges(spark: SparkSession, dir: String): DataFrame =
+    relTagged(spark, dir).distinct()
+
+  /** The relation-tagged fact rows (src, dst, rel), one per line. */
+  private def relTagged(spark: SparkSession, dir: String): DataFrame =
     factBase(spark, dir)
       .select(col("src"), col("dst"),
         when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
           .when(col("o_orderpriority") === "3-MEDIUM", 2)
           .otherwise(3).as("rel"))
-      .distinct()
 
   private val relEdgesSql =
     """SELECT DISTINCT o_custkey AS src, l_suppkey AS dst,
@@ -765,7 +788,7 @@ object Graph {
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // degree agg + one message join per round
-    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
+    val und = Release.cache(purchaseUnd(spark, dir))
     // deg is re-executed once PER di/dj broadcast build PER round
     // execution (broadcast-exchange reuse only holds within one query
     // execution, and every round's eager checkpoint is its own
@@ -839,8 +862,8 @@ object Graph {
     * ε·h is exact (dyadic × integer); one double add per relation, then
     * 6dp quantization — bit-identical in DuckDB's chained-CTE twin.
     *
-    * Scale: ONE fact scan → distinct (rel,src,dst) → per-relation
-    * symmetrize+dedup; the three relation graphs stay in ONE edge
+    * Scale: ONE fact scan → one canonical (rel, a, b) dedup, mirrored
+    * map-side; the three relation graphs stay in ONE edge
     * DataFrame tagged by `rel`, so all three SpMVs ride a single
     * message shuffle (groupBy(node) with per-relation conditional
     * sums) instead of three passes; the rel-keyed degree sides are
@@ -853,10 +876,9 @@ object Graph {
     * tier joins this straight into the feature matrix, where the sort
     * would be a wasted exchange (the q85Core convention). */
   private[graft] def q88Core(spark: SparkSession, dir: String): DataFrame = {
-    // dedup-first (undFrom's discipline, keyed by rel): distinct
-    // directed triples, THEN symmetrize and re-dedup the doubled set
-    // degree agg + message join
-    val und = Release.cache(symmetrized(relEdges(spark, dir), Seq("rel")).distinct())
+    // each relation's undirected pair set, deduped once as canonical
+    // (rel, a, b) pairs; cached for the degree agg + message join
+    val und = Release.cache(mirrored(canonPairs(relTagged(spark, dir), Seq("rel"))))
     // di + dj + h0 all derive from it
     val deg = Release.cache(und.groupBy(col("rel"), col("src").as("n"))
       .agg(count(lit(1)).as("d")))
@@ -945,7 +967,7 @@ object Graph {
     * co-partitioned join + one map-side-combined aggregation. */
   def q86AttentionPropagate(spark: SparkSession, dir: String): DataFrame = {
     // degree agg + the message join
-    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
+    val und = Release.cache(purchaseUnd(spark, dir))
     val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val gated = nodeGate(spark, dir)
     val di = gated(deg.select(col("n").as("src"), col("d").as("di")))
@@ -1015,7 +1037,7 @@ object Graph {
     * map-side-combined aggregation. */
   def q73PageRank(spark: SparkSession, dir: String): DataFrame = {
     // normalizer agg + one message join per round
-    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
+    val und = Release.cache(purchaseUnd(spark, dir))
     // uniform transitions: w ≡ 1, so Σw per src is the plain degree and
     // prs·1/d is bit-identical to the oracle's rs/d (·1.0 is IEEE-exact)
     pagerankLoop(und.withColumn("w", lit(1L)), nodeGate(spark, dir))
@@ -1029,19 +1051,17 @@ object Graph {
     * ring member with few heavy ones; same power iteration, message
     * rs·w/Σw in the identical IEEE op order both engines. */
   def q80WeightedPagerank(spark: SparkSession, dir: String): DataFrame = {
-    // dedup-first like [[undFrom]], carrying the multiplicity: count
-    // the E directed pairs down to E′ weighted rows, then symmetrize
-    // and SUM the doubled copy — w(a,b) = cnt(a→b) + cnt(b→a) exactly
-    // as the one-pass count over the symmetrized raw stream produced
-    val adj = Release.cache(edgesFrom(factBase(spark, dir))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      .select(explode(array(
-        struct(col("src"), col("dst"), col("w")),
-        struct(col("dst").as("src"), col("src").as("dst"), col("w")))).as("e"))
-      .select(col("e.src"), col("e.dst"), col("e.w"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
+    val adj = Release.cache(q80Adj(edgesFrom(factBase(spark, dir))))
     pagerankLoop(adj, nodeGate(spark, dir)).orderBy(col("node"))
   }
+
+  /** q80's symmetric weighted adjacency (src, dst, w) of the raw
+    * directed pairs `e`: each unordered pair deduped once (undFrom's
+    * build), weighted by its rows in both directions, w(a,b) =
+    * cnt(a→b) + cnt(b→a). A self-loop's rows count twice, w = 2c, as
+    * in the oracle's UNION ALL symmetrization. */
+  private[graft] def q80Adj(e: DataFrame): DataFrame =
+    mirrored(canonPairs(e, Nil, sum(when(col("a") <=> col("b"), 2).otherwise(1)).as("w")))
 
   /** Per-edge fit base for the FALayer gate's training seam
     * ([[graft.AttnFit]]): undirected purchase-graph edges with both
@@ -1055,7 +1075,7 @@ object Graph {
     * split — the inference literals must never see held-out labels). */
   private[graft] def q86GateFitBase(spark: SparkSession, dir: String): DataFrame = {
     // degree agg + the edge join
-    val und = Release.cache(undFrom(edgesFrom(factBase(spark, dir))))
+    val und = Release.cache(purchaseUnd(spark, dir))
     val deg = und.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val lab = Tables.customer(spark, dir).select(col("c_custkey").as("n"),
         (col("c_acctbal") < 0).cast("int").as("clab"))
@@ -1159,7 +1179,7 @@ object Graph {
     * previous round's is dropped, and the fixpoint early-exit stops
     * paying for rounds the data doesn't need. */
   def q75KCore(spark: SparkSession, dir: String): DataFrame = {
-    val und = undFrom(edgesFrom(factBase(spark, dir)))
+    val und = purchaseUnd(spark, dir)
     // survivor lists are node-bounded: the footer bound makes every
     // per-round broadcast gate job-free (the CC-gate lesson — the old
     // per-round keep.count() was one extra job per peel round)

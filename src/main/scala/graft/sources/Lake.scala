@@ -42,25 +42,4 @@ object Lake {
   def colocatedJoin(spark: SparkSession, leftTable: String,
       rightTable: String, key: String): DataFrame =
     spark.table(leftTable).join(spark.table(rightTable), key)
-
-  /** Persist a curation run's shipped artifacts as ONE bucketed, sorted
-    * lake: the q57 keep-list (the docs that survived every gate), the
-    * q62 packing plan (each doc's chunk span in the training stream)
-    * and the documents table itself, all bucketed on doc_id with the
-    * same bucket count. Every downstream per-doc join — keep-list ⋈
-    * documents to fetch kept text, chunk plan ⋈ documents to feed the
-    * data loader, keep-list ⋈ chunk plan to re-cut after a re-curation
-    * — is then exchange-free: the doc_id shuffle is paid once here at
-    * write time, not once per consumer (at 100 TB the re-shuffle per
-    * consumer IS the dominant recurring cost). LakeSpec pins the
-    * exchange-free plans. */
-  def writeCuratedLake(spark: SparkSession, dir: String, buckets: Int,
-      prefix: String = "curated"): Unit = {
-    writeBucketed(graft.ops.Corpus.q57Kept(spark, dir),
-      s"${prefix}_keeplist", "doc_id", buckets, Seq("doc_id"))
-    writeBucketed(graft.ops.Corpus.q62PackChunks(spark, dir),
-      s"${prefix}_chunks", "doc_id", buckets, Seq("doc_id"))
-    writeBucketed(graft.Tables.documents(spark, dir),
-      s"${prefix}_documents", "doc_id", buckets, Seq("doc_id"))
-  }
 }

@@ -18,7 +18,12 @@ class LakeSpec extends SparkSpec {
 
   test("curated lake: keep-list and chunk plan join documents exchange-free") {
     scrub("curated_keeplist", "curated_chunks", "curated_documents")
-    sources.Lake.writeCuratedLake(spark, sf, buckets = 8)
+    // the keep-list and chunk plan a curation run ships, beside the
+    // documents bucketed the same way
+    val nFinal = pipeline.CurationPipeline.run(spark, sf, buckets = 8, lakePrefix = "curated")
+      .stats.head().getAs[Long]("n_final")
+    sources.Lake.writeBucketed(Tables.documents(spark, sf), "curated_documents",
+      "doc_id", 8, Seq("doc_id"))
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -34,10 +39,10 @@ class LakeSpec extends SparkSpec {
         assert(plan.contains("Bucketed: true"), s"$l ⋈ $r:\n$plan")
         assert(!plan.contains("Exchange hashpartitioning"), s"$l ⋈ $r:\n$plan")
       }
-      // grain: the chunk plan covers every document exactly once, the
+      // grain: the chunk plan covers every survivor exactly once, the
       // keep-list joins back to exactly its own documents
       assert(sources.Lake.colocatedJoin(spark,
-        "curated_chunks", "curated_documents", "doc_id").count() == nDocs)
+        "curated_chunks", "curated_documents", "doc_id").count() == nFinal)
       assert(sources.Lake.colocatedJoin(spark,
         "curated_keeplist", "curated_documents", "doc_id").count() == nKept)
     } finally {

@@ -50,15 +50,16 @@ class PropertySpec extends SparkSpec {
     // canonical-pair dedup + map-side mirror on multigraphs with
     // self-loops, reverse duplicates and NULL endpoints: a NULL sorts
     // first, so (NULL, 5) stays apart from the self-loop (5, 5), and
-    // (NULL, NULL) is one self-loop row
+    // (NULL, NULL) is one self-loop row. The same pairs also carry a
+    // flag (q59), a line weight (q80) and a relation key (q88)
     val rnd = new Random(13)
     def node(): Option[Long] = if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(12).toLong)
     def pair(r: org.apache.spark.sql.Row): (Option[Long], Option[Long]) =
       (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long]))
     for (_ <- 1 to 5) {
-      val edges = Seq.fill(300)((node(), node(), rnd.nextInt(5) == 0))
-      val expected = edges.flatMap { case (a, b, _) => Seq((a, b), (b, a)) }.toSet
-      val df = edges.toDF("src", "dst", "hot").withColumn("hot", col("hot").cast("int"))
+      val edges = Seq.fill(300)((node(), node(), rnd.nextInt(5) == 0, 1 + rnd.nextInt(3)))
+      val expected = edges.flatMap { case (a, b, _, _) => Seq((a, b), (b, a)) }.toSet
+      val df = edges.toDF("src", "dst", "hot", "rel").withColumn("hot", col("hot").cast("int"))
       val got = ops.Graph.undFrom(df.select("src", "dst")).collect().map(pair)
       assert(got.length == expected.size)
       assert(got.toSet == expected)
@@ -68,11 +69,27 @@ class PropertySpec extends SparkSpec {
         case (Some(_), None) => p.swap
         case _ => p
       }
-      val flagged = ops.Graph.canonPairs(df, "hot").collect().map(r => pair(r) -> r.getInt(2))
-      val hot = edges.groupBy { case (a, b, _) => canon((a, b)) }
+      val flagged = ops.Graph.canonPairs(df, Nil, max("hot").as("hot")).collect()
+        .map(r => pair(r) -> r.getInt(2))
+      val hot = edges.groupBy { case (a, b, _, _) => canon((a, b)) }
         .map { case (p, rows) => p -> (if (rows.exists(_._3)) 1 else 0) }
       assert(flagged.length == hot.size)
       assert(flagged.toMap == hot)
+      // q80's weight: w(a,b) = c(a→b) + c(b→a) on both mirrored rows,
+      // so a self-loop (NULL's included) reads 2c
+      val dirCount = edges.groupBy(e => (e._1, e._2)).map { case (p, rows) => p -> rows.size }
+      def c(p: (Option[Long], Option[Long])) = dirCount.getOrElse(p, 0)
+      val weighted = ops.Graph.q80Adj(df).select("src", "dst", "w")
+        .collect().map(r => pair(r) -> r.getLong(2))
+      assert(weighted.length == expected.size)
+      assert(weighted.toMap == expected.map(p => p -> (c(p) + c(p.swap)).toLong).toMap)
+      // a rel key: each relation's pair set equals its symmetrized
+      // distinct set, NULL endpoints kept
+      val keyed = ops.Graph.mirrored(ops.Graph.canonPairs(df, Seq("rel")))
+        .select("src", "dst", "rel").collect().map(r => r.getInt(2) -> pair(r))
+      val perRel = edges.flatMap { case (a, b, _, r) => Seq(r -> (a, b), r -> (b, a)) }.toSet
+      assert(keyed.length == perRel.size)
+      assert(keyed.toSet == perRel)
     }
   }
 

@@ -11,7 +11,7 @@ class FusedSpec extends SparkSpec {
 
   test("q94: readouts are proper (log-)probabilities over the graph domain") {
     val out = Fused.q94BdbglScore(spark, sf).collect()
-    val nodes = Fused.q94Und(spark, sf).select(col("src")).distinct().count()
+    val nodes = Graph.purchaseUnd(spark, sf).select(col("src")).distinct().count()
     assert(out.length == nodes, s"${out.length} rows != $nodes graph nodes")
     out.foreach { r =>
       val s = r.getAs[Double]("lstm_score")

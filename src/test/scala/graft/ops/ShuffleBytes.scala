@@ -56,11 +56,10 @@ object ShuffleBytes {
       part("e0")(Features.q85Edges(evBase))
       part("e0+deg")(Graph.q20DegreesKeyed(Features.q85Edges(evBase), keys))
       part("e0+und+nad") {
-        val und = Graph.symmetrized(Features.q85Edges(evBase), keys).distinct()
-        Graph.q22FromUndKeyed(und, keys)
+        Graph.q22FromUndKeyed(Features.q85Und(Features.q85Edges(evBase)), keys)
       }
       part("e0+und+cc") {
-        val und = Graph.symmetrized(Features.q85Edges(evBase), keys).distinct()
+        val und = Features.q85Und(Features.q85Edges(evBase))
         Graph.q23FromUndKeyed(und.filter(col("src") =!= col("dst")), keys)
       }
       spark.stop(); return

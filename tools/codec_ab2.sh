@@ -11,6 +11,8 @@
 #   C  zstd bufferSize=128k     (middle point)
 #   D  zstd bufferPool off      (is the pool helping or hurting here?)
 #   E  lz4                      (the reference point codec_ab measured)
+# Rows A and E alone are the BENCH_SKEW codec_ab protocol (zstd default
+# against lz4, same key list, same passes).
 # Protocol: min-of-3 per query per config (graft.Bench), two
 # interleaved passes per config = effective min-of-6 with shared VM
 # weather; stderr per run logged, crashes print FAILED.
